@@ -6,7 +6,8 @@
 Runs from the root of a source checkout, builds nothing, and reads and
 writes only inside the checkout (``.bench_work/`` while running, removed
 at exit; ``.bench_out/`` keeps span dumps). The session is
-``local[nproc]`` with ``nproc`` shuffle partitions and a fixed 2 GB driver heap.
+``local[nproc / 2]`` with as many shuffle partitions (see ``start_session``)
+and a fixed 2 GB driver heap.
 
 The last line of standard output is one JSON object with ``correct``,
 ``attempted``, ``failed`` and ``metrics``: the end-to-end metrics with
@@ -17,20 +18,25 @@ reports every metric of its kind; a layer the workload never calls reads
 End-to-end, per workload (an *operation* is one featurize run or one
 upsert round; ``workloads`` describes both):
 
-- ``setup_s``: session start + median of three input commits + warm-up.
+- ``setup_s``: session start + median of three input commits + two
+  warm-up operations.
 - ``rows_per_s``: images (featurize), or merged rows plus point-in-time
-  probes (upsert), per second of operation time in the window.
+  probes (upsert), per second of wall time of the window's fastest
+  operation (featurize) or two consecutive rounds, one of which compacts
+  (upsert).
 - ``commit_s_min``: the fastest time in the window of an operation up to
   its commit (``build_features`` + ``write_resumable``; ``merge_into``).
 - ``read_s_min``: the fastest read-after-write in the window.
 
-The two latencies take the fastest of the window's three or four
-operations, not the median: on a shared 4-vCPU host, interference slows
-single operations by up to half, and the minimum of a few operations
-repeats across runs several times more closely than their median.
+All three take the best of the window, not the median: on a shared
+4-vCPU host, interference slows single operations by up to half, and the
+best of a few operations repeats across runs several times more closely
+than their median.
 - ``peak_rss_mb``: peak resident memory of the process tree (driver JVM,
-  Python driver and Python workers), sampled every 0.2 s and counted as
-  PSS, so pages that forked Python workers share count once.
+  Python driver and Python workers), sampled every 0.2 s. The Python
+  workers and the daemon they fork from count as PSS, so pages they share
+  count once; the driver process and the JVM count as RSS (see
+  ``spans._tree_kb``).
 - ``space_amp``: bytes under the table directory / bytes of the current
   snapshot's data files; for upsert after round 4, before expiry.
 - ``write_amp``: bytes written by commits / on-disk bytes of the rows they
@@ -115,9 +121,16 @@ def scales(width: int):
 
 
 def start_session(work: Path, trace: bool):
-    """The engine's ``get_spark`` pinned to ``local[nproc]``, with every
-    scratch location (package zip, spill, temp, event log) under ``work``."""
-    cpus = len(os.sched_getaffinity(0))
+    """The engine's ``get_spark`` pinned to ``local[nproc / 2]`` (and as
+    many shuffle partitions), with every scratch location (package zip,
+    spill, temp, event log) under ``work``.
+
+    Every task of a Python UDF keeps two threads busy, the JVM's and its
+    Python worker's, so ``nproc / 2`` tasks fill the machine without
+    queueing; the driver thread, the JIT and the collector find a free
+    core. At ``local[nproc]`` on a 4-vCPU VM the fastest featurize commit
+    of a run spread about five times wider across runs."""
+    cpus = max(1, len(os.sched_getaffinity(0)) // 2)
     tmp = work / "tmp"
     tmp.mkdir(parents=True)
     os.environ.update(
@@ -131,10 +144,13 @@ def start_session(work: Path, trace: bool):
         "spark.local.dir": str(tmp),
         "spark.sql.warehouse.dir": str(work / "warehouse"),
         # a fixed, pre-touched heap: the JVM's share of peak RSS does not
-        # depend on when the collector chose to grow the heap
+        # depend on when the collector chose to grow the heap. JIT
+        # thresholds at a fifth: the driver's planning code is compiled
+        # sooner, so less of the speed-up from compiling it falls into the
+        # timed window
         "spark.driver.extraJavaOptions": (
             f"-Xms{DRIVER_MEM} -XX:+AlwaysPreTouch -Djava.io.tmpdir={tmp} "
-            "-XX:-UsePerfData"
+            "-XX:-UsePerfData -XX:CompileThresholdScaling=0.2"
         ),
         "spark.ui.showConsoleProgress": "false",
     }

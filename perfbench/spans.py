@@ -120,6 +120,18 @@ def tree_pids(root: int) -> list[int]:
     return out
 
 
+_PAGE_KB = os.sysconf("SC_PAGE_SIZE") // 1024
+
+
+def _rss_kb(pid: int) -> int:
+    """Resident set size from ``statm``: a counter read, no page walk."""
+    try:
+        with open(f"/proc/{pid}/statm") as f:
+            return int(f.read().split()[1]) * _PAGE_KB
+    except OSError:
+        return 0  # the process exited
+
+
 def _pss_kb(pid: int) -> int:
     """Proportional set size: resident pages, each shared page divided
     among the processes that map it (forked Python workers share most of
@@ -134,13 +146,46 @@ def _pss_kb(pid: int) -> int:
     return 0
 
 
-def _tree_pss_kb(root: int) -> int:
-    return _pss_kb(root) + sum(_pss_kb(p) for p in tree_pids(root))
+def _comm(pid: int) -> str:
+    try:
+        with open(f"/proc/{pid}/comm") as f:
+            return f.read().strip()
+    except OSError:
+        return ""  # the process exited
+
+
+def _tree_kb(root: int) -> int:
+    """Resident memory of ``root`` and its descendants. ``root`` and the
+    JVM it launched (its child) count their RSS: they share no pages with
+    the rest, and ``smaps_rollup`` would walk the page tables of the JVM's
+    whole heap under its memory-map lock, tens of milliseconds per sample
+    that stall the JVM being measured. The JVM's Python descendants (the
+    daemon and the workers it forks) count their PSS, so pages they share
+    count once. Its other descendants are short-lived helpers: until one
+    execs, it shares the JVM's memory, so it counts nothing."""
+    children = _children()
+    total = _rss_kb(root)
+    for jvm in children.get(root, []):
+        total += _rss_kb(jvm)
+        todo = list(children.get(jvm, []))
+        while todo:
+            pid = todo.pop()
+            todo.extend(children.get(pid, []))
+            if _comm(pid).startswith("python"):
+                total += _pss_kb(pid)
+    return total
+
+
+def cpu_steal() -> tuple[int, int]:
+    """(steal, total) CPU jiffies of the machine since boot."""
+    with open("/proc/stat") as f:
+        vals = [int(v) for v in f.readline().split()[1:]]
+    return vals[7], sum(vals[:8])
 
 
 class RssSampler:
-    """Background thread sampling the resident memory (PSS) of this
-    process tree (driver JVM, Python driver, Python workers) every
+    """Background thread sampling the resident memory of this process tree
+    (driver JVM, Python driver, Python workers; see ``_tree_kb``) every
     ``period`` seconds."""
 
     def __init__(self, period: float = 0.2):
@@ -152,7 +197,7 @@ class RssSampler:
     def _run(self) -> None:
         me = os.getpid()
         while not self._stop.is_set():
-            self.peak_kb = max(self.peak_kb, _tree_pss_kb(me))
+            self.peak_kb = max(self.peak_kb, _tree_kb(me))
             self._stop.wait(self.period)
 
     def __enter__(self) -> "RssSampler":

@@ -66,6 +66,21 @@ def test_self_time_of_hand_built_tree():
     assert st["d"] == pytest.approx(1)
 
 
+def test_best_of_window_figures():
+    import workloads
+
+    def op(rows, commit, read, extra=0.0):
+        return {"rows": rows, "commit": commit, "read": read,
+                "wall": commit + read + extra}
+
+    # runs of two: (a, b) take 6 s for 20 rows, (b, c) 6 s, (c, d) 5 s
+    ops = [op(10, 1.0, 1.0), op(10, 2.0, 1.0, extra=1.0),
+           op(10, 1.5, 0.5), op(10, 0.5, 2.5)]
+    m = workloads.summarize(ops, cycle=2)
+    assert m == {"rows_per_s": 4.0, "commit_s_min": 0.5, "read_s_min": 0.5}
+    assert workloads.summarize(ops)["rows_per_s"] == 5.0
+
+
 def test_benchmark_json_matches_the_metrics_printed():
     spec = json.loads((ROOT / "BENCHMARK.json").read_text())
     assert [w["name"] for w in spec["workloads"]] == list(run.WORKLOADS)

@@ -1,7 +1,7 @@
 """The workloads: ``featurize`` and ``upsert``.
 
 Load model: a closed loop with one client. One operation runs at a time
-on one ``local[nproc]`` session; the next starts when it ends. Every timed
+on one ``local[nproc / 2]`` session; the next starts when it ends. Every timed
 action runs to a full sink (the engine's own writer, or the ``noop``
 format), never ``count()``, which Catalyst prunes.
 
@@ -35,11 +35,11 @@ import numpy as np
 import pandas as pd
 
 import gen
-from spans import Tracer
+from spans import Tracer, cpu_steal
 
 CHECKPOINT_BUCKETS = 16  # jobs/run_pipeline.py --buckets default
 COMMIT_REPEATS = 3  # input commits per set-up; the median counts
-WARMUP_OPS = 1
+WARMUP_OPS = 2  # the JIT is still speeding operations up after one
 UPSERT_AMP_ROUNDS = 4  # space/write amplification are taken after this round
 COMPACT_EVERY = 2  # upsert rounds per compaction
 
@@ -128,12 +128,16 @@ def run_window(ctx: Ctx, op, min_ops: int = 1) -> list[dict]:
     """Call ``op(i)`` until the summed ``wall`` of its results reaches
     ``ctx.seconds`` and at least ``min_ops`` ran."""
     out, busy = [], 0.0
+    steal0, total0 = cpu_steal()
     while busy < ctx.seconds or len(out) < min_ops:
         r = op(len(out))
         out.append(r)
         busy += r["wall"]
         ctx.log(f"operation {len(out)}: commit {r['commit']:.3f} s, "
                 f"read {r['read']:.3f} s, wall {r['wall']:.3f} s")
+    steal1, total1 = cpu_steal()
+    ctx.log(f"CPU time stolen by the host in the window: "
+            f"{(steal1 - steal0) / max(total1 - total0, 1):.1%}")
     return out
 
 
@@ -170,9 +174,16 @@ def mean(ops: list[dict], key: str) -> float:
     return statistics.mean(o[key] for o in ops)
 
 
-def summarize(ops: list[dict]) -> dict:
+def summarize(ops: list[dict], cycle: int = 1) -> dict:
+    """Best-of-window figures: the fastest run of ``cycle`` consecutive
+    operations (any such run holds every kind of operation the workload
+    does), the fastest commit and the fastest read. A slow operation
+    moves none of them; a slower program moves them all."""
+    cycles = [ops[i:i + cycle] for i in range(len(ops) - cycle + 1)]
     return {
-        "rows_per_s": sum(o["rows"] for o in ops) / sum(o["wall"] for o in ops),
+        "rows_per_s": max(
+            sum(o["rows"] for o in c) / sum(o["wall"] for o in c) for c in cycles
+        ),
         "commit_s_min": min(o["commit"] for o in ops),
         "read_s_min": min(o["read"] for o in ops),
     }
@@ -525,7 +536,7 @@ def upsert(ctx: Ctx) -> dict:
     warm_s = time.perf_counter() - t_warm
     ctx.log("set-up done")
     w0 = time.time()
-    ops = run_window(ctx, op, min_ops=UPSERT_AMP_ROUNDS - WARMUP_OPS)
+    ops = run_window(ctx, op, min_ops=max(UPSERT_AMP_ROUNDS - WARMUP_OPS, COMPACT_EVERY))
     w1 = time.time()
     ctx.log(f"window done: {len(ops)} operations")
     with ctx.operation():
@@ -539,7 +550,7 @@ def upsert(ctx: Ctx) -> dict:
             _, expire = timed(expire_snapshots, table)
         n_now = read_table(spark, table).count()
         ctx.check(n_now == n_base + model.inserts, "rows changed by expire")
-    m = summarize(ops) | {
+    m = summarize(ops, COMPACT_EVERY) | {
         "setup_s": commit_s + warm_s,
         "space_amp": space_amp,
         "write_amp": write_amp,
