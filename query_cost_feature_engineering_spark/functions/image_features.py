@@ -366,8 +366,8 @@ def with_curation_stats(
 ) -> DataFrame:
     """Append the fused gate columns; map-only, payload dropped.
     ``on_error='null'`` adds a ``decode_ok`` flag; corrupt rows carry
-    NULL lap_var (never sharp, never a dedup winner) instead of
-    failing the job."""
+    NULL in every gate column (never sharp, never in a pHash dedup
+    cluster) instead of failing the job."""
     udf = _curation_udf if on_error == "fail" else _curation_tolerant_udf
     df = df.withColumn("_cu", udf(F.col(bytes_col), F.col("fmt")))
     out = df.withColumns(
@@ -377,7 +377,7 @@ def with_curation_stats(
         # the UDF's NaN sentinel arrives as NULL (Arrow's from_pandas
         # NaN->null semantics), so test nullness, not isnan
         ok = F.col("lap_var").isNotNull() & ~F.isnan("lap_var")
-        out = out.withColumn("decode_ok", ok).withColumn(
-            "lap_var", F.when(F.col("decode_ok"), F.col("lap_var"))
+        out = out.withColumn("decode_ok", ok).withColumns(
+            {c: F.when(F.col("decode_ok"), F.col(c)) for c in CURATION_COLS}
         )
     return out

@@ -1,5 +1,4 @@
 from query_cost_feature_engineering_spark.operators.asof import (  # noqa: F401
-    asof_join,
     asof_join_pandas_merge,
     asof_join_union_window,
 )

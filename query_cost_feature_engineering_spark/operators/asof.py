@@ -34,33 +34,34 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from query_cost_feature_engineering_spark.runtime.statcache import (
-    plan_fingerprint,
-)
-
 _SLICES = 32  # time slices for hot entities
+# the automatic hot threshold never drops below this many right rows
+_HOT_FLOOR = 10_000
 # beyond this many hot ids, membership tests use a broadcast join
 # instead of `isin` literals (plan size stays O(1) in hot-key count)
 _HOT_LITERAL_CAP = 1000
 
 
-def _filter_hot_membership(spark, df, key, hot_ids, key_type):
-    """Keep rows whose ``key`` is in ``hot_ids`` — literals under
-    ``_HOT_LITERAL_CAP``, broadcast left-semi join above it."""
-    hot_sorted = sorted(hot_ids)
-    if len(hot_sorted) <= _HOT_LITERAL_CAP:
-        return df.filter(F.col(key).isin(hot_sorted))
-    hot_df = spark.createDataFrame(
-        [(k,) for k in hot_sorted],
-        T.StructType([T.StructField("_hot_key", key_type)]),
+def _mark_hot(df: DataFrame, key: str, hot_ids: list, key_type) -> DataFrame:
+    """``df`` plus a boolean ``_hot``: is ``key`` one of ``hot_ids``.
+    Literals up to ``_HOT_LITERAL_CAP``; above it a broadcast left join
+    against a hot-key frame, so the plan stays small for 10^4+ hot ids."""
+    if len(hot_ids) <= _HOT_LITERAL_CAP:
+        return df.withColumn("_hot", F.col(key).isin(hot_ids))
+    hot_df = df.sparkSession.createDataFrame(
+        [(k, True) for k in hot_ids],
+        T.StructType(
+            [
+                T.StructField("_hot_key", key_type),
+                T.StructField("_hot_flag", T.BooleanType()),
+            ]
+        ),
     )
-    return df.join(
-        F.broadcast(hot_df), F.col(key) == F.col("_hot_key"), "left_semi"
+    return (
+        df.join(F.broadcast(hot_df), F.col(key) == F.col("_hot_key"), "left")
+        .withColumn("_hot", F.col("_hot_flag").isNotNull())
+        .drop("_hot_key", "_hot_flag")
     )
-
-# (plan semanticHash, keys, params) -> (hot_ids, cuts); see the
-# skew-profile cache note in asof_join_pandas_merge. Bounded FIFO.
-_SKEW_PROFILE_CACHE: dict = {}
 
 
 def asof_join_union_window(
@@ -146,136 +147,53 @@ def asof_join_pandas_merge(
     rby, ron = f"{rpre}{by}", f"{rpre}{on}"
     rtb = f"{rpre}{tiebreak}" if tiebreak else None
 
-    # --- skew detection: entities above threshold get time-sliced ---------
-    # Detection runs on a key-only projection: Catalyst column-prunes the
-    # upstream plan, so expensive feature UDFs (image decode) are NOT
-    # evaluated for these statistics passes — only the final merge pays.
-    # ONE scan of the right keys feeds everything: the per-entity counts
-    # (persisted — #entities rows, orders of magnitude smaller than the
-    # table) answer both the auto-threshold total and the hot-id filter,
-    # and the slice cut points come from the hot entities' per-(entity,
-    # slice-grain) timestamps rather than a second full key scan.
-    # Callers on a measured path can pass ``hot_threshold`` to skip the
-    # auto-threshold aggregate entirely.
-    from pyspark import StorageLevel
-
+    # --- skew profile: entities above threshold get time-sliced ----------
+    # Both statistics passes run on a key-only projection, so Catalyst
+    # column-prunes the upstream plan and expensive feature UDFs (image
+    # decode) are NOT evaluated here — only the final merge pays. One
+    # action returns the total row count and the (key, count) pairs above
+    # the floor; the driver applies the threshold rule to them.
     def _ts_double(df: DataFrame, col: str) -> F.Column:
         t = df.schema[col].dataType.typeName()
         c = F.col(col)
         return c.cast("timestamp").cast("double") if t.startswith("timestamp") else c.cast("double")
 
     rkeys = right.select(rby, ron)
-    # Skew-profile cache: the detection statistics are a pure function of
-    # the right-side INPUT + parameters, so re-running the same join
-    # (bench reps, a pipeline invoked repeatedly over an unchanged
-    # snapshot) reuses the profile instead of paying the detection job
-    # again — the statistics-cache pattern. Keyed by the content-aware
-    # plan fingerprint (semanticHash + input-file listing hash, see
-    # runtime/statcache.py) so rewriting data at the same path misses.
-    # Only the caller-tuned path caches (the auto path's threshold
-    # depends on a total that should re-read).
-    cache_key = None
-    if hot_threshold is not None:
-        fp = plan_fingerprint(right)
-        if fp is not None:
-            cache_key = (fp, by, on, hot_threshold, num_buckets, slices)
-    cached = (
-        _SKEW_PROFILE_CACHE.get(cache_key) if cache_key is not None else None
-    )
-    if cached is not None:
-        hot_ids, cuts = cached
-    else:
-        if hot_threshold is not None:
-            # caller-tuned threshold (the measured/production path):
-            # detection is ONE job — per-key counts filtered to hot ids,
-            # straight to the driver; nothing persisted, no total
-            # aggregate.
-            hot_pd = (
-                rkeys.groupBy(rby)
-                .agg(F.count(F.lit(1)).alias("_cnt"))
-                .filter(F.col("_cnt") > hot_threshold)
-                .select(rby)
-                .toPandas()
-            )
-            hot_ids = set(hot_pd[rby].tolist())
-        else:
-            counts = (
-                rkeys.groupBy(rby)
-                .agg(F.count(F.lit(1)).alias("_cnt"))
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            try:
-                total = int(
-                    counts.agg(F.sum("_cnt").alias("t")).collect()[0]["t"]
-                    or 0
-                )
-                hot_threshold = max(
-                    10_000, total // max(num_buckets, 1) * 2
-                )
-                # only hot ids cross to the driver (tiny by construction)
-                hot_pd = (
-                    counts.filter(F.col("_cnt") > hot_threshold)
-                    .select(rby)
-                    .toPandas()
-                )
-                hot_ids = set(hot_pd[rby].tolist())
-            finally:
-                counts.unpersist()
-
-        # Hot-id membership strategy decided BEFORE the cuts pass so the
-        # quantile scan uses it too (see _filter_hot below).
-        # Time cut points for hot-entity slicing: quantiles over the HOT
-        # entities' timestamps only (they are what the slicing balances;
-        # cold keys would just dilute the cuts and cost a full re-scan).
-        if hot_ids:
-            q = [i / slices for i in range(1, slices)]
-            hkeys = _filter_hot_membership(
-                spark, rkeys, rby, hot_ids, right.schema[rby].dataType
-            )
-            cuts = hkeys.withColumn(
-                "_tsd", _ts_double(hkeys, ron)
-            ).approxQuantile("_tsd", q, 0.001)
-        else:
-            cuts = []
-        if cache_key is not None:
-            if len(_SKEW_PROFILE_CACHE) >= 64:
-                _SKEW_PROFILE_CACHE.pop(next(iter(_SKEW_PROFILE_CACHE)))
-            _SKEW_PROFILE_CACHE[cache_key] = (hot_ids, cuts)
-
-    # Hot-id membership: few hot keys (the usual definition of skew) are
-    # embedded as `isin` literals — the cheapest plan. A heavy-tailed key
-    # space can push 10^4+ entities over threshold, and a literal list
-    # that size bloats the plan string linearly; above _HOT_LITERAL_CAP
-    # membership switches to a broadcast join against a tiny hot-key
-    # frame, keeping plan size O(1) in the hot-key count.
-    key_type = right.schema[rby].dataType
-    hot_sorted = sorted(hot_ids) if hot_ids else []
-    use_literals = len(hot_sorted) <= _HOT_LITERAL_CAP
-
-    def _hot_frame():
-        return spark.createDataFrame(
-            [(k,) for k in hot_sorted],
-            T.StructType([T.StructField("_hot_key", key_type)]),
+    floor = _HOT_FLOOR if hot_threshold is None else hot_threshold
+    prof = (
+        rkeys.groupBy(rby)
+        .agg(F.count(F.lit(1)).alias("_cnt"))
+        .agg(
+            F.sum("_cnt").alias("total"),
+            F.collect_list(
+                F.when(F.col("_cnt") > floor, F.struct(rby, "_cnt"))
+            ).alias("hot"),
         )
+        .collect()[0]
+    )
+    if hot_threshold is None:
+        total = prof["total"] or 0
+        hot_threshold = max(_HOT_FLOOR, total // max(num_buckets, 1) * 2)
+    hot_ids = sorted(k for k, n in prof["hot"] if n > hot_threshold)
+    key_type = right.schema[rby].dataType
+
+    # Time cut points for hot-entity slicing: quantiles over the HOT
+    # entities' timestamps only (they are what the slicing balances;
+    # cold keys would just dilute the cuts).
+    if hot_ids:
+        q = [i / slices for i in range(1, slices)]
+        hkeys = _mark_hot(rkeys, rby, hot_ids, key_type).filter("_hot")
+        cuts = hkeys.withColumn(
+            "_tsd", _ts_double(hkeys, ron)
+        ).approxQuantile("_tsd", q, 0.001)
+    else:
+        cuts = []
 
     def with_bucket(df: DataFrame, key: str, tscol: str) -> DataFrame:
         base = F.pmod(F.xxhash64(F.col(key)), F.lit(num_buckets))
         if not hot_ids:
             return df.withColumn("_bkt", base.cast("int"))
-        if use_literals:
-            df = df.withColumn("_hot", F.col(key).isin(hot_sorted))
-        else:
-            df = (
-                df.join(
-                    F.broadcast(
-                        _hot_frame().withColumn("_hot_flag", F.lit(True))
-                    ),
-                    F.col(key) == F.col("_hot_key"),
-                    "left",
-                )
-                .withColumn("_hot", F.col("_hot_flag").isNotNull())
-                .drop("_hot_key", "_hot_flag")
-            )
+        df = _mark_hot(df, key, hot_ids, key_type)
         tsd = _ts_double(df, tscol)
         slice_id = F.lit(0)
         for i, c in enumerate(cuts):
@@ -292,10 +210,11 @@ def asof_join_pandas_merge(
 
     # Carry-forward: last right row of each hot (entity, slice), replicated
     # into every later slice (keeping its true ts) so no probe in a later
-    # slice misses a match that lives in an earlier one.
+    # slice misses a match that lives in an earlier one. Hot rows are the
+    # ones bucketed at or past ``num_buckets``.
     if hot_ids:
         last_per_slice = (
-            _filter_hot_membership(spark, rb, rby, hot_ids, key_type)
+            rb.filter(F.col("_bkt") >= num_buckets)
             .withColumn(
                 "_rn",
                 F.row_number().over(
@@ -376,19 +295,3 @@ def asof_join_pandas_merge(
         .applyInPandas(merge, schema=out_schema)
     )
 
-
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str = "ts",
-    by: str = "entity_id",
-    value_cols: list[str] | None = None,
-    tiebreak: str | None = None,
-    strategy: str = "union_window",
-    **kw,
-) -> DataFrame:
-    if strategy == "union_window":
-        return asof_join_union_window(left, right, on, by, value_cols, tiebreak)
-    if strategy == "pandas_merge":
-        return asof_join_pandas_merge(left, right, on, by, value_cols, tiebreak, **kw)
-    raise ValueError(strategy)

@@ -45,11 +45,6 @@ from query_cost_feature_engineering_spark.operators.ann import (
     ANN_TABLES,
     with_bucket_keys,
 )
-from query_cost_feature_engineering_spark.runtime.statcache import (
-    _MISS as _STAT_MISS,
-    StatsCache,
-    plan_fingerprint,
-)
 
 
 def band_layout(bits: int, max_dist: int) -> list[tuple[int, int]]:
@@ -157,10 +152,6 @@ def hamming_cross_pairs(
     )
 
 
-_MISS = object()
-_VOCAB_CACHE: dict = {}
-
-
 def jaccard_pairs_prefix(
     docs: DataFrame,
     id_col: str,
@@ -181,38 +172,18 @@ def jaccard_pairs_prefix(
     (golden-tested against each other and against brute force).
     """
     blocks = [block_col] if block_col else []
-    # The vocabulary (per-block distinct tokens + document frequencies) is
-    # a stable corpus property, so the probe job is cached by the input's
-    # content-aware fingerprint (plan semanticHash + file listing hash —
-    # see runtime/statcache.py; the plan hash alone would go stale if the
-    # same path were rewritten in-process). Re-running the same join on
-    # the same input (bench reps, resumed pipelines) skips the
-    # explode+groupBy+collect pass entirely. NOTE for benchmarking: reps
-    # 2+ therefore hit this cache — clear _VOCAB_CACHE between reps (as
-    # bench.py does) when the probe job must be included in the timing.
-    fp = plan_fingerprint(docs)
-    cache_key = (
-        (fp, set_col, tuple(blocks), vocab_limit) if fp is not None else None
+    # vocabulary probe: per-block distinct tokens + document frequencies
+    ex = docs.select(
+        *[F.col(c) for c in blocks], F.explode(set_col).alias("_tok")
     )
-    vocab_pd = _VOCAB_CACHE.get(cache_key, _MISS) if cache_key else _MISS
-    if vocab_pd is _MISS:
-        ex = docs.select(
-            *[F.col(c) for c in blocks], F.explode(set_col).alias("_tok")
-        )
-        dfreq = ex.groupBy(*blocks, "_tok").agg(
-            F.count(F.lit(1)).alias("_df")
-        )
-        vocab_pd = None
-        if vocab_limit > 0:
-            # vocabulary probe: cap the collect at the limit + 1 rows so an
-            # unbounded vocab costs one aggregate, never a driver OOM
-            head = dfreq.limit(vocab_limit + 1).collect()
-            if len(head) <= vocab_limit:
-                vocab_pd = head
-        if cache_key is not None:
-            if len(_VOCAB_CACHE) >= 16:
-                _VOCAB_CACHE.pop(next(iter(_VOCAB_CACHE)))
-            _VOCAB_CACHE[cache_key] = vocab_pd
+    dfreq = ex.groupBy(*blocks, "_tok").agg(F.count(F.lit(1)).alias("_df"))
+    vocab_pd = None
+    if vocab_limit > 0:
+        # cap the collect at the limit + 1 rows so an unbounded vocab
+        # costs one aggregate, never a driver OOM
+        head = dfreq.limit(vocab_limit + 1).collect()
+        if len(head) <= vocab_limit:
+            vocab_pd = head
     if vocab_pd is None:
         return _jaccard_pairs_prefix_join(
             docs, id_col, set_col, threshold, block_col
@@ -511,14 +482,8 @@ def _jaccard_pairs_prefix_join(
 # broadcast matrix (128-dim float64 -> ~50 MB at the cap) instead of
 # shuffling both vectors with every candidate pair: the LSH join
 # amplifies rows ~10^3x, so attaching two 1 KB arrays to each candidate
-# turns a 2 MB corpus into GBs of exchange + Arrow traffic. The cache
-# holds the COLLECTED (lookup, matrix) — never a Broadcast handle,
-# which is bound to one SparkContext and would outlive a session
-# restart under the content-keyed fingerprint — bounded by StatsCache's
-# FIFO; the (cheap) sc.broadcast is re-issued per invocation and
-# reclaimed by Spark's ContextCleaner when the plan is dropped.
+# turns a 2 MB corpus into GBs of exchange + Arrow traffic.
 SRP_MATRIX_MAX_ROWS = 50_000
-_SRP_MATRIX_CACHE = StatsCache()
 
 
 def srp_candidate_pairs(
@@ -563,24 +528,18 @@ def srp_candidate_pairs(
         .select("_id_a", "_id_b")
     )
 
-    fp = plan_fingerprint(df)
-    ck = (fp, id_col, vec_col, SRP_MATRIX_MAX_ROWS) if fp is not None else None
-    mat = _SRP_MATRIX_CACHE.get(ck)  # key=None -> always _MISS, never cached
-    if mat is _STAT_MISS:
-        # narrow size probe first (ids only) — discovering an over-cap
-        # corpus must not ship 50 MB of vectors driver-side
-        n_probe = df.select(id_col).limit(SRP_MATRIX_MAX_ROWS + 1).count()
-        if n_probe <= SRP_MATRIX_MAX_ROWS:
-            head = df.select(id_col, vec_col).collect()
-            # last row wins for a duplicated id — the same one-vector-
-            # per-id semantics the over-cap join path enforces below
-            by_id = {r[0]: r[1] for r in head}
-            lookup = {k: i for i, k in enumerate(by_id)}
-            M = np.asarray(list(by_id.values()), dtype=np.float64)
-            mat = (lookup, M)
-        else:
-            mat = None
-        _SRP_MATRIX_CACHE.put(ck, mat)
+    # narrow size probe first (ids only) — discovering an over-cap
+    # corpus must not ship 50 MB of vectors driver-side
+    n_probe = df.select(id_col).limit(SRP_MATRIX_MAX_ROWS + 1).count()
+    mat = None
+    if n_probe <= SRP_MATRIX_MAX_ROWS:
+        head = df.select(id_col, vec_col).collect()
+        # last row wins for a duplicated id — the same one-vector-
+        # per-id semantics the over-cap join path enforces below
+        by_id = {r[0]: r[1] for r in head}
+        lookup = {k: i for i, k in enumerate(by_id)}
+        M = np.asarray(list(by_id.values()), dtype=np.float64)
+        mat = (lookup, M)
     bvecs = (
         spark.sparkContext.broadcast(mat) if mat is not None else None
     )

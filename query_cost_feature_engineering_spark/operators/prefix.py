@@ -30,15 +30,6 @@ from query_cost_feature_engineering_spark.operators.rank import (
     _bucket_expr,
     adaptive_buckets,
 )
-from query_cost_feature_engineering_spark.runtime.statcache import (
-    _MISS,
-    StatsCache,
-    plan_fingerprint,
-)
-
-# (input fingerprint, bucket_col, value_cols, n_buckets, rel_err) ->
-# (cuts, totals); same statistics-cache pattern as operators/rank.py.
-_PREFIX_STATS_CACHE = StatsCache(maxsize=32)
 
 
 def with_running_sums(
@@ -61,30 +52,18 @@ def with_running_sums(
     bucket_col = bucket_col or order_cols[0]
     if n_buckets is None:
         n_buckets = adaptive_buckets(df, floor=min_buckets)
-    fp = plan_fingerprint(df)
-    ckey = (
-        (fp, bucket_col, tuple(value_cols), n_buckets, rel_err)
-        if fp is not None
-        else None
-    )
-    cached = _PREFIX_STATS_CACHE.get(ckey)
-    if cached is not _MISS:
-        cuts, totals = cached
-        b = df.withColumn("_rs_bkt", _bucket_expr(bucket_col, cuts))
-    else:
-        qs = [i / n_buckets for i in range(1, n_buckets)]
-        cuts = sorted(set(df.stat.approxQuantile(bucket_col, qs, rel_err)))
-        b = df.withColumn("_rs_bkt", _bucket_expr(bucket_col, cuts))
-        totals = {
-            r["_rs_bkt"]: [r[f"t_{c}"] for c in value_cols] + [r["t_rows"]]
-            for r in b.groupBy("_rs_bkt")
-            .agg(
-                *[F.sum(c).cast("long").alias(f"t_{c}") for c in value_cols],
-                F.count(F.lit(1)).alias("t_rows"),
-            )
-            .collect()
-        }
-        _PREFIX_STATS_CACHE.put(ckey, (cuts, totals))
+    qs = [i / n_buckets for i in range(1, n_buckets)]
+    cuts = sorted(set(df.stat.approxQuantile(bucket_col, qs, rel_err)))
+    b = df.withColumn("_rs_bkt", _bucket_expr(bucket_col, cuts))
+    totals = {
+        r["_rs_bkt"]: [r[f"t_{c}"] for c in value_cols] + [r["t_rows"]]
+        for r in b.groupBy("_rs_bkt")
+        .agg(
+            *[F.sum(c).cast("long").alias(f"t_{c}") for c in value_cols],
+            F.count(F.lit(1)).alias("t_rows"),
+        )
+        .collect()
+    }
     rows, acc = [], [0] * (len(value_cols) + 1)
     for k in sorted(totals):
         rows.append((k, *acc))

@@ -2603,7 +2603,7 @@ WITH page AS (
          || CAST(doc_id + 2 AS VARCHAR)
          || '">more</a></div><footer>(c) ' || source
          || ' archive</footer></body></html>' AS html,
-         trim(regexp_replace(text, '\\s+', ' ', 'g')) AS norm
+         trim(regexp_replace(text, '[ \\t\\n\\r\\f\\x0B]+', ' ', 'g')) AS norm
   FROM documents
 ), ext AS (
   SELECT doc_id, html, norm,
@@ -2619,7 +2619,7 @@ WITH page AS (
                  '<div class="related">.*?</div>', ' ', 'g'),
                '<footer>.*?</footer>', ' ', 'g'),
              '<[^>]*>', ' ', 'g'),
-           '\\s+', ' ', 'g')) AS main
+           '[ \\t\\n\\r\\f\\x0B]+', ' ', 'g')) AS main
   FROM page
 )
 SELECT doc_id,

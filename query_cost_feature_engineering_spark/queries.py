@@ -2747,6 +2747,9 @@ C4_BOILER = [
 
 
 HTML_MIN_MAIN_CHARS = 40  # extraction gate: pages with less main text drop
+# whitespace run, spelled out: Java's \s matches \x0B and RE2's (the
+# DuckDB oracle's engine) does not, so \s+ would disagree on that byte
+HTML_WS_RE = "[ \\t\\n\\r\\f\\x0B]+"
 
 
 def html_extract_docs(spark, sf_dir):
@@ -2799,8 +2802,8 @@ def html_extract_docs(spark, sf_dir):
         "<[^>]*>",
     ):
         main = F.regexp_replace(main, pat, " ")
-    main = F.trim(F.regexp_replace(main, "\\s+", " "))
-    norm = F.trim(F.regexp_replace(F.col("text"), "\\s+", " "))
+    main = F.trim(F.regexp_replace(main, HTML_WS_RE, " "))
+    norm = F.trim(F.regexp_replace(F.col("text"), HTML_WS_RE, " "))
     d = d.select(
         "doc_id",
         F.length("html").cast("long").alias("html_len"),
@@ -2979,7 +2982,6 @@ def c4_clean_docs(spark, sf_dir):
 BLOOM_M_BITS = 1 << 22  # 4.2M bits = 65,536 longs = 512 KiB broadcast
 BLOOM_K = 5
 BLOOM_DUP_FRAC_MAX = 0.3
-_BLOOM_CACHE = None  # lazy StatsCache: bitset keyed by input fingerprint
 
 def _bit_masks():
     """Literal 2^b masks (b = 0..63; 63 wraps to the sign bit) so the
@@ -3058,8 +3060,7 @@ def bloom_dedup_docs(spark, sf_dir):
     Plan shape (10^12-doc safe — this is the one dedup variant whose
     scale path has NO shuffle on the probe side): build = one distinct
     + one groupBy(word) bit_or over <= m/64 rows, collected once into a
-    512 KiB long-array (cached by input fingerprint, the
-    runtime/statcache contract); probe = map-only scan x 5 xxhash64 +
+    512 KiB long-array; probe = map-only scan x 5 xxhash64 +
     element_at bit tests against the scalar-broadcast bitset (the
     repo's bnlj-scalar(ok) idiom) feeding ONE groupBy(doc_id). At real
     scale the reference filter is built once and reused across every
@@ -3069,45 +3070,31 @@ def bloom_dedup_docs(spark, sf_dir):
     Oracle: exact membership LEFT JOIN in DuckDB over the identical
     line synthesis (matches iff zero Bloom false positives — see the
     sizing note at BLOOM_M_BITS)."""
-    global _BLOOM_CACHE
-    from query_cost_feature_engineering_spark.runtime.statcache import (
-        _MISS,
-        StatsCache,
-        plan_fingerprint,
-    )
-
-    if _BLOOM_CACHE is None:
-        _BLOOM_CACHE = StatsCache()
     lines = _bloom_lines(spark, sf_dir)
     ref = (
         lines.filter((F.col("doc_id") % 3 == 0) & F.col("line").isNotNull())
         .select("line")
         .distinct()
     )
-    fp = plan_fingerprint(ref)
-    key = (fp, BLOOM_M_BITS, BLOOM_K) if fp is not None else None
-    bits = _BLOOM_CACHE.get(key)
-    if bits is _MISS:
-        words = (
-            ref.select(
-                F.explode(
-                    _bloom_positions(F.col("line"), BLOOM_M_BITS, BLOOM_K)
-                ).alias("pos")
-            )
-            .select(
-                F.shiftright(F.col("pos"), 6).cast("int").alias("wi"),
-                F.element_at(
-                    _bit_masks(), (F.col("pos") % 64).cast("int") + 1
-                ).alias("mask"),
-            )
-            .groupBy("wi")
-            .agg(F.expr("bit_or(mask)").alias("w"))
-            .collect()
+    words = (
+        ref.select(
+            F.explode(
+                _bloom_positions(F.col("line"), BLOOM_M_BITS, BLOOM_K)
+            ).alias("pos")
         )
-        bits = [0] * (BLOOM_M_BITS // 64)
-        for r in words:
-            bits[r["wi"]] = r["w"]
-        _BLOOM_CACHE.put(key, bits)
+        .select(
+            F.shiftright(F.col("pos"), 6).cast("int").alias("wi"),
+            F.element_at(
+                _bit_masks(), (F.col("pos") % 64).cast("int") + 1
+            ).alias("mask"),
+        )
+        .groupBy("wi")
+        .agg(F.expr("bit_or(mask)").alias("w"))
+        .collect()
+    )
+    bits = [0] * (BLOOM_M_BITS // 64)
+    for r in words:
+        bits[r["wi"]] = r["w"]
     bitset = spark.createDataFrame([(bits,)], "bits: array<bigint>")
     probe = lines.filter(F.col("doc_id") % 3 != 0).crossJoin(
         F.broadcast(bitset)

@@ -138,3 +138,57 @@ def test_duplicate_ts_tie_takes_last_by_tiebreak(spark):
         )
         assert got["image_id"].tolist() == ["b", "c"], fn.__name__
         assert got["px"].tolist() == [2.0, 3.0], fn.__name__
+
+
+def test_auto_threshold_hot_path_boundary(spark):
+    """No ``hot_threshold``: the automatic rule (strictly more than
+    ``max(10_000, total // num_buckets * 2)`` rows) makes the entity with
+    10,001 right rows hot and leaves the one with exactly 10,000 cold.
+    Probes before the first row, and one between every pair of right rows
+    (so the first probe of each time slice, late slices included, needs
+    the row carried from the slice before), still equal
+    ``pandas.merge_asof``."""
+    t0 = pd.Timestamp("2021-01-01")
+    sizes = {"ent_hot": (10_001, 2), "ent_cold": (10_000, 3)}  # rows, step s
+    right = pd.concat(
+        [
+            pd.DataFrame(
+                {
+                    "entity_id": ent,
+                    "ts": t0 + pd.to_timedelta(np.arange(n) * step, unit="s"),
+                    "image_id": [f"{ent}-{i:05d}" for i in range(n)],
+                    "px": np.arange(n, dtype=float),
+                }
+            )
+            for ent, (n, step) in sizes.items()
+        ],
+        ignore_index=True,
+    )
+    probes = [
+        pd.DataFrame(
+            {
+                "entity_id": ent,
+                "ts": t0
+                + pd.to_timedelta(
+                    np.concatenate([[-60.0, -1.0], (np.arange(n) + 0.5) * step]),
+                    unit="s",
+                ),
+            }
+        )
+        for ent, (n, step) in sizes.items()
+    ]
+    spine = pd.concat(probes, ignore_index=True)
+    spine["probe_id"] = np.arange(len(spine))
+    want = _oracle(spine, right)
+
+    got = asof_join_pandas_merge(
+        spark.createDataFrame(spine),
+        spark.createDataFrame(right),
+        value_cols=VALUE_COLS,
+        tiebreak="image_id",
+    )
+    _check(got.toPandas(), want)
+    assert want["image_id"].isna().sum() == 4  # two early probes per entity
+    # the time-slice membership test names the hot entity only
+    plan = got._jdf.queryExecution().analyzed().toString()
+    assert "IN (ent_hot)" in plan and "ent_cold" not in plan

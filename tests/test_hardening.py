@@ -1,6 +1,6 @@
 """Round-3 hardening: LSH bucket cap, bounded-plan hot-key handling,
 ANSI-safe quantization, per-stratum full fractions, type-correct
-deletion, content-aware statistics-cache keys."""
+deletion."""
 
 from __future__ import annotations
 
@@ -22,9 +22,6 @@ from query_cost_feature_engineering_spark.runtime.checkpoint import (
     write_resumable,
 )
 from query_cost_feature_engineering_spark.runtime.delete import delete_keys
-from query_cost_feature_engineering_spark.runtime.statcache import (
-    plan_fingerprint,
-)
 
 
 # ---------------------------------------------------------------- LSH cap
@@ -176,18 +173,6 @@ def test_delete_keys_with_int32_bucket_column(spark, tmp_path):
         spark.read.parquet(out).filter(F.col("user_id").isin(keys)).count()
         == 0
     )
-
-
-# ------------------------------------------------------ statcache keying
-def test_plan_fingerprint_detects_same_path_rewrite(spark, tmp_path):
-    p = str(tmp_path / "data")
-    spark.range(10).write.mode("overwrite").parquet(p)
-    fp1 = plan_fingerprint(spark.read.parquet(p))
-    fp1_again = plan_fingerprint(spark.read.parquet(p))
-    assert fp1 is not None and fp1 == fp1_again
-    spark.range(20).write.mode("overwrite").parquet(p)
-    fp2 = plan_fingerprint(spark.read.parquet(p))
-    assert fp2 is not None and fp2 != fp1
 
 
 def test_pii_scrub_redaction_semantics(spark):

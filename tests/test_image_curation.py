@@ -74,6 +74,7 @@ def test_corrupt_payload_tolerance(spark):
     import pandas as pd
 
     from query_cost_feature_engineering_spark.functions.image_features import (
+        CURATION_COLS,
         with_curation_stats,
     )
 
@@ -89,7 +90,7 @@ def test_corrupt_payload_tolerance(spark):
     for i, r in rows.items():
         if i in bad:
             assert not r.decode_ok and r.lap_var is None
-            assert (r.crop_w, r.crop_h, r.crop_phash) == (0, 0, 0)
+            assert all(r[c] is None for c in CURATION_COLS), r
         else:
             assert r.decode_ok and r.lap_var is not None
 

@@ -313,33 +313,6 @@ def test_adaptive_buckets_rejects_implausible_estimates(spark):
     assert adaptive_buckets(joined, floor=8, bytes_per_bucket=1) == 8
 
 
-def test_srp_matrix_cache_is_plain_data_and_bounded(spark):
-    """Review fix: the matrix cache must hold collected (lookup, M)
-    tuples (or None), never a SparkContext-bound Broadcast — a cached
-    Broadcast would outlive a session restart under the content-keyed
-    fingerprint and fail at fetch time. Bounded FIFO via StatsCache."""
-    from query_cost_feature_engineering_spark.operators import neardup
-    from query_cost_feature_engineering_spark.operators.neardup import (
-        srp_candidate_pairs,
-    )
-    from query_cost_feature_engineering_spark.runtime.statcache import (
-        StatsCache,
-    )
-
-    neardup._SRP_MATRIX_CACHE.clear()
-    em = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    srp_candidate_pairs(em, "vec_id", "embedding", 0.35).count()
-    assert isinstance(neardup._SRP_MATRIX_CACHE, StatsCache)
-    vals = list(neardup._SRP_MATRIX_CACHE._data.values())
-    assert vals, "fingerprintable input must populate the cache"
-    for v in vals:
-        assert v is None or (
-            isinstance(v, tuple)
-            and isinstance(v[0], dict)
-            and isinstance(v[1], np.ndarray)
-        )
-
-
 def test_srp_duplicate_ids_do_not_multiply_pairs(spark):
     """Review fix: a duplicated id must contribute ONE vector (one row
     per candidate pair), matching the matrix path's one-entry-per-id
@@ -364,7 +337,6 @@ def test_srp_duplicate_ids_do_not_multiply_pairs(spark):
     try:
         for cap in (old_cap, 10):  # matrix path, then forced join path
             neardup.SRP_MATRIX_MAX_ROWS = cap
-            neardup._SRP_MATRIX_CACHE.clear()
             out = srp_candidate_pairs(
                 em.unionByName(dup), "vec_id", "embedding", 0.35
             ).collect()
@@ -373,4 +345,3 @@ def test_srp_duplicate_ids_do_not_multiply_pairs(spark):
             assert set(pairs) == base, cap
     finally:
         neardup.SRP_MATRIX_MAX_ROWS = old_cap
-        neardup._SRP_MATRIX_CACHE.clear()
