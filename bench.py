@@ -29,118 +29,39 @@ _REPO = str(Path(__file__).resolve().parent)
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
-HEADLINE = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "q4_semi_orders",
-    "customers_no_orders",
-    "rollup_revenue",
-    "cube_revenue",
-    "range_join_promos",
-    "predicate_scan_parts",
-    "topk_orders_per_customer",
-    "agg_events_daily",
-    "json_props_events",
-    "deciles_orders",
-    "dedup_events_exact",
-    "pivot_user_event_counts",
-    "window_lag_lead_events",
-    "window_backfill_events",
-    "sessionize_events",
-    "rolling_mean_events",
-    "rolling_time_events",
-    "asof_purchases_window",
-    "asof_purchases_pandas",
-    "asof_strict_purchases",
-    "snapshot_linear_fit",
-    "snapshot_fit_dispatch",
-    "shap_feature_reduction",
-    "ablation_leave_one_out",
-    "structural_grouping_users",
-    "normalize_quantity",
-    "label_normalize_orders",
-    "qerror_snapshot_fit",
-    "hash_split_customers",
-    "stratified_sample_events",
-    "profile_orders",
-    "hist_orders_totalprice",
-    "salted_join_events",
-    "funnel_users",
-    "tfidf_top_terms",
-    "label_centroid_embeddings",
-    "chunk_documents",
-    "approx_profile_orders",
-    "feature_hash_events",
-    "outlier_events_robust",
-    "ewma_events",
-    "running_total_orders",
-    "weighted_sample_docs",
-    "dedup_exact_docs",
-    "minhash_band_pairs",
-    "ngram_jaccard_pairs",
-    "embedding_neardup_pairs",
-    "simhash_docs",
-    "embedding_cosine_topk",
-    "quantized_cosine_topk",
-    "ann_lsh_topk",
-    "ann_ivf_fixed_topk",
-    "text_analysis_docs",
-    "repetition_docs",
-    "lm_quality_docs",
-    "pii_scrub_docs",
-    "pack_sequences_docs",
-    "mixture_rebalance_docs",
-    # round 5: passage dedup, language ID, domain dedup, token stats,
-    # Gopher gates, shard shuffle, SemDeDup, DSIR, BPE training
-    "span_dedup_docs",
-    "bloom_dedup_docs",
-    "aspect_bucket_images",
-    "vlm_pack_images",
-    "ccnet_buckets_docs",
-    "corpus_pipeline_docs",
-    "lang_id_docs",
-    "domain_dedup_docs",
-    "token_stats_docs",
-    "gopher_quality_docs",
-    "shard_shuffle_docs",
-    "semdedup_embeddings",
-    "dsir_weights_docs",
-    "bpe_train_docs",
-    "plan_featurize_nodes",
-    "mscn_serialize_plans",
-    "stream_sessionize_events",
-    "stream_dedup_events",
-    "stream_stateful_user_stats",
-    "stream_interval_join_events",
-    "image_dedup_clusters",
-    "caption_align_images",
-    "c4_clean_docs",
-    "datacomp_filter_images",
-    "blur_detect_images",
-    "html_extract_docs",
-    "audio_fingerprint_dedup",
-    "border_crop_images",
-    "image_curation_pipeline",
-    "image_decontam_phash",
-    "stream_image_curation",
-    "audio_neardup_pairs",
-    "video_frame_dedup",
-    "shard_pack_images",
-    "jpeg_features_images",
-    "exif_orient_images",
-    "exif_scrub_images",
-    "mixed_format_features",
-    # round 5: snapshot-table runtime (copy-on-write MERGE + time travel;
-    # streaming CDC upsert with idempotent per-batch merge commits)
-    "merge_upsert_orders",
-    "stream_upsert_events",
-    "incremental_read_orders",
-    "snapshot_prune_orders",
-    "stream_snapshot_reads_orders",
-    "stream_asof_purchases",
-    "feature_store_export",
+from query_cost_feature_engineering_spark.queries import REGISTRY  # noqa: E402
+
+# Registry entries left out of the timed set. Every other REGISTRY entry
+# is a headline query, so a newly registered query is timed unless it is
+# listed here.
+EXCLUDED = [
+    "ann_ivf_topk",
+    "plan_featurize_deep",
+    "plan_featurize_job_vocab",
+    "subplan_rollup_plans",
+    "stream_image_features",
+    "explain_json_featurize",
+    "minhash_signatures",
+    "contamination_docs",
+    "contamination_ngram_docs",
+    "dedup_clusters_docs",
+    "image_features",
+    "logscan_plans",
+    "image_asof_features",
+    "phash_neardup_images",
+    "resize_images_meta",
+    "augment_images_meta",
+    "video_frame_sample",
+    "audio_features_clips",
+    "format_sniff_images",
+    "set_ops_nations",
+    "unpivot_user_event_counts",
+    "stream_enrich_events",
+    "stream_tumbling_events",
+    "snapshot_template_sample",
+    "greedy_ablation_lineitem",
 ]
+HEADLINE = [name for name in REGISTRY if name not in EXCLUDED]
 
 N_IMAGES = int(os.environ.get("SPARK_GRAFT_BENCH_IMAGES", "24000"))
 N_PROBES = int(os.environ.get("SPARK_GRAFT_BENCH_PROBES", "48000"))

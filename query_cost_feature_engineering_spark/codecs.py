@@ -1,7 +1,7 @@
 """Pure-NumPy media codecs used by the engine's decode UDFs.
 
-The container has no media libraries (no Pillow / libjpeg / libsndfile /
-ffmpeg), so every format here is implemented from its public spec:
+No media library is imported (Pillow, libjpeg, libsndfile, ffmpeg);
+every format here is implemented from its public spec:
 
 - ``png``  — real PNG codec (RFC 2083/ISO 15948): truecolor filter-0
   encode; decode covers all color types (grey/RGB/palette/grey-alpha/
@@ -32,15 +32,6 @@ import struct
 import zlib
 
 import numpy as np
-
-try:  # pragma: no cover - absent in this container
-    import io
-
-    from PIL import Image  # type: ignore
-
-    _HAS_PIL = True
-except ImportError:
-    _HAS_PIL = False
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
 QJPG_SIG = b"QJPG"
@@ -235,11 +226,7 @@ def decode_png(data: bytes) -> np.ndarray:
 
 
 def encode_lossy(arr: np.ndarray, step: int = _QJPG_STEP) -> bytes:
-    """Deterministic lossy encode (QJPG stub, or real JPEG when PIL exists)."""
-    if _HAS_PIL:  # pragma: no cover
-        buf = io.BytesIO()
-        Image.fromarray(arr).save(buf, format="JPEG", quality=90, subsampling=0)
-        return buf.getvalue()
+    """Deterministic lossy encode (QJPG stub container)."""
     if arr.dtype != np.uint8 or arr.ndim != 3 or arr.shape[2] != 3:
         raise ValueError("encode_lossy expects (h, w, 3) uint8")
     h, w = arr.shape[:2]
@@ -248,8 +235,6 @@ def encode_lossy(arr: np.ndarray, step: int = _QJPG_STEP) -> bytes:
 
 
 def decode_lossy(data: bytes) -> np.ndarray:
-    if _HAS_PIL and data[:2] == b"\xff\xd8":  # pragma: no cover - real JPEG
-        return np.asarray(Image.open(io.BytesIO(data)).convert("RGB"))
     if data[:2] == b"\xff\xd8":
         # REAL baseline JPEG via the pure-NumPy T.81 codec (jpeg.py) —
         # no codec library needed for the baseline-sequential subset

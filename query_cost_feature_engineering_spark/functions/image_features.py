@@ -10,7 +10,9 @@ Semantic graft (SURVEY.md §7.1, citing /root/reference file:line):
   *decoded* pixels + an 8-bin grayscale histogram. This is the only Python
   step in the pipeline and runs as one Arrow-batched scalar pandas UDF
   (input_hint: "no per-row Python" — per-element codec work happens inside
-  the Arrow batch, the accepted vectorized-UDF pattern).
+  the Arrow batch, the accepted vectorized-UDF pattern). Every decode
+  featurizer here goes through the one payload-UDF helper
+  (``functions/_payload.py``).
 - ``with_phash_bits``   ↔ ``get_index_one_hot`` identity bits
   (tpch_utils_knob.py:70-73): 64 bit-columns unpacked from the stored
   ``phash`` int64 entirely JVM-side (shiftright/bitand — no UDF).
@@ -24,7 +26,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from query_cost_feature_engineering_spark.codecs import decode_image, to_gray
+from query_cost_feature_engineering_spark.codecs import decode_image, phash64, to_gray
+from query_cost_feature_engineering_spark.functions._payload import (
+    payload_frame,
+    with_payload_columns,
+)
 
 STAT_COLS = [
     "px_min_r", "px_min_g", "px_min_b",
@@ -42,82 +48,58 @@ _DECODE_SCHEMA = T.StructType(
 FMTS = ["png", "jpeg"]
 
 
+def _decode_stats_row(data: bytes, fmt: str) -> tuple:
+    arr = decode_image(data, fmt)
+    flat = arr.reshape(-1, 3)  # stay uint8: min/max/median need no cast
+    gray = to_gray(arr).ravel()
+    hist = np.bincount(gray >> 5, minlength=HIST_BINS) / gray.size
+    n = flat.shape[0]
+    med = []
+    for c in range(3):
+        # exact uint8 median from a bincount (O(n), no sort); averages
+        # the two middle order statistics exactly like np.median
+        cum = np.cumsum(np.bincount(flat[:, c], minlength=256))
+        lo = int(np.searchsorted(cum, (n - 1) // 2 + 1))
+        hi = int(np.searchsorted(cum, n // 2 + 1))
+        med.append((lo + hi) / 2.0)
+    return (*flat.min(axis=0), *med, *flat.max(axis=0), *hist, gray.mean())
+
+
 def decode_stats_pandas(
     data: pd.Series, fmt: pd.Series, on_error: str = "fail"
 ) -> pd.DataFrame:
     """Pure-pandas decode+stats core — shared by the Spark UDF and the
     golden single-process oracle (tests compare them with allclose).
-
-    ``on_error='null'``: web-scale corpora always contain corrupt payloads;
-    rows that fail to decode get all-NaN stats instead of failing the task
-    (mirrors the reference's salvage-parser try/except discipline,
-    tpch_utils_knob.py:414-433)."""
-    out = np.empty((len(data), len(DECODE_COLS)), dtype=np.float64)
-    for i, (b, f) in enumerate(zip(data, fmt)):
-        try:
-            arr = decode_image(bytes(b), f)
-        except Exception:
-            if on_error == "fail":
-                raise
-            out[i, :] = np.nan
-            continue
-        flat = arr.reshape(-1, 3)  # stay uint8: min/max/median need no cast
-        gray = to_gray(arr).ravel()
-        hist = np.bincount(gray >> 5, minlength=HIST_BINS).astype(np.float64)
-        out[i, 0:3] = flat.min(axis=0)
-        n = flat.shape[0]
-        for c in range(3):
-            # exact uint8 median from a bincount (O(n), no sort); averages
-            # the two middle order statistics exactly like np.median
-            cum = np.cumsum(np.bincount(flat[:, c], minlength=256))
-            lo = int(np.searchsorted(cum, (n - 1) // 2 + 1))
-            hi = int(np.searchsorted(cum, n // 2 + 1))
-            out[i, 3 + c] = (lo + hi) / 2.0
-        out[i, 6:9] = flat.max(axis=0)
-        out[i, 9 : 9 + HIST_BINS] = hist / gray.size
-        out[i, 9 + HIST_BINS] = gray.mean()
-    return pd.DataFrame(out, columns=DECODE_COLS)
+    ``on_error='null'``: undecodable rows get all-None stats and
+    ``decode_ok=False`` instead of failing the task."""
+    return payload_frame(
+        _decode_stats_row, _DECODE_SCHEMA, data, fmt, on_error=on_error
+    )
 
 
-@F.pandas_udf(_DECODE_SCHEMA)
-def _decode_stats_udf(data: pd.Series, fmt: pd.Series) -> pd.DataFrame:
-    return decode_stats_pandas(data, fmt)
-
-
-@F.pandas_udf(_DECODE_SCHEMA)
-def _decode_stats_tolerant_udf(data: pd.Series, fmt: pd.Series) -> pd.DataFrame:
-    return decode_stats_pandas(data, fmt, on_error="null")
-
-
-def with_image_features(
-    df: DataFrame, bytes_col: str = "bytes", on_error: str = "fail"
-) -> DataFrame:
-    """Append decoded-pixel statistic columns; drops the heavy binary column
-    afterwards so downstream shuffles never carry image payloads.
+def with_image_features(df: DataFrame, on_error: str = "fail") -> DataFrame:
+    """Append decoded-pixel statistic columns. The binary column stays;
+    ``plans.compute_features`` drops it before any shuffle.
     ``on_error='null'`` adds a ``decode_ok`` flag and null stats for
     undecodable rows instead of failing the job."""
-    udf = _decode_stats_udf if on_error == "fail" else _decode_stats_tolerant_udf
-    df = df.withColumn("_px", udf(F.col(bytes_col), F.col("fmt")))
-    # single withColumns pass — chained withColumn is O(n²) in the analyzer
-    out = df.withColumns({c: F.col(f"_px.{c}") for c in DECODE_COLS}).drop("_px")
-    if on_error != "fail":
-        out = out.withColumn("decode_ok", F.col("px_mean").isNotNull())
-    return out
+    return with_payload_columns(
+        df, _decode_stats_row, _DECODE_SCHEMA, on_error=on_error
+    )
 
 
-def with_basics(df: DataFrame, bytes_col: str = "bytes") -> DataFrame:
+def with_basics(df: DataFrame) -> DataFrame:
     """[w, h, nbytes] + format one-hot — all JVM-side expressions."""
-    cols = {"nbytes": F.length(F.col(bytes_col)).cast("double")}
+    cols = {"nbytes": F.length(F.col("bytes")).cast("double")}
     for f in FMTS:
         cols[f"fmt_{f}"] = F.when(F.col("fmt") == f, 1.0).otherwise(0.0)
     return df.withColumns(cols)
 
 
-def with_phash_bits(df: DataFrame, phash_col: str = "phash") -> DataFrame:
+def with_phash_bits(df: DataFrame) -> DataFrame:
     """Unpack the 64-bit perceptual hash into bit columns JVM-side."""
     return df.withColumns(
         {
-            f"ph_{i}": F.shiftright(F.col(phash_col), 63 - i)
+            f"ph_{i}": F.shiftright(F.col("phash"), 63 - i)
             .bitwiseAND(F.lit(1))
             .cast("double")
             for i in range(64)
@@ -153,8 +135,6 @@ def phash_bits_pandas(phash: pd.Series) -> pd.DataFrame:
 # so every integer sum stays far below 2^53 and the numerators are
 # exact in float64.
 
-SHARP_COLS = ["dec_w", "dec_h", "lap_var", "tenengrad"]
-
 _SHARP_SCHEMA = T.StructType(
     [
         T.StructField("dec_w", T.IntegerType()),
@@ -165,6 +145,12 @@ _SHARP_SCHEMA = T.StructType(
 )
 
 
+def _sharpness_row(data: bytes, fmt: str) -> tuple:
+    arr = decode_image(data, fmt)
+    h, w = arr.shape[:2]
+    return (w, h, *_sharpness_ints(arr))
+
+
 def sharpness_stats_pandas(data: pd.Series, fmt: pd.Series) -> pd.DataFrame:
     """Vectorized (numpy-shift) sharpness core — the Spark-side half.
 
@@ -173,19 +159,7 @@ def sharpness_stats_pandas(data: pd.Series, fmt: pd.Series) -> pd.DataFrame:
     implementation of the math; only the codec decode is shared (the
     fixture-oracle convention documented in FIXTURES.md). Images with
     fewer than 3 rows or columns have no interior and emit 0.0."""
-    n_rows = len(data)
-    dec_w = np.empty(n_rows, np.int32)
-    dec_h = np.empty(n_rows, np.int32)
-    lap_var = np.empty(n_rows, np.float64)
-    teng = np.empty(n_rows, np.float64)
-    for i, (b, f) in enumerate(zip(data, fmt)):
-        arr = decode_image(bytes(b), f)
-        h, w = arr.shape[:2]
-        dec_w[i], dec_h[i] = w, h
-        lap_var[i], teng[i] = _sharpness_ints(arr)
-    return pd.DataFrame(
-        {"dec_w": dec_w, "dec_h": dec_h, "lap_var": lap_var, "tenengrad": teng}
-    )
+    return payload_frame(_sharpness_row, _SHARP_SCHEMA, data, fmt)
 
 
 def _sharpness_ints(arr: np.ndarray) -> tuple[float, float]:
@@ -206,18 +180,12 @@ def _sharpness_ints(arr: np.ndarray) -> tuple[float, float]:
     return float(n * ss - s * s) / float(n * n), teng
 
 
-@F.pandas_udf(_SHARP_SCHEMA)
-def _sharpness_udf(data: pd.Series, fmt: pd.Series) -> pd.DataFrame:
-    return sharpness_stats_pandas(data, fmt)
-
-
-def with_sharpness(df: DataFrame, bytes_col: str = "bytes") -> DataFrame:
+def with_sharpness(df: DataFrame) -> DataFrame:
     """Append sharpness columns; map-only, one Arrow batch pass, bytes
     dropped before any downstream exchange (the flagship decode idiom)."""
-    df = df.withColumn("_sh", _sharpness_udf(F.col(bytes_col), F.col("fmt")))
-    return df.withColumns(
-        {c: F.col(f"_sh.{c}") for c in SHARP_COLS}
-    ).drop("_sh", bytes_col)
+    return with_payload_columns(
+        df, _sharpness_row, _SHARP_SCHEMA, drop_payload=True
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -262,30 +230,24 @@ def _border_runs(arr: np.ndarray) -> tuple[int, int, int, int]:
     return (_run_len(rows_u), _run_len(rows_u[::-1]), l, r)
 
 
+def _border_row(data: bytes, fmt: str) -> tuple:
+    arr = decode_image(data, fmt)
+    h, w = arr.shape[:2]
+    return (w, h, *_border_runs(arr))
+
+
 def border_stats_pandas(data: pd.Series, fmt: pd.Series) -> pd.DataFrame:
     """Vectorized border detector — the Spark-side half; the fixture
     oracle (golden.ensure_border_fixture) recounts the runs with
     explicit per-pixel Python loops."""
-    out = np.empty((len(data), len(BORDER_COLS)), dtype=np.int32)
-    for i, (b, f) in enumerate(zip(data, fmt)):
-        arr = decode_image(bytes(b), f)
-        h, w = arr.shape[:2]
-        t, bt, l, r = _border_runs(arr)
-        out[i] = (w, h, t, bt, l, r)
-    return pd.DataFrame(out, columns=BORDER_COLS)
+    return payload_frame(_border_row, _BORDER_SCHEMA, data, fmt)
 
 
-@F.pandas_udf(_BORDER_SCHEMA)
-def _border_udf(data: pd.Series, fmt: pd.Series) -> pd.DataFrame:
-    return border_stats_pandas(data, fmt)
-
-
-def with_border_stats(df: DataFrame, bytes_col: str = "bytes") -> DataFrame:
+def with_border_stats(df: DataFrame) -> DataFrame:
     """Append border columns; map-only, payload dropped afterwards."""
-    df = df.withColumn("_bd", _border_udf(F.col(bytes_col), F.col("fmt")))
-    return df.withColumns(
-        {c: F.col(f"_bd.{c}") for c in BORDER_COLS}
-    ).drop("_bd", bytes_col)
+    return with_payload_columns(
+        df, _border_row, _BORDER_SCHEMA, drop_payload=True
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -312,72 +274,36 @@ _CURATION_SCHEMA = T.StructType(
 )
 
 
+def _curation_row(data: bytes, fmt: str) -> tuple:
+    arr = decode_image(data, fmt)
+    h, w = arr.shape[:2]
+    t, bt, l, r = _border_runs(arr)
+    crop = arr[t : h - bt, l : w - r]
+    ch, cw = crop.shape[:2]
+    if ch == 0 or cw == 0:
+        lap_var, ph = 0.0, 0
+    else:
+        lap_var, ph = _sharpness_ints(crop)[0], phash64(crop)
+    return (w, h, t, bt, l, r, cw, ch, lap_var, ph)
+
+
 def curation_stats_pandas(
     data: pd.Series, fmt: pd.Series, on_error: str = "fail"
 ) -> pd.DataFrame:
-    """``on_error='null'``: web corpora always contain corrupt payloads
-    — undecodable rows emit NaN lap_var / zero dims instead of failing
-    the task (the with_image_features salvage discipline); callers
-    derive ``decode_ok`` from ``lap_var`` nullness."""
-    from query_cost_feature_engineering_spark.codecs import phash64
-
-    n_rows = len(data)
-    out = {c: np.zeros(n_rows, np.int32) for c in CURATION_COLS[:8]}
-    lap_var = np.empty(n_rows, np.float64)
-    ph = np.zeros(n_rows, np.int64)
-    for i, (b, f) in enumerate(zip(data, fmt)):
-        try:
-            arr = decode_image(bytes(b), f)
-        except Exception:
-            if on_error == "fail":
-                raise
-            lap_var[i] = np.nan
-            continue
-        h, w = arr.shape[:2]
-        t, bt, l, r = _border_runs(arr)
-        crop = arr[t : h - bt, l : w - r]
-        ch, cw = crop.shape[:2]
-        if ch == 0 or cw == 0:
-            lap_var[i], ph[i] = 0.0, 0
-        else:
-            lap_var[i] = _sharpness_ints(crop)[0]
-            ph[i] = phash64(crop)
-        for c, v in zip(
-            CURATION_COLS[:8], (w, h, t, bt, l, r, cw, ch)
-        ):
-            out[c][i] = v
-    out["lap_var"] = lap_var
-    out["crop_phash"] = ph
-    return pd.DataFrame(out)
+    """Fused gate core — the Spark-side half. ``on_error='null'``:
+    undecodable rows get all-None gate values and ``decode_ok=False``
+    instead of failing the task."""
+    return payload_frame(
+        _curation_row, _CURATION_SCHEMA, data, fmt, on_error=on_error
+    )
 
 
-@F.pandas_udf(_CURATION_SCHEMA)
-def _curation_udf(data: pd.Series, fmt: pd.Series) -> pd.DataFrame:
-    return curation_stats_pandas(data, fmt)
-
-
-@F.pandas_udf(_CURATION_SCHEMA)
-def _curation_tolerant_udf(data: pd.Series, fmt: pd.Series) -> pd.DataFrame:
-    return curation_stats_pandas(data, fmt, on_error="null")
-
-
-def with_curation_stats(
-    df: DataFrame, bytes_col: str = "bytes", on_error: str = "fail"
-) -> DataFrame:
+def with_curation_stats(df: DataFrame, on_error: str = "fail") -> DataFrame:
     """Append the fused gate columns; map-only, payload dropped.
     ``on_error='null'`` adds a ``decode_ok`` flag; corrupt rows carry
     NULL in every gate column (never sharp, never in a pHash dedup
     cluster) instead of failing the job."""
-    udf = _curation_udf if on_error == "fail" else _curation_tolerant_udf
-    df = df.withColumn("_cu", udf(F.col(bytes_col), F.col("fmt")))
-    out = df.withColumns(
-        {c: F.col(f"_cu.{c}") for c in CURATION_COLS}
-    ).drop("_cu", bytes_col)
-    if on_error != "fail":
-        # the UDF's NaN sentinel arrives as NULL (Arrow's from_pandas
-        # NaN->null semantics), so test nullness, not isnan
-        ok = F.col("lap_var").isNotNull() & ~F.isnan("lap_var")
-        out = out.withColumn("decode_ok", ok).withColumns(
-            {c: F.when(F.col("decode_ok"), F.col(c)) for c in CURATION_COLS}
-        )
-    return out
+    return with_payload_columns(
+        df, _curation_row, _CURATION_SCHEMA, drop_payload=True,
+        on_error=on_error,
+    )

@@ -1,14 +1,17 @@
 """Multimodal payload operators: decode / resize / frame-sample over opaque
-binary columns, as Arrow-batched ``mapInPandas`` / pandas UDFs.
+binary columns, as Arrow-batched ``mapInPandas`` / pandas UDFs. The
+per-row struct featurizers go through the one payload-UDF helper
+(``functions/_payload.py``); the 1->N frame fan-outs and the format sniff
+have other shapes and keep their own batch loops.
 
 Images are REAL (the pure-NumPy codecs in ``codecs.py``). Video and audio
-decoding need libraries absent from this container (ffmpeg / soundfile),
-so those decoders are STUBS behind an import-try: when the real library is
-missing, a clearly-marked deterministic fake parses our own synthetic
-container format (``FVID``/``FAUD``, produced by the generators below) so
-the Spark-side plumbing — schema, batch shape, row explosion, partition
-sizing — is real and tested end-to-end. Feeding a genuine mp4/wav without
-the real library raises ``NotImplementedError``.
+decode the REAL containers the in-repo codecs implement (AVI, MP4 with
+'jpeg' tracks, GIF; WAV, FLAC, AIFF, AU) and otherwise fall back to a
+clearly-marked deterministic fake that parses our own synthetic
+container format (``FVID``/``FAUD``, produced by the generators below),
+so the Spark-side plumbing — schema, batch shape, row explosion,
+partition sizing — is real and tested end-to-end. Codecs that need an
+external library (H.264, mp3, ...) raise ``NotImplementedError``.
 
 Ref parity: the reference has no media layer (its payload is plan JSON);
 this implements SURVEY.md §1.5's "binary (new engine: image bytes)"
@@ -30,21 +33,18 @@ from pyspark.sql import types as T
 from query_cost_feature_engineering_spark.codecs import (
     decode_image,
     encode_png,
+    phash64,
 )
-
-try:  # pragma: no cover - not in this container
-    import av  # type: ignore  # PyAV: real video decode
-
-    _HAS_AV = True
-except ImportError:
-    _HAS_AV = False
-
-try:  # pragma: no cover - not in this container
-    import soundfile  # type: ignore  # noqa: F401  real audio decode
-
-    _HAS_SF = True
-except ImportError:
-    _HAS_SF = False
+from query_cost_feature_engineering_spark.functions._payload import (
+    payload_frame,
+    with_payload_columns,
+)
+from query_cost_feature_engineering_spark.jpeg import (
+    apply_exif_orientation,
+    decode_jpeg,
+    parse_exif_orientation,
+    strip_metadata,
+)
 
 FVID_SIG = b"FVID"  # fake video: header + zlib'd uint8 luma frames
 FAUD_SIG = b"FAUD"  # fake audio: header + zlib'd int16 PCM samples
@@ -66,7 +66,7 @@ def encode_fake_audio(pcm: np.ndarray, rate: int = 16000) -> bytes:
 def _decode_fake_video(data: bytes) -> np.ndarray:
     if data[:4] != FVID_SIG:
         raise NotImplementedError(
-            "real video decode requires PyAV/ffmpeg (absent in this container); "
+            "real video decode requires a codec library (PyAV/ffmpeg); "
             "only the FVID stub container is supported"
         )
     n, h, w = struct.unpack(">III", data[4:16])
@@ -76,7 +76,7 @@ def _decode_fake_video(data: bytes) -> np.ndarray:
 def _decode_fake_audio(data: bytes) -> tuple[np.ndarray, int]:
     if data[:4] != FAUD_SIG:
         raise NotImplementedError(
-            "real audio decode requires soundfile/libsndfile (absent); "
+            "real audio decode requires a codec library (soundfile); "
             "only the FAUD stub container is supported"
         )
     n, rate = struct.unpack(">II", data[4:12])
@@ -90,8 +90,7 @@ def decode_video(data: bytes) -> np.ndarray:
     track (``codecs.decode_mp4``), or the FVID luma stub (expanded to
     3 channels, so downstream means/encodes are format-independent).
     H.264/HEVC/VP9/AV1 payloads raise NotImplementedError by codec
-    name — those genuinely need a codec library, probed via the PyAV
-    import above."""
+    name — those genuinely need a codec library."""
     from query_cost_feature_engineering_spark.codecs import (
         decode_avi,
         decode_mp4,
@@ -116,8 +115,7 @@ def decode_audio(data: bytes) -> tuple[np.ndarray, int]:
     ``flac.decode_flac``), or the FAUD stub container. Multichannel
     payloads yield channel 0 (features are per-clip scalars; channel
     choice is deterministic). Remaining compressed formats (mp3/ogg/
-    m4a) still raise — those genuinely need a codec library, probed
-    via the soundfile import above."""
+    m4a) still raise — those genuinely need a codec library."""
     from query_cost_feature_engineering_spark.codecs import (
         WAV_RIFF,
         decode_wav,
@@ -158,7 +156,14 @@ _EXIF_SCHEMA = T.StructType(
 )
 
 
-def with_exif_display_meta(df: DataFrame, bytes_col: str = "bytes") -> DataFrame:
+def _exif_display_row(data: bytes) -> tuple:
+    o = parse_exif_orientation(data)
+    disp = apply_exif_orientation(decode_jpeg(data), o or 1)
+    corner = float(disp[:4, :4].astype(np.float64).mean())
+    return (o or 0, disp.shape[1], disp.shape[0], corner)
+
+
+def with_exif_display_meta(df: DataFrame) -> DataFrame:
     """Orientation-normalization pass: parse the APP1/TIFF orientation
     tag (0 when absent → treated as 1, the spec default), decode the
     JPEG, apply the display transform, and emit display dims plus a
@@ -166,35 +171,9 @@ def with_exif_display_meta(df: DataFrame, bytes_col: str = "bytes") -> DataFrame
     orientation-sensitive by construction, so a wrong or skipped
     rotation fails the oracle. Map-only Arrow-batched UDF; bytes are
     never shuffled (same plan shape as the flagship decode stage)."""
-
-    @F.pandas_udf(_EXIF_SCHEMA)
-    def _exif(data: pd.Series) -> pd.DataFrame:
-        from query_cost_feature_engineering_spark.jpeg import (
-            apply_exif_orientation,
-            decode_jpeg,
-            parse_exif_orientation,
-        )
-
-        rows = []
-        for b in data:
-            b = bytes(b)
-            o = parse_exif_orientation(b)
-            disp = apply_exif_orientation(decode_jpeg(b), o or 1)
-            rows.append(
-                {
-                    "orientation": o or 0,
-                    "disp_w": disp.shape[1],
-                    "disp_h": disp.shape[0],
-                    "corner_mean": float(
-                        disp[:4, :4].astype(np.float64).mean()
-                    ),
-                }
-            )
-        return pd.DataFrame(rows)
-
-    r = df.withColumn("_e", _exif(F.col(bytes_col)))
-    out_cols = [f.name for f in _EXIF_SCHEMA.fields]
-    return r.withColumns({c: F.col(f"_e.{c}") for c in out_cols}).drop("_e")
+    return with_payload_columns(
+        df, _exif_display_row, _EXIF_SCHEMA, inputs=("bytes",)
+    )
 
 
 _EXIF_SCRUB_SCHEMA = T.StructType(
@@ -209,7 +188,19 @@ _EXIF_SCRUB_SCHEMA = T.StructType(
 )
 
 
-def with_exif_scrub(df: DataFrame, bytes_col: str = "bytes") -> DataFrame:
+def _exif_scrub_row(data: bytes) -> tuple:
+    s, n_rm, b_rm = strip_metadata(data)
+    return (
+        parse_exif_orientation(data) is not None,
+        n_rm,
+        b_rm,
+        len(s),
+        parse_exif_orientation(s) is None,
+        bool(np.array_equal(decode_jpeg(data), decode_jpeg(s))),
+    )
+
+
+def with_exif_scrub(df: DataFrame) -> DataFrame:
     """Metadata-scrub pass (the LAION-style privacy step before
     publishing an image corpus): strip APP1..APP15 + COM segments from
     each JPEG (jpeg.strip_metadata), then VERIFY in the same batch that
@@ -218,37 +209,9 @@ def with_exif_scrub(df: DataFrame, bytes_col: str = "bytes") -> DataFrame:
     (``pixels_ok`` — the dropped segments are decode-inert by spec,
     and this checks it per image). Map-only Arrow-batched UDF; bytes
     never shuffled."""
-
-    @F.pandas_udf(_EXIF_SCRUB_SCHEMA)
-    def _scrub(data: pd.Series) -> pd.DataFrame:
-        from query_cost_feature_engineering_spark.jpeg import (
-            decode_jpeg,
-            parse_exif_orientation,
-            strip_metadata,
-        )
-
-        rows = []
-        for b in data:
-            b = bytes(b)
-            had = parse_exif_orientation(b) is not None
-            s, n_rm, b_rm = strip_metadata(b)
-            rows.append(
-                {
-                    "had_exif": had,
-                    "n_stripped": n_rm,
-                    "bytes_removed": b_rm,
-                    "out_nbytes": len(s),
-                    "clean_ok": parse_exif_orientation(s) is None,
-                    "pixels_ok": bool(
-                        np.array_equal(decode_jpeg(b), decode_jpeg(s))
-                    ),
-                }
-            )
-        return pd.DataFrame(rows)
-
-    r = df.withColumn("_s", _scrub(F.col(bytes_col)))
-    out_cols = [f.name for f in _EXIF_SCRUB_SCHEMA.fields]
-    return r.withColumns({c: F.col(f"_s.{c}") for c in out_cols}).drop("_s")
+    return with_payload_columns(
+        df, _exif_scrub_row, _EXIF_SCRUB_SCHEMA, inputs=("bytes",)
+    )
 
 
 # --- mixed-format decode metadata (scalar struct pandas UDF) ----------------
@@ -263,36 +226,23 @@ _DECODE_META_SCHEMA = T.StructType(
 )
 
 
-def with_decoded_meta(
-    df: DataFrame, bytes_col: str = "bytes", fmt_col: str = "fmt"
-) -> DataFrame:
+def _decoded_meta_row(data: bytes, fmt: str) -> tuple:
+    arr = decode_image(data, "jpeg" if str(fmt).startswith("jpeg") else str(fmt))
+    return (
+        arr.shape[1],
+        arr.shape[0],
+        float(arr.astype(np.float64).mean()),
+        float(arr[:4, :4].astype(np.float64).mean()),
+    )
+
+
+def with_decoded_meta(df: DataFrame) -> DataFrame:
     """Decode EVERY supported still-image format through the one
     ``codecs.decode_image`` dispatch and emit decoded dims + global
     and corner pixel means — the capstone pass proving the whole
     codec surface behind a single map-only Arrow UDF (fmt variants
     like 'jpeg_prog' normalize to their dispatch family)."""
-
-    @F.pandas_udf(_DECODE_META_SCHEMA)
-    def _meta(data: pd.Series, fmts: pd.Series) -> pd.DataFrame:
-        rows = []
-        for b, fmt in zip(data, fmts):
-            f = "jpeg" if str(fmt).startswith("jpeg") else str(fmt)
-            arr = decode_image(bytes(b), f)
-            rows.append(
-                {
-                    "dec_w": arr.shape[1],
-                    "dec_h": arr.shape[0],
-                    "px_mean": float(arr.astype(np.float64).mean()),
-                    "corner_mean": float(
-                        arr[:4, :4].astype(np.float64).mean()
-                    ),
-                }
-            )
-        return pd.DataFrame(rows)
-
-    r = df.withColumn("_m", _meta(F.col(bytes_col), F.col(fmt_col)))
-    out_cols = [f.name for f in _DECODE_META_SCHEMA.fields]
-    return r.withColumns({c: F.col(f"_m.{c}") for c in out_cols}).drop("_m")
+    return with_payload_columns(df, _decoded_meta_row, _DECODE_META_SCHEMA)
 
 
 # --- format sniffing (mapInArrow, zero-copy) --------------------------------
@@ -334,12 +284,7 @@ def _sniff_head(head: bytes) -> str:
     return "unknown"
 
 
-def sniff_formats(
-    df: DataFrame,
-    id_col: str = "image_id",
-    bytes_col: str = "bytes",
-    fmt_col: str = "fmt",
-) -> DataFrame:
+def sniff_formats(df: DataFrame) -> DataFrame:
     """Data-quality pass: detect the TRUE payload format from magic bytes
     and compare with the declared ``fmt`` column. Uses ``mapInArrow``
     (input_hint's zero-copy path): only the first 12 bytes of each payload
@@ -363,7 +308,7 @@ def sniff_formats(
                 ["media_id", "declared_fmt", "sniffed_fmt", "fmt_ok"],
             )
 
-    return df.select(id_col, bytes_col, fmt_col).mapInArrow(
+    return df.select("image_id", "bytes", "fmt").mapInArrow(
         gen,
         "media_id string, declared_fmt string, sniffed_fmt string, fmt_ok boolean",
     )
@@ -373,55 +318,39 @@ def sniff_formats(
 
 _RESIZE_SCHEMA = T.StructType(
     [
-        T.StructField("out_bytes", T.BinaryType()),
-        T.StructField("out_w", T.IntegerType()),
-        T.StructField("out_h", T.IntegerType()),
+        T.StructField("bytes", T.BinaryType()),
+        T.StructField("w", T.IntegerType()),
+        T.StructField("h", T.IntegerType()),
     ]
 )
 
 
-def resize_images(df: DataFrame, size: int, bytes_col: str = "bytes") -> DataFrame:
+def resize_images(df: DataFrame, size: int) -> DataFrame:
     """Nearest-neighbor resize to (size × size), re-encoded as PNG.
-    Arrow-batched pandas UDF; output replaces w/h/fmt accordingly."""
+    Arrow-batched pandas UDF; output replaces bytes/w/h/fmt."""
 
-    @F.pandas_udf(_RESIZE_SCHEMA)
-    def _resize(data: pd.Series, fmt: pd.Series) -> pd.DataFrame:
-        outs, ws, hs = [], [], []
-        for b, f in zip(data, fmt):
-            arr = decode_image(bytes(b), f)
-            ys = (np.arange(size) * arr.shape[0]) // size
-            xs = (np.arange(size) * arr.shape[1]) // size
-            out = arr[np.ix_(ys, xs)]
-            outs.append(encode_png(out))
-            ws.append(size)
-            hs.append(size)
-        return pd.DataFrame({"out_bytes": outs, "out_w": ws, "out_h": hs})
+    def resize(data: bytes, fmt: str) -> tuple:
+        arr = decode_image(data, fmt)
+        ys = (np.arange(size) * arr.shape[0]) // size
+        xs = (np.arange(size) * arr.shape[1]) // size
+        return encode_png(arr[np.ix_(ys, xs)]), size, size
 
-    r = df.withColumn("_r", _resize(F.col(bytes_col), F.col("fmt")))
-    return (
-        r.withColumn("bytes", F.col("_r.out_bytes"))
-        .withColumn("w", F.col("_r.out_w"))
-        .withColumn("h", F.col("_r.out_h"))
-        .withColumn("fmt", F.lit("png"))
-        .drop("_r")
-    )
+    out = with_payload_columns(df, resize, _RESIZE_SCHEMA)
+    return out.withColumn("fmt", F.lit("png"))
 
 
 _AUGMENT_SCHEMA = T.StructType(
     [
-        T.StructField("out_bytes", T.BinaryType()),
-        T.StructField("out_w", T.IntegerType()),
-        T.StructField("out_h", T.IntegerType()),
-        T.StructField("out_phash", T.LongType()),
+        T.StructField("bytes", T.BinaryType()),
+        T.StructField("w", T.IntegerType()),
+        T.StructField("h", T.IntegerType()),
+        T.StructField("phash", T.LongType()),
     ]
 )
 
 
 def augment_images(
-    df: DataFrame,
-    crop_frac: float = 0.875,
-    hflip: bool = True,
-    bytes_col: str = "bytes",
+    df: DataFrame, crop_frac: float = 0.875, hflip: bool = True
 ) -> DataFrame:
     """Deterministic train-time augmentation: center crop to
     ``crop_frac`` of each side, optional horizontal flip, re-encode PNG,
@@ -430,38 +359,21 @@ def augment_images(
     ``resize_images``, same plan shape (payload never shuffles; the UDF
     runs straight off the scan). Deterministic by construction: no RNG,
     so re-runs and resumed partitions produce identical bytes."""
-    from query_cost_feature_engineering_spark.codecs import phash64
 
-    @F.pandas_udf(_AUGMENT_SCHEMA)
-    def _augment(data: pd.Series, fmt: pd.Series) -> pd.DataFrame:
-        outs, ws, hs, phs = [], [], [], []
-        for b, f in zip(data, fmt):
-            arr = decode_image(bytes(b), f)
-            h, w = arr.shape[0], arr.shape[1]
-            ch = max(int(h * crop_frac), 1)
-            cw = max(int(w * crop_frac), 1)
-            y0 = (h - ch) // 2
-            x0 = (w - cw) // 2
-            out = arr[y0 : y0 + ch, x0 : x0 + cw]
-            if hflip:
-                out = out[:, ::-1]
-            outs.append(encode_png(np.ascontiguousarray(out)))
-            ws.append(cw)
-            hs.append(ch)
-            phs.append(phash64(out))
-        return pd.DataFrame(
-            {"out_bytes": outs, "out_w": ws, "out_h": hs, "out_phash": phs}
-        )
+    def augment(data: bytes, fmt: str) -> tuple:
+        arr = decode_image(data, fmt)
+        h, w = arr.shape[0], arr.shape[1]
+        ch = max(int(h * crop_frac), 1)
+        cw = max(int(w * crop_frac), 1)
+        y0 = (h - ch) // 2
+        x0 = (w - cw) // 2
+        out = arr[y0 : y0 + ch, x0 : x0 + cw]
+        if hflip:
+            out = out[:, ::-1]
+        return encode_png(np.ascontiguousarray(out)), cw, ch, phash64(out)
 
-    r = df.withColumn("_a", _augment(F.col(bytes_col), F.col("fmt")))
-    return (
-        r.withColumn("bytes", F.col("_a.out_bytes"))
-        .withColumn("w", F.col("_a.out_w"))
-        .withColumn("h", F.col("_a.out_h"))
-        .withColumn("phash", F.col("_a.out_phash"))
-        .withColumn("fmt", F.lit("png"))
-        .drop("_a")
-    )
+    out = with_payload_columns(df, augment, _AUGMENT_SCHEMA)
+    return out.withColumn("fmt", F.lit("png"))
 
 
 # --- video frame sampling (stubbed decode, real plumbing) -------------------
@@ -477,12 +389,7 @@ FRAME_SCHEMA = T.StructType(
 )
 
 
-def sample_video_frames(
-    df: DataFrame,
-    every_k: int = 5,
-    id_col: str = "media_id",
-    bytes_col: str = "bytes",
-) -> DataFrame:
+def sample_video_frames(df: DataFrame, every_k: int = 5) -> DataFrame:
     """Explode each video row into one row per sampled frame (every k-th),
     via ``mapInPandas`` (1→N row fan-out needs mapInPandas, not a scalar
     UDF). Decode dispatches on magic bytes: REAL uncompressed-DIB AVI
@@ -492,7 +399,7 @@ def sample_video_frames(
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows: list[dict] = []
-            for mid, data in zip(pdf[id_col], pdf[bytes_col]):
+            for mid, data in zip(pdf["media_id"], pdf["bytes"]):
                 frames = decode_video(bytes(data))  # (n, h, w, 3) RGB
                 n = frames.shape[0]
                 for i in range(0, n, every_k):
@@ -510,7 +417,7 @@ def sample_video_frames(
                 rows, columns=[f.name for f in FRAME_SCHEMA.fields]
             )
 
-    return df.select(id_col, bytes_col).mapInPandas(gen, FRAME_SCHEMA)
+    return df.select("media_id", "bytes").mapInPandas(gen, FRAME_SCHEMA)
 
 
 _FRAME_DEDUP_SCHEMA = T.StructType(
@@ -525,12 +432,7 @@ _FRAME_DEDUP_SCHEMA = T.StructType(
 )
 
 
-def dedup_video_frames(
-    df: DataFrame,
-    tau: int = 6,
-    id_col: str = "media_id",
-    bytes_col: str = "bytes",
-) -> DataFrame:
+def dedup_video_frames(df: DataFrame, tau: int = 6) -> DataFrame:
     """Within-video duplicate-frame removal — the static-scene /
     dup-frame pass video training pipelines run before frame sampling:
     per video, phash every frame and drop frames within Hamming
@@ -552,7 +454,7 @@ def dedup_video_frames(
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows: list[dict] = []
-            for mid, data in zip(pdf[id_col], pdf[bytes_col]):
+            for mid, data in zip(pdf["media_id"], pdf["bytes"]):
                 frames = decode_video(bytes(data))
                 n = frames.shape[0]
                 last_kept: int | None = None
@@ -580,7 +482,7 @@ def dedup_video_frames(
                 rows, columns=[f.name for f in _FRAME_DEDUP_SCHEMA.fields]
             )
 
-    return df.select(id_col, bytes_col).mapInPandas(
+    return df.select("media_id", "bytes").mapInPandas(
         gen, _FRAME_DEDUP_SCHEMA
     )
 
@@ -598,33 +500,21 @@ _AUDIO_SCHEMA = T.StructType(
 )
 
 
-def with_audio_features(df: DataFrame, bytes_col: str = "bytes") -> DataFrame:
+def _audio_features_row(data: bytes) -> tuple:
+    pcm, rate = decode_audio(data)
+    n = len(pcm)
+    rms = float(np.sqrt(np.mean(pcm.astype(np.float64) ** 2))) if n else 0.0
+    zc = int(np.sum(np.abs(np.diff(np.signbit(pcm))))) if n > 1 else 0
+    return (n, rate, n / rate, rms, zc)
+
+
+def with_audio_features(df: DataFrame) -> DataFrame:
     """Scalar struct pandas UDF: PCM stats per clip. Decode is REAL for
     RIFF/PCM16 WAV (stdlib parser) and falls back to the FAUD stub for
     the synthetic container (``decode_audio`` dispatch)."""
-
-    @F.pandas_udf(_AUDIO_SCHEMA)
-    def _afeat(data: pd.Series) -> pd.DataFrame:
-        rows = []
-        for b in data:
-            pcm, rate = decode_audio(bytes(b))
-            x = pcm.astype(np.float64)
-            rows.append(
-                {
-                    "n_samples": len(pcm),
-                    "sample_rate": rate,
-                    "duration_s": len(pcm) / rate,
-                    "rms": float(np.sqrt(np.mean(x**2))) if len(pcm) else 0.0,
-                    "zero_crossings": int(np.sum(np.abs(np.diff(np.signbit(pcm)))))
-                    if len(pcm) > 1
-                    else 0,
-                }
-            )
-        return pd.DataFrame(rows)
-
-    r = df.withColumn("_a", _afeat(F.col(bytes_col)))
-    out_cols = [f.name for f in _AUDIO_SCHEMA.fields]
-    return r.withColumns({c: F.col(f"_a.{c}") for c in out_cols}).drop("_a")
+    return with_payload_columns(
+        df, _audio_features_row, _AUDIO_SCHEMA, inputs=("bytes",)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -663,42 +553,35 @@ def _band_energies(frame: np.ndarray) -> tuple[int, int, int, int]:
     return e0, e1, e2, e3
 
 
+def _audio_fp_row(data: bytes) -> tuple:
+    pcm, _rate = decode_audio(data)
+    x = (pcm[:, 0] if pcm.ndim == 2 else pcm).astype(np.int64)
+    n_frames = 0 if len(x) < FP_WIN else (len(x) - FP_WIN) // FP_HOP + 1
+    take = min(n_frames, FP_DELTAS + 1)
+    E = [
+        _band_energies(x[f * FP_HOP : f * FP_HOP + FP_WIN])
+        for f in range(take)
+    ]
+    v = 0
+    for f in range(FP_DELTAS):
+        if f + 1 >= take:
+            break
+        for band in range(FP_BANDS):
+            if E[f][band] > E[f + 1][band]:
+                v |= 1 << (63 - (f * FP_BANDS + band))
+    if v >= 1 << 63:
+        v -= 1 << 64
+    return (v, n_frames)
+
+
 def audio_fingerprint_pandas(data: pd.Series) -> pd.DataFrame:
     """Spark-side fingerprint core (numpy reshape/sum reductions)."""
-    fps = np.empty(len(data), dtype=np.int64)
-    nfs = np.empty(len(data), dtype=np.int64)
-    for i, b in enumerate(data):
-        pcm, _rate = decode_audio(bytes(b))
-        x = (pcm[:, 0] if pcm.ndim == 2 else pcm).astype(np.int64)
-        n_frames = 0 if len(x) < FP_WIN else (len(x) - FP_WIN) // FP_HOP + 1
-        take = min(n_frames, FP_DELTAS + 1)
-        E = [
-            _band_energies(x[f * FP_HOP : f * FP_HOP + FP_WIN])
-            for f in range(take)
-        ]
-        v = 0
-        for f in range(FP_DELTAS):
-            if f + 1 >= take:
-                break
-            for band in range(FP_BANDS):
-                if E[f][band] > E[f + 1][band]:
-                    v |= 1 << (63 - (f * FP_BANDS + band))
-        if v >= 1 << 63:
-            v -= 1 << 64
-        fps[i] = v
-        nfs[i] = n_frames
-    return pd.DataFrame({"fingerprint": fps, "n_frames": nfs})
+    return payload_frame(_audio_fp_row, _FP_SCHEMA, data)
 
 
-@F.pandas_udf(_FP_SCHEMA)
-def _audio_fp_udf(data: pd.Series) -> pd.DataFrame:
-    return audio_fingerprint_pandas(data)
-
-
-def with_audio_fingerprint(df: DataFrame, bytes_col: str = "bytes") -> DataFrame:
+def with_audio_fingerprint(df: DataFrame) -> DataFrame:
     """Append (fingerprint, n_frames); DROPS the payload column so the
     dedup shuffle moves 16-byte rows, never audio bytes."""
-    r = df.withColumn("_fp", _audio_fp_udf(F.col(bytes_col)))
-    return r.withColumns(
-        {"fingerprint": F.col("_fp.fingerprint"), "n_frames": F.col("_fp.n_frames")}
-    ).drop("_fp", bytes_col)
+    return with_payload_columns(
+        df, _audio_fp_row, _FP_SCHEMA, inputs=("bytes",), drop_payload=True
+    )

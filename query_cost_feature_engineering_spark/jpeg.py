@@ -1,7 +1,7 @@
 """Baseline JPEG (ITU-T T.81 / JFIF) codec in pure NumPy + stdlib.
 
 Closes the "compressed media codecs are environmental" gap for JPEG:
-no codec library exists in this container, but baseline sequential
+no codec library is used, because baseline sequential
 JPEG is a published public specification (ITU-T Recommendation T.81,
 1992; tables below are Annex K's example tables, the de-facto
 standard ones every encoder ships). The encoder emits spec-conformant
@@ -11,8 +11,8 @@ reads; the decoder parses baseline-sequential streams (8-bit, 4:4:4 /
 4:2:0 / 4:2:2, restart intervals) and dispatches SOF2 to the full
 progressive decoder in jpeg_progressive.py; arithmetic coding and
 hierarchical/lossless modes raise NotImplementedError rather than
-guessing. An interop test against Pillow runs whenever PIL is present
-(import-probed; skipped in this container).
+guessing. An interop test against Pillow skips itself when Pillow is
+not installed.
 
 Scale note: encode/decode are per-image kernels called inside
 Arrow-batched UDFs — the DCT/IDCT and color transforms are vectorized
@@ -134,20 +134,6 @@ def _huff_encode_table(bits: list[int], vals: list[int]) -> dict[int, tuple[int,
     for ln in range(1, 17):
         for _ in range(bits[ln - 1]):
             out[vals[k]] = (code, ln)
-            code += 1
-            k += 1
-        code <<= 1
-    return out
-
-
-def _huff_decode_table(bits: list[int], vals: list[int]) -> dict[tuple[int, int], int]:
-    """(length, code) -> symbol (kept as the readable reference form;
-    the decoder uses the LUT below)."""
-    out: dict[tuple[int, int], int] = {}
-    code, k = 0, 0
-    for ln in range(1, 17):
-        for _ in range(bits[ln - 1]):
-            out[(ln, code)] = vals[k]
             code += 1
             k += 1
         code <<= 1

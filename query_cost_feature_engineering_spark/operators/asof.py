@@ -3,8 +3,11 @@
 Spark has no built-in as-of join (SURVEY.md §2.B), so two strategies:
 
 1. ``asof_join_union_window`` — pure DataFrame plan: tag right rows 0 /
-   left rows 1, union, and per entity take ``last(value, ignorenulls=True)``
-   over ``orderBy(ts, side, tiebreak).rowsBetween(unboundedPreceding, 0)``.
+   left rows 1, union, and per entity take ``last(row, ignorenulls=True)``
+   over ``orderBy(ts, side, tiebreak).rowsBetween(unboundedPreceding, 0)``,
+   where ``row`` is one non-null struct of a right row's values (so a
+   NULL value in the matched row stays NULL; it is never filled from an
+   older row).
    One shuffle on the entity key, whole-stage codegen, ANSI-SQL
    expressible (DuckDB ``ASOF JOIN`` verifies it). Per-entity work is
    single-partition, so a pathologically hot entity serializes — fine up
@@ -91,7 +94,7 @@ def asof_join_union_window(
         F.col(on),
         F.lit(r_side).alias("_side"),
         tb.cast("string").alias("_tb"),
-        *[F.col(c).alias(f"_v_{c}") for c in value_cols],
+        F.struct(*value_cols).alias("_v"),
         *[F.lit(None).cast(left.schema[c].dataType).alias(f"_l_{c}") for c in lcols],
     )
     lt = left.select(
@@ -99,10 +102,7 @@ def asof_join_union_window(
         F.col(on),
         F.lit(l_side).alias("_side"),
         F.lit(None).cast("string").alias("_tb"),
-        *[
-            F.lit(None).cast(right.schema[c].dataType).alias(f"_v_{c}")
-            for c in value_cols
-        ],
+        F.lit(None).cast(r.schema["_v"].dataType).alias("_v"),
         *[F.col(c).alias(f"_l_{c}") for c in lcols],
     )
     u = r.unionByName(lt)
@@ -111,11 +111,10 @@ def asof_join_union_window(
         .orderBy(F.col(on), F.col("_side"), F.col("_tb"))
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    for c in value_cols:
-        u = u.withColumn(f"_v_{c}", F.last(f"_v_{c}", ignorenulls=True).over(w))
+    u = u.withColumn("_v", F.last("_v", ignorenulls=True).over(w))
     out = u.filter(F.col("_side") == F.lit(l_side)).select(
         *[F.col(f"_l_{c}").alias(c) for c in lcols],
-        *[F.col(f"_v_{c}").alias(c) for c in value_cols],
+        *[F.col("_v").getField(c).alias(c) for c in value_cols],
     )
     return out
 

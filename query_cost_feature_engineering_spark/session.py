@@ -28,6 +28,14 @@ def package_zip(out: str | None = None) -> str:
     return out
 
 
+def _default_driver_mem() -> str:
+    """Half the host's RAM, at most 48g. Local mode runs every task in
+    the driver JVM, and a heap larger than RAM lets it grow until the
+    OS kills it (a 48g heap on a 16 GB host dies mid test-suite)."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48, max(1, ram // 2**31))}g"
+
+
 def get_spark(
     app: str = "qcfe-spark",
     master: str | None = None,
@@ -57,7 +65,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # DSv2-python filter pushdown (sources/snapshot_source.py): lets

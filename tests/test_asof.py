@@ -140,6 +140,47 @@ def test_duplicate_ts_tie_takes_last_by_tiebreak(spark):
         assert got["px"].tolist() == [2.0, 3.0], fn.__name__
 
 
+@pytest.mark.parametrize("exact", [True, False], ids=["exact", "strict"])
+def test_null_value_in_matched_row_is_not_filled(spark, exact):
+    """The matched right row's NULL value comes back NULL in both
+    strategies; it is not filled in from an older right row."""
+    t0 = pd.Timestamp("2024-01-01")
+    right = pd.DataFrame(
+        {
+            "entity_id": [1, 1],
+            "ts": [t0, t0 + pd.Timedelta(minutes=10)],
+            "px": [5.0, None],
+            "image_id": ["a", "b"],
+        }
+    )
+    spine = pd.DataFrame(
+        {
+            "entity_id": [1, 1],
+            "ts": [t0 + pd.Timedelta(minutes=20), t0 + pd.Timedelta(minutes=10)],
+            "probe_id": [0, 1],
+        }
+    )
+    want = (
+        pd.merge_asof(
+            spine.sort_values("ts"), right, on="ts", by="entity_id",
+            allow_exact_matches=exact,
+        )
+        .sort_values("probe_id")
+        .reset_index(drop=True)
+    )
+    assert want["px"].isna().iloc[0] and want["image_id"].iloc[0] == "b"
+    for fn, kw in [
+        (asof_join_union_window, {}),
+        (asof_join_pandas_merge, {"num_buckets": 2}),
+    ]:
+        got = fn(
+            spark.createDataFrame(spine), spark.createDataFrame(right),
+            value_cols=VALUE_COLS, tiebreak="image_id",
+            allow_exact_matches=exact, **kw,
+        ).toPandas()
+        _check(got, want)
+
+
 def test_auto_threshold_hot_path_boundary(spark):
     """No ``hot_threshold``: the automatic rule (strictly more than
     ``max(10_000, total // num_buckets * 2)`` rows) makes the entity with

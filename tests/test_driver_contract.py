@@ -77,3 +77,15 @@ def test_driver_sample_window_fully_oracled():
     # and every oracle key actually maps to a registered query
     dangling = [k for k in ORACLES if k not in REGISTRY]
     assert dangling == []
+
+
+def test_bench_exclusions_name_registry_entries():
+    """bench.py times REGISTRY minus EXCLUDED. Every excluded name must
+    be a registered query: after a rename the old name would linger here
+    while the query joins the timed set under its new one."""
+    import bench
+    from query_cost_feature_engineering_spark.queries import REGISTRY
+
+    assert len(set(bench.EXCLUDED)) == len(bench.EXCLUDED)
+    assert [n for n in bench.EXCLUDED if n not in REGISTRY] == []
+    assert set(bench.HEADLINE) == set(REGISTRY) - set(bench.EXCLUDED)
