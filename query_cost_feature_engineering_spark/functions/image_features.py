@@ -88,22 +88,22 @@ def with_image_features(df: DataFrame, on_error: str = "fail") -> DataFrame:
 
 
 def with_basics(df: DataFrame) -> DataFrame:
-    """[w, h, nbytes] + format one-hot — all JVM-side expressions."""
-    cols = {"nbytes": F.length(F.col("bytes")).cast("double")}
-    for f in FMTS:
-        cols[f"fmt_{f}"] = F.when(F.col("fmt") == f, 1.0).otherwise(0.0)
-    return df.withColumns(cols)
+    """[w, h, nbytes] + format one-hot — one JVM-side projection."""
+    return df.selectExpr(
+        "*",
+        "CAST(length(`bytes`) AS DOUBLE) AS nbytes",
+        *[f"IF(`fmt` = '{f}', 1.0D, 0.0D) AS `fmt_{f}`" for f in FMTS],
+    )
 
 
 def with_phash_bits(df: DataFrame) -> DataFrame:
     """Unpack the 64-bit perceptual hash into bit columns JVM-side."""
-    return df.withColumns(
-        {
-            f"ph_{i}": F.shiftright(F.col("phash"), 63 - i)
-            .bitwiseAND(F.lit(1))
-            .cast("double")
+    return df.selectExpr(
+        "*",
+        *[
+            f"CAST(shiftright(`phash`, {63 - i}) & 1 AS DOUBLE) AS `ph_{i}`"
             for i in range(64)
-        }
+        ],
     )
 
 

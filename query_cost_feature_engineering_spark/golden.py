@@ -8,6 +8,8 @@ entity × timestamp). Mirrors the role of the reference's vectorizers
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pandas as pd
 
@@ -15,8 +17,14 @@ from query_cost_feature_engineering_spark.functions.image_features import (
     decode_stats_pandas,
     phash_bits_pandas,
 )
+from query_cost_feature_engineering_spark.functions.text import WS_RE
 from query_cost_feature_engineering_spark.operators.windows import SESSION_GAP_S
 from query_cost_feature_engineering_spark.sources.images import VOCAB
+
+
+def caption_tokens(caption: str) -> list[str]:
+    """The non-empty pieces between ``WS_RE`` runs, as the engine splits."""
+    return [t for t in re.split(WS_RE, caption) if t]
 
 
 def golden_features(images: pd.DataFrame) -> pd.DataFrame:
@@ -29,7 +37,7 @@ def golden_features(images: pd.DataFrame) -> pd.DataFrame:
     df = pd.concat([df.reset_index(drop=True), px], axis=1)
     df = pd.concat([df, phash_bits_pandas(df["phash"])], axis=1)
 
-    toks = df["caption"].str.split()
+    toks = df["caption"].map(caption_tokens)
     df["token_count"] = toks.map(len).astype(float)
     for w in VOCAB:
         df[f"tok_{w}"] = toks.map(lambda t, w=w: float(sum(x == w for x in t)))
@@ -90,8 +98,7 @@ def ensure_stream_features_fixture(
             "ts": imgs["ts"],
             "fmt": imgs["fmt"].astype(str),
             "token_count": imgs["caption"]
-            .str.split()
-            .map(len)
+            .map(lambda c: len(caption_tokens(c)))
             .astype("int64"),
             "px_mean": px["px_mean"].to_numpy(dtype=np.float64),
             "nbytes": imgs["bytes"].map(len).astype("float64"),

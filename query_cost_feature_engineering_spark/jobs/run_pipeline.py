@@ -78,6 +78,7 @@ def main(argv: list[str] | None = None) -> dict:
     spark = get_spark(app="qcfe-pipeline", master=args.master)
     t0 = time.perf_counter()
     df = build_features(spark, args.input, args.spine)
+    plan_s = time.perf_counter() - t0  # driver: plan (+ as-of skew probe)
     inputs = [args.input] + ([args.spine] if args.spine else [])
     res = write_resumable(
         df,
@@ -86,6 +87,7 @@ def main(argv: list[str] | None = None) -> dict:
         n_buckets=args.buckets,
         input_paths=inputs,
     )
+    res["plan_s"] = round(plan_s, 3)
     res["wall_s"] = round(time.perf_counter() - t0, 3)
     print(json.dumps(res))
     return res

@@ -11,6 +11,10 @@ as one declarative Spark plan:
     → Window layer: lag/lead, ffill backfill, rolling mean, sessionize
     → assemble fixed-width feature vector (array<double>, FIXTURES.md F3)
 
+Each wide JVM-side layer (basics, phash bits, caption tokens, vector) is
+ONE projection from SQL expression text, not a Python ``Column`` chain per
+feature: each ``Column`` link costs driver-side py4j round trips.
+
 The vector layout (FEATURE_ORDER) is the engine's equivalent of the
 reference's per-operator fixed-width layout ``tpch_dim_dict``
 (tpch_utils_knob.py:27-52): basics ⧺ one-hots ⧺ stats ⧺ identity bits ⧺
@@ -85,15 +89,8 @@ def compute_features(images: DataFrame) -> DataFrame:
 
 def assemble_vector(df: DataFrame, out_col: str = "features") -> DataFrame:
     """Pack FEATURE_ORDER into one array<double>; nulls (warm-up lags) → 0."""
-    return df.withColumn(
-        out_col,
-        F.array(
-            *[
-                F.coalesce(F.col(c).cast("double"), F.lit(0.0))
-                for c in FEATURE_ORDER
-            ]
-        ),
-    )
+    slots = ", ".join(f"coalesce(CAST(`{c}` AS DOUBLE), 0.0D)" for c in FEATURE_ORDER)
+    return df.withColumn(out_col, F.expr(f"array({slots})"))
 
 
 __all__ = [

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from query_cost_feature_engineering_spark.functions.text import WS_RE
 from query_cost_feature_engineering_spark.operators.asof import (
     asof_join_pandas_merge,
     asof_join_union_window,
@@ -2747,9 +2748,6 @@ C4_BOILER = [
 
 
 HTML_MIN_MAIN_CHARS = 40  # extraction gate: pages with less main text drop
-# whitespace run, spelled out: Java's \s matches \x0B and RE2's (the
-# DuckDB oracle's engine) does not, so \s+ would disagree on that byte
-HTML_WS_RE = "[ \\t\\n\\r\\f\\x0B]+"
 
 
 def html_extract_docs(spark, sf_dir):
@@ -2802,8 +2800,8 @@ def html_extract_docs(spark, sf_dir):
         "<[^>]*>",
     ):
         main = F.regexp_replace(main, pat, " ")
-    main = F.trim(F.regexp_replace(main, HTML_WS_RE, " "))
-    norm = F.trim(F.regexp_replace(F.col("text"), HTML_WS_RE, " "))
+    main = F.trim(F.regexp_replace(main, WS_RE, " "))
+    norm = F.trim(F.regexp_replace(F.col("text"), WS_RE, " "))
     d = d.select(
         "doc_id",
         F.length("html").cast("long").alias("html_len"),

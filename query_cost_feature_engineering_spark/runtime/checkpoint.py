@@ -34,6 +34,7 @@ import os
 import time
 from pathlib import Path
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -133,25 +134,15 @@ def write_resumable(
     )
     wall = time.perf_counter() - t0
 
-    # per-partition metrics from the files just written (parquet footer
-    # counts — no second pass over input data)
-    counts = {
-        r["part_id"]: r["cnt"]
-        for r in spark.read.parquet(out_dir)
-        .filter(F.col("part_id").isin(todo))
-        .groupBy("part_id")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    }
+    # per-partition metrics from the just-written footers: no second job
     for p in todo:
-        pdir = Path(out_dir) / f"part_id={p}"
-        nbytes = sum(f.stat().st_size for f in pdir.glob("*.parquet")) if pdir.is_dir() else 0
+        files = list((Path(out_dir) / f"part_id={p}").glob("*.parquet"))
         _commit_manifest(
             out_dir,
             {
                 "partition": p,
-                "rows": int(counts.get(p, 0)),
-                "bytes": nbytes,
+                "rows": sum(pq.ParquetFile(f).metadata.num_rows for f in files),
+                "bytes": sum(f.stat().st_size for f in files),
                 "input_fingerprint": fp,
                 "input_paths": sorted(input_paths or []),
                 "bucket_col": bucket_col,

@@ -1,16 +1,25 @@
 """Spark plan vs single-process golden oracle — numpy.allclose per
-(entity_id, ts, image_id), the FIXTURES.md F3 contract."""
+(entity_id, ts, image_id), exact on integer-valued columns; the
+FIXTURES.md F3 contract."""
 
 import numpy as np
 
+from query_cost_feature_engineering_spark.functions.text import (
+    with_caption_features,
+)
 from query_cost_feature_engineering_spark.golden import golden_features
 from query_cost_feature_engineering_spark.plans.pipeline import (
     FEATURE_ORDER,
     assemble_vector,
     compute_features,
 )
+from query_cost_feature_engineering_spark.sources.images import VOCAB
 
 KEY = ["entity_id", "ts", "image_id"]
+# integer-valued columns the JVM computes without a UDF: no rounding to forgive
+EXACT_COLS = {"nbytes", "fmt_png", "fmt_jpeg", "token_count"} | {
+    c for c in FEATURE_ORDER if c.startswith(("ph_", "tok_"))
+}
 
 
 def test_feature_parity_allclose(spark, images_pdf, images_sdf):
@@ -28,7 +37,10 @@ def test_feature_parity_allclose(spark, images_pdf, images_sdf):
     for c in FEATURE_ORDER:
         g = got[c].to_numpy(dtype=np.float64)
         w = want[c].to_numpy(dtype=np.float64)
-        assert np.allclose(g, w, rtol=1e-5, atol=1e-9, equal_nan=True), c
+        if c in EXACT_COLS:
+            assert np.array_equal(g, w), c
+        else:
+            assert np.allclose(g, w, rtol=1e-5, atol=1e-9, equal_nan=True), c
 
 
 def test_vector_assembly_width_and_nulls(spark, images_sdf):
@@ -50,3 +62,63 @@ def test_caption_exact_equality(spark, images_pdf, images_sdf):
         drop=True
     )
     assert (got["caption"] == want["caption"]).all()
+
+
+# leading/trailing/only whitespace, a non-breaking space (not a separator:
+# str.split() splits on it, Java's \s does not) and the spelled-out class
+EDGE_CAPTIONS = [
+    " aurora basin", "aurora basin ", "", "aurora\xa0basin",
+    "aurora \t\n\r\f\x0bbasin  aurora", "   ",
+]
+
+
+def test_caption_tokenizer_matches_golden_on_edges(spark, images_pdf):
+    pdf = images_pdf.head(len(EDGE_CAPTIONS)).copy()
+    pdf["caption"] = EDGE_CAPTIONS
+    cols = ["image_id", "token_count"] + [f"tok_{w}" for w in VOCAB]
+    got = (
+        with_caption_features(spark.createDataFrame(pdf).drop("bytes"))
+        .select(*cols)
+        .toPandas()
+        .sort_values("image_id")
+        .reset_index(drop=True)
+    )
+    want = golden_features(pdf).sort_values("image_id").reset_index(drop=True)
+    counts = dict(zip(pdf["image_id"], [2, 2, 0, 1, 3, 0]))
+    assert list(got["token_count"]) == [counts[i] for i in got["image_id"]]
+    for c in cols[1:]:
+        assert np.array_equal(got[c], want[c].astype(float)), c
+
+
+def _py4j_commands(build) -> int:
+    from py4j.clientserver import ClientServerConnection
+
+    orig = ClientServerConnection.send_command
+    n = 0
+
+    def counting(self, command):
+        nonlocal n
+        n += 1
+        return orig(self, command)
+
+    ClientServerConnection.send_command = counting
+    try:
+        build()
+    finally:
+        ClientServerConnection.send_command = orig
+    return n
+
+
+def test_plan_construction_py4j_budget(spark, images_sdf):
+    # wide layers are single SQL-text projections; with one Column chain
+    # per feature the batch plan alone sent ~14,700 commands
+    from query_cost_feature_engineering_spark.streaming.images import (
+        image_features_stream,
+    )
+
+    n_batch = _py4j_commands(
+        lambda: assemble_vector(compute_features(images_sdf))
+    )
+    n_stream = _py4j_commands(lambda: image_features_stream(images_sdf))
+    assert n_batch < 2000, n_batch
+    assert n_stream < 2000, n_stream

@@ -5,6 +5,7 @@ AND python workers, which unpickle the decode UDF)."""
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import subprocess
@@ -64,6 +65,9 @@ def test_spark_submit_with_pyfiles_zip_only(spark, tmp_path):
         timeout=420,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
+    # the job record splits driver plan time from the whole run
+    rec = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert 0 <= rec["plan_s"] <= rec["wall_s"]
 
     # output exists with all rows, and the resumable manifests are there
     import pyarrow.dataset as ds
