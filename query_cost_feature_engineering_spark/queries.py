@@ -5085,7 +5085,7 @@ def stream_image_curation(spark, sf_dir):
 def stream_upsert_events(spark, sf_dir):
     """Streaming CDC upsert: the events table split into three change
     files, drained one per micro-batch through `streaming/upsert` into a
-    snapshot table — per-batch copy-on-write MERGE with the Delta
+    snapshot table — per-batch merge-on-read MERGE with the Delta
     txnAppId/txnVersion idempotence stamp, so a crash-replayed batch is
     skipped (pinned in tests/test_streaming.py). The converged table is
     "latest event per user" (seq = the unique event_id), which is the
@@ -5273,22 +5273,24 @@ def merge_upsert_orders(spark, sf_dir):
 
     The north-rule input is an Iceberg table; `runtime/snapshots.py` is
     the raw-parquet substitute (COVERAGE.md), and this query drives its
-    full copy-on-write commit path the way an incremental ingest would:
+    full merge-on-read commit path the way an incremental ingest would:
     (1) commit a base snapshot of orders missing every 32nd key and with
     keys ≡1 (mod 32) at their original price; (2) MERGE a source batch
     that doubles the price of the ≡1 keys (update) and restores the ≡0
     keys (insert); (3) read the CURRENT version and LEFT-join the
     time-traveled base version to emit old-vs-new prices per key.
 
-    Plan shape (10^12-row safe): the merge's affected-file discovery is
-    one key-column semi-join grouped by input_file_name (payload columns
-    pruned from the scan); only files containing matched keys are
-    rewritten — the base is range-partitioned on the key so the ~1/31
-    matched keys touch every file here, but the carried/rewritten split
-    is exactly Iceberg's copy-on-write contract (pinned byte-identical in
-    tests/test_snapshots.py). The final old-vs-new join is a plain
-    shuffle join on the key. Oracle: the merge result is SQL-expressible
-    as src ∪ (base ⋉̸ src) — see oracles.py."""
+    Plan shape (10^12-row safe): the merge's hit discovery is one
+    key-column semi-join against the broadcast source keys that also
+    reads each row's file and row index (payload columns pruned from the
+    scan); the matched rows' positions become one position-delete file
+    and the source one new data file, so every base file is carried
+    byte-identical (pinned in tests/test_snapshots.py) even though the
+    ~1/31 matched keys touch every range file here. Reading the current
+    version anti-joins the deleted positions as a broadcast local
+    relation. The final old-vs-new join is a plain shuffle join on the
+    key. Oracle: the merge result is SQL-expressible as
+    src ∪ (base ⋉̸ src) — see oracles.py."""
     import tempfile
 
     from query_cost_feature_engineering_spark.runtime import snapshots as S

@@ -16,8 +16,11 @@ if nothing here imports the parent package — hence: stdlib only.
 Format (written by `runtime/snapshots.py`, the single writer):
 ``{table_dir}/_snapshots/v{NNNNNN}.json`` per commit + an atomic
 ``CURRENT`` pointer; each snapshot JSON lists relative data-file paths
-(Iceberg: manifest list) and per-file min/max/null_count column bounds
-(Iceberg: manifest-entry stats).
+(Iceberg: manifest list), per-file min/max/null_count column bounds
+(Iceberg: manifest-entry stats) and, under ``deletes``, the position-delete
+files that apply to each data file (Iceberg v2 position deletes: parquet
+files of ``(file_path, pos)`` rows, ``file_path`` table-relative, ``pos``
+the row index within that file).
 
 The reference has no analog — its storage layer is a directory of
 pickle dumps reread wholesale per run (tpch_utils_knob.py:283,333-351).
@@ -50,6 +53,27 @@ def snapshot_meta(table_dir: str, version: int | None = None) -> dict:
         raise FileNotFoundError(f"no snapshots in {table_dir}")
     p = _snap_path(table_dir) / f"v{v:06d}.json"
     return json.loads(p.read_text())
+
+
+def load_deletes(table_dir: str, meta: dict, files: list[str]):
+    """The snapshot's deleted ``(file_path, pos)`` rows for ``files``
+    (table-relative paths) as a pyarrow Table, or None when none of them
+    carries deletes. Reads only the delete files those data files
+    reference; pyarrow is imported here, not at module level, so this
+    module stays importable with the standard library alone."""
+    dels = meta.get("deletes", {})
+    wanted = [f for f in files if f in dels]
+    if not wanted:
+        return None
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    paths = sorted({d for f in wanted for d in dels[f]["files"]})
+    tbl = pa.concat_tables(
+        pq.read_table(str(Path(table_dir) / p)) for p in paths
+    )
+    return tbl.filter(pc.is_in(tbl["file_path"], value_set=pa.array(wanted)))
 
 
 def _stat_val(v):

@@ -1,4 +1,4 @@
-"""Snapshot-versioned parquet tables: time travel + copy-on-write commits.
+"""Snapshot-versioned parquet tables: time travel + merge-on-read commits.
 
 The north-star input is "an Iceberg table of image+caption pairs"; no
 Iceberg runtime jar is obtainable offline (COVERAGE.md), so this module
@@ -17,10 +17,15 @@ semantics, implemented over plain parquet files + JSON metadata:
   data write and the snapshot commit leaves only orphan files that
   ``expire_snapshots`` garbage-collects; the table stays readable at the
   previous version (pinned by test).
-- **Copy-on-write DELETE / MERGE** (Iceberg ``delete from`` /
-  ``MERGE INTO`` with write.delete.mode=copy-on-write): only the data
-  files that actually contain affected rows are rewritten; every other
-  file is carried into the new snapshot by reference, byte-identical.
+- **Merge-on-read DELETE / MERGE** (Iceberg v2 position deletes): a
+  commit never rewrites a data file. It writes one small position-delete
+  file of ``(file_path, pos)`` rows (``file_path`` table-relative,
+  ``pos`` the row index within that file) and, for MERGE, the new rows
+  as one new data file. Every existing data file is carried into the
+  new snapshot by reference, byte-identical. The snapshot JSON maps each
+  data file to the delete files that apply to it (``deletes``), and
+  readers drop those positions. ``compact_table`` folds deletes back
+  into rewritten files where that pays off.
 - **Manifest-level file pruning** (Iceberg: per-manifest-entry column
   bounds): every commit records per-file min/max/null_count from the
   new files' parquet footers (metadata-only; carried files keep the
@@ -33,15 +38,18 @@ semantics, implemented over plain parquet files + JSON metadata:
   commit pointing back at an old snapshot's files/schema/stats.
 
 Scale notes (the whole point of file-granular metadata at 10^12 rows):
-- Affected-file discovery is ONE Spark job — a semi-join of the target
-  against the (distinct, auto-broadcast when small) source keys, grouped
-  by ``input_file_name()``. Only the key columns are read (Catalyst
-  column pruning reaches the parquet scan), never the image bytes.
-- The rewrite job reads ONLY the affected files (`spark.read.parquet`
-  on the explicit file list — file-level pruning by construction), so a
-  merge touching k keys rewrites O(k) files out of millions.
-- The driver handles file LISTS only (metadata scale, same as an
-  Iceberg commit); no per-row driver work anywhere.
+- Hit discovery is ONE action: a scan of the target's key columns plus
+  ``_metadata.file_path`` / ``_metadata.row_index``, semi-joined to the
+  broadcast source keys. Only the key columns are read (Catalyst column
+  pruning reaches the parquet scan), never the image bytes. The hits are
+  collected: O(rows changed), like the source itself.
+- A merge writes O(rows changed) bytes — the source rows plus a delete
+  file of their old positions — whatever the size of the files holding
+  the old rows.
+- Reads of a snapshot without deletes build exactly the plain parquet
+  scan. With deletes, the positions are loaded on the driver (pyarrow,
+  only the delete files the kept data files reference) and broadcast as a
+  local relation; no Spark job runs while the plan is built.
 
 The reference has no analog — its "table" is a directory of pickle
 dumps rewritten wholesale per run (``tpch_utils_knob.py:283,333-351``).
@@ -49,11 +57,12 @@ dumps rewritten wholesale per run (``tpch_utils_knob.py:283,333-351``).
 
 from __future__ import annotations
 
-import datetime as _dt
 import json
+import math
 import os
 import shutil
 from pathlib import Path
+from urllib.parse import quote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -70,13 +79,22 @@ from query_cost_feature_engineering_spark.runtime.manifest import (  # noqa: F40
     _snap_path,
     _stat_val,
     current_version,
+    load_deletes,
     snapshot_meta,
 )
 
 _FILE_COL = "__qcfe_file"
+_POS_COL = "__qcfe_pos"
 
 # predicate ops read_table(where=...) / prune_files understand; AND-combined
 _PRUNE_OPS = ("=", "<", "<=", ">", ">=")
+
+# compact_table rewrites a data file once this share of its rows is deleted
+REWRITE_DELETED_SHARE = 0.3
+
+# path characters java.net.URI leaves unescaped, besides ASCII letters and
+# digits and printable non-ASCII characters
+_URI_SAFE = "/_-!.~'()*,;:$&+=@"
 
 
 def snapshot_log(table_dir: str) -> list[dict]:
@@ -115,13 +133,6 @@ def _commit(table_dir: str, rec: dict) -> None:
     cur_tmp = sdir / ".CURRENT.tmp"
     cur_tmp.write_text(str(rec["version"]))
     os.replace(cur_tmp, sdir / "CURRENT")
-
-
-def _data_files(table_dir: str, version: int | None = None) -> list[str]:
-    """Absolute paths of the snapshot's data files."""
-    meta = snapshot_meta(table_dir, version)
-    root = Path(table_dir)
-    return [str(root / rel) for rel in meta["files"]]
 
 
 def _collect_stats(
@@ -248,6 +259,68 @@ def prune_files(
     return kept, pruned
 
 
+def _file_uri(path) -> str:
+    """The URI Spark reports in ``_metadata.file_path`` for a local file:
+    ``file:`` and the absolute path, escaped as java.net.URI escapes a
+    path (a space or ``%`` is escaped; ``@``, ``+`` or ``ü`` is not)."""
+    return "file:" + "".join(
+        c if ord(c) > 127 and c.isprintable() and not c.isspace()
+        else quote(c, safe=_URI_SAFE)
+        for c in os.path.abspath(path)
+    )
+
+
+def _read(
+    spark: SparkSession, table_dir: str, meta: dict, files: list[str]
+) -> DataFrame:
+    """Stored rows of ``files`` (table-relative), deleted ones included,
+    under the snapshot's schema."""
+    schema = StructType.fromJson(json.loads(meta["schema"]))
+    root = Path(table_dir)
+    return spark.read.schema(schema).parquet(*[str(root / f) for f in files])
+
+
+def _with_positions(df: DataFrame) -> DataFrame:
+    """``df`` plus each row's file URI and row index (``_FILE_COL`` /
+    ``_POS_COL``), from the parquet scan's ``_metadata`` column."""
+    return df.select(
+        "*",
+        F.col("_metadata.file_path").alias(_FILE_COL),
+        F.col("_metadata.row_index").alias(_POS_COL),
+    )
+
+
+def _scan(
+    spark: SparkSession, table_dir: str, meta: dict, files: list[str]
+) -> DataFrame:
+    """Live rows of ``files`` (table-relative) under the snapshot schema.
+
+    Without deletes on those files this is the plain parquet scan. With
+    deletes, their positions are loaded on the driver and broadcast as a
+    local relation, left-anti-joined on ``_metadata.file_path`` /
+    ``_metadata.row_index``. Never read the delete files with a Spark
+    scan: the as-of read evaluates its input several times, and each
+    evaluation would launch one more job."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    df = _read(spark, table_dir, meta, files)
+    dels = load_deletes(table_dir, meta, files)
+    if dels is None:
+        return df
+    names = pc.unique(dels["file_path"])
+    uris = pa.array([_file_uri(Path(table_dir) / f) for f in names.to_pylist()])
+    idx = pc.index_in(dels["file_path"], value_set=names)
+    gone = spark.createDataFrame(
+        pa.table({_FILE_COL: uris.take(idx), _POS_COL: dels["pos"]})
+    )
+    return (
+        _with_positions(df)
+        .join(F.broadcast(gone), [_FILE_COL, _POS_COL], "left_anti")
+        .drop(_FILE_COL, _POS_COL)
+    )
+
+
 def read_table(
     spark: SparkSession,
     table_dir: str,
@@ -256,9 +329,10 @@ def read_table(
 ) -> DataFrame:
     """Read the table as of ``version`` (default: latest) — time travel.
 
-    Reads exactly the files the snapshot lists; files added by later
-    commits are invisible, files logically deleted later are still
-    readable (until ``expire_snapshots`` physically removes them).
+    Reads exactly the files the snapshot lists, minus the positions its
+    delete files name; files added by later commits are invisible, and
+    rows deleted later are still readable (until ``expire_snapshots``
+    physically removes the files).
 
     ``where``: optional list of ``(column, op, literal)`` with op in
     ``=,<,<=,>,>=`` (AND semantics). The file list is first pruned
@@ -266,21 +340,17 @@ def read_table(
     ``prune_files``), then the SAME predicates are applied as residual
     Spark filters — so results are exact regardless of how much the
     stats could prune, and parquet row-group pruning still applies
-    within the kept files."""
+    within the kept files. Deletes are loaded for the kept files only."""
     meta = snapshot_meta(table_dir, version)
-    schema = StructType.fromJson(json.loads(meta["schema"]))
-    if where:
-        kept, _ = prune_files(table_dir, where, version)
-        files = [str(Path(table_dir) / f) for f in kept]
-    else:
-        files = _data_files(table_dir, version)
+    files = prune_files(table_dir, where, version)[0] if where else meta["files"]
     if not files:
+        schema = StructType.fromJson(json.loads(meta["schema"]))
         return spark.createDataFrame([], schema)
     # read under the SNAPSHOT's schema, not a sampled footer: after an
     # additive schema evolution, files from older commits simply lack the
     # new columns and surface them as nulls — no mergeSchema footer sweep
     # (which reads every footer at planning time) needed
-    df = spark.read.schema(schema).parquet(*files)
+    df = _scan(spark, table_dir, meta, files)
     for col, op, val in where or []:
         c = F.col(col)
         df = df.filter(
@@ -378,6 +448,8 @@ def write_snapshot(
         "parent": parent,
         "operation": mode,
         "files": sorted(files),
+        # an append carries every parent file, so its deletes too
+        "deletes": parent_meta.get("deletes", {}) if keep else {},
         "schema": schema_json,
         "stats": _commit_stats(table_dir, parent_meta, keep, new_files),
         "summary": {"files_added": len(new_files)},
@@ -388,95 +460,114 @@ def write_snapshot(
     return rec
 
 
-def _affected_files(
-    tgt: DataFrame, probe: DataFrame, on: list[str]
-) -> list[str]:
-    """Files containing at least one row matching ``probe`` on ``on``.
+def _live_hits(table_dir: str, meta: dict, hits):
+    """Collected ``_FILE_COL`` / ``_POS_COL`` hits (pyarrow) with the URI
+    mapped to the table-relative ``file_path`` and the position as
+    ``pos``, minus the positions the snapshot already deletes."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    One job; only the key columns + input_file_name are read (the scan's
-    ReadSchema excludes payload columns); the probe side is distinct-ed
-    and small (matched keys), so AQE broadcasts it."""
-    hits = (
-        tgt.select(*on, F.input_file_name().alias(_FILE_COL))
-        .join(probe.select(*on).distinct(), on=on, how="leftsemi")
-        .select(_FILE_COL)
-        .distinct()
-        .collect()
+    root = Path(table_dir)
+    files = meta["files"]
+    idx = pc.index_in(
+        hits[_FILE_COL],
+        value_set=pa.array([_file_uri(root / f) for f in files], pa.string()),
     )
-    return sorted(r[_FILE_COL] for r in hits)
+    hits = (
+        hits.append_column("file_path", pa.array(files, pa.string()).take(idx))
+        .append_column("pos", hits[_POS_COL])
+        .drop_columns([_FILE_COL, _POS_COL])
+    )
+    dead = load_deletes(
+        table_dir, meta, pc.unique(hits["file_path"]).to_pylist()
+    )
+    if dead is None:
+        return hits
+    return hits.join(dead, keys=["file_path", "pos"], join_type="left anti")
 
 
-def _norm_file_uri(path: str) -> str:
-    return path[len("file:"):] if path.startswith("file:") else path
+def _write_deletes(table_dir: str, version: int, hits, deletes: dict):
+    """Write ``hits``' ``(file_path, pos)`` as this version's position-delete
+    file (sorted, as Iceberg requires); returns its table-relative path and
+    the snapshot's ``deletes`` map with the file added."""
+    import pyarrow.parquet as pq
+
+    rel = f"deletes/d{version:06d}.parquet"
+    path = Path(table_dir) / rel
+    path.parent.mkdir(parents=True, exist_ok=True)
+    tmp = path.with_name(f".{path.name}.tmp")
+    pos = hits.select(["file_path", "pos"])
+    pq.write_table(pos.sort_by([("file_path", "ascending"), ("pos", "ascending")]), tmp)
+    os.replace(tmp, path)
+    out = dict(deletes)
+    counts = pos.group_by("file_path").aggregate([([], "count_all")])
+    for f, n in zip(counts["file_path"].to_pylist(), counts["count_all"].to_pylist()):
+        e = out.get(f, {"files": [], "deleted": 0})
+        out[f] = {"files": e["files"] + [rel], "deleted": e["deleted"] + n}
+    return rel, out
 
 
-def _rel_to_table(table_dir: str, abs_paths: list[str]) -> set[str]:
-    root = str(Path(table_dir).resolve())
-    out = set()
-    for p in abs_paths:
-        rp = str(Path(_norm_file_uri(p)).resolve())
-        out.add(os.path.relpath(rp, root))
-    return out
+def _written(
+    table_dir: str, data_files: list[str], delete_files: list[str], rows_deleted: int
+) -> dict:
+    """Summary fields of a merge, delete or compact commit: rows and bytes
+    it wrote, data and delete files counted apart (footers and file sizes
+    only). Write amplification is ``bytes_written`` over the bytes of the
+    ``rows_added`` rows, so ``snapshot_log`` alone gives it."""
+    import pyarrow.parquet as pq
+
+    root = Path(table_dir)
+    return {
+        "rows_added": sum(
+            pq.read_metadata(str(root / f)).num_rows for f in data_files
+        ),
+        "rows_deleted": int(rows_deleted),
+        "delete_files": len(delete_files),
+        "bytes_written": {
+            "data": sum((root / f).stat().st_size for f in data_files),
+            "deletes": sum((root / f).stat().st_size for f in delete_files),
+        },
+    }
 
 
 def delete_where(
     spark: SparkSession, table_dir: str, predicate: str
 ) -> dict:
-    """Copy-on-write DELETE: rewrite only the files that contain rows
-    matching ``predicate`` (SQL expression); carry every other file into
-    the new snapshot untouched (byte-identical — pinned by test)."""
+    """Merge-on-read DELETE: one action collects the positions of the live
+    rows where ``predicate`` (SQL expression) IS TRUE — a row whose
+    predicate is NULL stays, as in SQL ``DELETE`` — and the commit writes
+    them as one position-delete file. Every data file is carried into the
+    new snapshot untouched (byte-identical — pinned by test)."""
     parent = current_version(table_dir)
     meta = snapshot_meta(table_dir, parent)
-    files = _data_files(table_dir, parent)
-    tgt = spark.read.parquet(*files)
-    cond = F.expr(predicate)
-    affected_abs = sorted(
-        r[_FILE_COL]
-        for r in tgt.filter(cond)
-        .select(F.input_file_name().alias(_FILE_COL))
-        .distinct()
-        .collect()
+    hits = _live_hits(
+        table_dir,
+        meta,
+        _with_positions(_read(spark, table_dir, meta, meta["files"]))
+        .filter(F.expr(predicate))
+        .select(_FILE_COL, _POS_COL)
+        .toArrow(),
     )
-    if not affected_abs:
+    if not hits.num_rows:
         return {"version": parent, "files_rewritten": 0, "rows_deleted": 0}
-    affected_rel = _rel_to_table(table_dir, affected_abs)
-    keep_files = [f for f in meta["files"] if f not in affected_rel]
-
-    aff = spark.read.parquet(*[_norm_file_uri(p) for p in affected_abs])
-    n_before = aff.count()
-    survivors = aff.filter(~cond)
     version = parent + 1
-    new_files = _write_data(survivors, table_dir, version)
-    n_after = read_n_rows(spark, table_dir, version_files=new_files)
+    rel, deletes = _write_deletes(table_dir, version, hits, meta.get("deletes", {}))
     rec = {
         "version": version,
         "parent": parent,
         "operation": "delete",
-        "files": sorted(keep_files + new_files),
+        "files": meta["files"],
+        "deletes": deletes,
         "schema": meta["schema"],
-        "stats": _commit_stats(table_dir, meta, keep_files, new_files),
-        "summary": {
-            "files_rewritten": len(affected_rel),
-            "rows_deleted": int(n_before - n_after),
-            "predicate": predicate,
-        },
+        "stats": meta.get("stats", {}),
+        "summary": {"files_rewritten": 0, "predicate": predicate}
+        | _written(table_dir, [], [rel], hits.num_rows),
         # carry writer-txn state so a maintenance delete between stream
         # batches doesn't reset streaming idempotence
         "stream_txn": _txn_map(table_dir, parent),
     }
     _commit(table_dir, rec)
     return rec["summary"] | {"version": version}
-
-
-def read_n_rows(
-    spark: SparkSession, table_dir: str, version_files: list[str]
-) -> int:
-    if not version_files:
-        return 0
-    root = Path(table_dir)
-    return spark.read.parquet(
-        *[str(root / f) for f in version_files]
-    ).count()
 
 
 def merge_into(
@@ -487,77 +578,83 @@ def merge_into(
     validate_source_keys: bool = True,
     txn: tuple[str, int] | None = None,
 ) -> dict:
-    """Copy-on-write MERGE INTO (upsert): WHEN MATCHED update all
-    columns from source, WHEN NOT MATCHED insert the source row.
+    """Merge-on-read MERGE INTO (upsert): WHEN MATCHED update all columns
+    from source, WHEN NOT MATCHED insert the source row.
 
-    Plan shape: (1) discovery — semi-join target keys × distinct source
-    keys grouped by file (key columns only, broadcast probe); (2)
-    rewrite — LEFT join of ONLY the affected files against the source,
-    matched rows take every source column (including legitimate NULLs —
-    a presence flag, not ``coalesce``, decides); (3) inserts — source
-    anti-joined against the FULL target's key projection. (2)+(3) are
-    unioned into one write. Unaffected files carry over by reference.
+    Plan shape: (1) one action collects the source keys together with
+    the positions of the live target rows they match (target key columns
+    plus ``_metadata`` file path and row index, semi-joined to the
+    broadcast source keys); (2) those positions become one delete file;
+    (3) the source is written as one new data file. A target row matched
+    by a source row is replaced by that source row, NULLs included, so a
+    key held by n live target rows gets n copies (the source LEFT JOIN the
+    hit keys; keys held once add nothing to that join, so only keys held
+    more than once go into it — usually none). Unmatched source rows are
+    inserts. Every data file is carried by reference (``files_rewritten``
+    is 0). Three Spark jobs: the broadcast, the collect and the write
+    (one more broadcast when a key is held more than once).
 
     Iceberg MERGE rejects a source row matching twice; ``validate_source
-    _keys`` enforces the same contract with one aggregate."""
+    _keys`` enforces the same contract on the collected source keys."""
+    import pyarrow.compute as pc
+
     parent = current_version(table_dir)
     meta = snapshot_meta(table_dir, parent)
-    files = _data_files(table_dir, parent)
-    tgt = spark.read.parquet(*files)
-    cols = tgt.columns
+    cols = StructType.fromJson(json.loads(meta["schema"])).fieldNames()
     if sorted(source.columns) != sorted(cols):
         raise ValueError(
             f"source columns {sorted(source.columns)} != table {sorted(cols)}"
         )
-    if validate_source_keys:
-        dups = (
-            source.groupBy(*on)
-            .count()
-            .filter(F.col("count") > 1)
-            .limit(1)
-            .count()
+    keys = source.select(*on)
+    found = (
+        keys.select(
+            *on,
+            F.lit(None).cast("string").alias(_FILE_COL),
+            F.lit(None).cast("long").alias(_POS_COL),
         )
-        if dups:
-            raise ValueError("MERGE source has duplicate keys on " + str(on))
-
-    affected_abs = _affected_files(tgt, source, on)
-    affected_rel = _rel_to_table(table_dir, affected_abs)
-    keep_files = [f for f in meta["files"] if f not in affected_rel]
-
-    src = source.select(
-        *[F.col(c).alias(f"__s_{c}") for c in cols], F.lit(True).alias("__m")
+        .unionByName(
+            _with_positions(_read(spark, table_dir, meta, meta["files"]))
+            .select(*on, _FILE_COL, _POS_COL)
+            .join(F.broadcast(keys), on=on, how="leftsemi")
+        )
+        .toArrow()
     )
-    join_cond = [F.col(k) == F.col(f"__s_{k}") for k in on]
-    if affected_abs:
-        aff = spark.read.parquet(*[_norm_file_uri(p) for p in affected_abs])
-        updated = aff.join(F.broadcast(src), join_cond, "left").select(
-            *[
-                F.when(F.col("__m"), F.col(f"__s_{c}"))
-                .otherwise(F.col(c))
-                .alias(c)
-                for c in cols
-            ]
-        )
-    else:
-        updated = None
-    inserts = source.join(
-        tgt.select(*on), on=on, how="left_anti"
-    ).select(*cols)
-    out = inserts if updated is None else updated.unionByName(inserts)
+    from_source = pc.is_null(found[_FILE_COL])
+    if validate_source_keys:
+        src = found.filter(from_source).select(on)
+        if src.group_by(on).aggregate([]).num_rows < src.num_rows:
+            raise ValueError("MERGE source has duplicate keys on " + str(on))
+    hits = _live_hits(table_dir, meta, found.filter(pc.invert(from_source)))
+
+    out = source.select(*cols)
+    held = hits.group_by(on).aggregate([([], "count_all")])
+    multi = hits.join(
+        held.filter(pc.greater(held["count_all"], 1)).select(on),
+        keys=on,
+        join_type="left semi",
+    ).select(on)
+    if multi.num_rows:
+        key_schema = StructType([source.schema[k] for k in on])
+        out = source.join(
+            F.broadcast(spark.createDataFrame(multi, key_schema)), on=on, how="left"
+        ).select(*cols)
 
     version = parent + 1
     new_files = _write_data(out, table_dir, version)
+    deletes, written = meta.get("deletes", {}), []
+    if hits.num_rows:
+        rel, deletes = _write_deletes(table_dir, version, hits, deletes)
+        written = [rel]
     rec = {
         "version": version,
         "parent": parent,
         "operation": "merge",
-        "files": sorted(keep_files + new_files),
+        "files": sorted(meta["files"] + new_files),
+        "deletes": deletes,
         "schema": meta["schema"],
-        "stats": _commit_stats(table_dir, meta, keep_files, new_files),
-        "summary": {
-            "files_rewritten": len(affected_rel),
-            "files_carried": len(keep_files),
-        },
+        "stats": _commit_stats(table_dir, meta, meta["files"], new_files),
+        "summary": {"files_rewritten": 0, "files_carried": len(meta["files"])}
+        | _written(table_dir, new_files, written, hits.num_rows),
         "stream_txn": _txn_map(table_dir, parent)
         | (dict([txn]) if txn else {}),
     }
@@ -577,9 +674,10 @@ def read_changes(
     Fast path: when every commit in (from, to] is an ``append``, the
     changes are EXACTLY the files those commits added — the scan reads
     only them, never the base table (O(delta), the 10^12-row contract;
-    pinned via inputFiles in tests). When a rewrite commit (merge /
-    delete / overwrite) intervenes, added files also carry rows copied
-    from rewritten files, so the fast path over-reports; this falls back
+    pinned via inputFiles in tests). When any other commit (merge /
+    delete / compact / rollback / overwrite) intervenes, added files are
+    no longer the change: deletes hide old rows, and a compaction adds
+    files of rows that did not change. This then falls back
     to the exact row-level diff ``to EXCEPT ALL from`` — one shuffle over
     both versions, correct for any history. Callers needing O(delta)
     merge feeds should consume per-commit (``from = to - 1``) right
@@ -620,40 +718,76 @@ def compact_table(
     table_dir: str,
     target_bytes: int = 128 * 1024 * 1024,
 ) -> dict:
-    """Rewrite the current snapshot's files into ~``target_bytes`` files
-    as a NEW snapshot (Iceberg ``rewrite_data_files``): rows are
-    untouched (verified by count before commit), history stays readable,
-    and incremental consumers see zero changes across the compaction
+    """Fold deletes and small files back into ~``target_bytes`` files as a
+    NEW snapshot (Iceberg ``rewrite_data_files``). A data file is
+    rewritten when it pays off: its deleted share is at least
+    ``REWRITE_DELETED_SHARE``, or it is smaller than
+    ``spark.sql.files.openCostInBytes`` (what Spark charges for opening a
+    file) and at least two such files exist. Every other file is carried
+    with its remaining deletes. The rewritten files' live rows are
+    bin-packed into ``ceil(live bytes / target_bytes)`` files without a
+    shuffle, and their count is checked against footer row counts minus
+    deletes before the commit. When nothing pays off, nothing is
+    committed. Rows are untouched, history stays readable, and
+    incremental consumers see zero changes across the compaction
     (``read_changes`` takes the exact-diff path and returns empty —
     pinned by test). Unlike `runtime/compact.py` (in-place dir swap for
     plain parquet dirs), nothing is moved or deleted here — old files
     fall out via ``expire_snapshots``."""
+    import pyarrow.parquet as pq
+
     parent = current_version(table_dir)
     meta = snapshot_meta(table_dir, parent)
     root = Path(table_dir)
-    files = _data_files(table_dir, parent)
-    total = sum(Path(f).stat().st_size for f in files)
-    df = read_table(spark, table_dir, parent)
-    n_rows = df.count()
-    n_out = max(int(total / target_bytes), 1)
+    files, deletes = meta["files"], meta.get("deletes", {})
+    size = {f: (root / f).stat().st_size for f in files}
+    rows = {f: pq.read_metadata(str(root / f)).num_rows for f in files}
+    dead = {f: deletes.get(f, {}).get("deleted", 0) for f in files}
+    open_cost = spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
+    small = {f for f in files if size[f] < open_cost}
+    rewrite = [
+        f
+        for f in files
+        if (dead[f] and dead[f] >= REWRITE_DELETED_SHARE * rows[f])
+        or (f in small and len(small) >= 2)
+    ]
+    summary = {
+        "files_before": len(files),
+        "rows": sum(rows.values()) - sum(dead.values()),
+    }
+    if not rewrite:
+        return summary | {
+            "files_after": len(files), "files_rewritten": 0, "version": parent
+        }
+    live_bytes = sum(size[f] * (1 - dead[f] / rows[f]) for f in rewrite if rows[f])
     version = parent + 1
-    new_files = _write_data(df.repartition(n_out), table_dir, version)
-    n_new = spark.read.parquet(
-        *[str(root / f) for f in new_files]
-    ).count()
-    if n_new != n_rows:
-        raise RuntimeError(f"compaction row mismatch: {n_rows} -> {n_new}")
+    new_files = _write_data(
+        _scan(spark, table_dir, meta, rewrite).coalesce(
+            max(math.ceil(live_bytes / target_bytes), 1)
+        ),
+        table_dir,
+        version,
+    )
+    folded = sum(dead[f] for f in rewrite)
+    summary |= _written(table_dir, new_files, [], folded)
+    want = sum(rows[f] for f in rewrite) - folded
+    if summary["rows_added"] != want:
+        raise RuntimeError(
+            f"compaction row mismatch: {want} -> {summary['rows_added']}"
+        )
+    carried = [f for f in files if f not in set(rewrite)]
     rec = {
         "version": version,
         "parent": parent,
         "operation": "compact",
-        "files": sorted(new_files),
+        "files": sorted(carried + new_files),
+        "deletes": {f: deletes[f] for f in carried if f in deletes},
         "schema": meta["schema"],
-        "stats": _commit_stats(table_dir, None, [], new_files),
-        "summary": {
-            "files_before": len(files),
-            "files_after": len(new_files),
-            "rows": int(n_rows),
+        "stats": _commit_stats(table_dir, meta, carried, new_files),
+        "summary": summary
+        | {
+            "files_after": len(carried) + len(new_files),
+            "files_rewritten": len(rewrite),
         },
         "stream_txn": _txn_map(table_dir, parent),
     }
@@ -663,8 +797,8 @@ def compact_table(
 
 def rollback_table(table_dir: str, version: int) -> dict:
     """Roll the table back to ``version`` (Iceberg
-    ``rollback_to_snapshot``): a NEW commit whose file list, schema, and
-    stats are exactly the target snapshot's — nothing is copied or
+    ``rollback_to_snapshot``): a NEW commit whose file list, deletes,
+    schema, and stats are exactly the target snapshot's — nothing is copied or
     deleted, history stays linear (the bad commits remain time-travel-
     readable until ``expire_snapshots``), and the rollback itself is
     one atomic metadata write. Streaming-writer txn state carries from
@@ -679,6 +813,7 @@ def rollback_table(table_dir: str, version: int) -> dict:
         "parent": cur,
         "operation": "rollback",
         "files": tgt["files"],
+        "deletes": tgt.get("deletes", {}),
         "schema": tgt["schema"],
         "stats": tgt.get("stats", {}),
         "summary": {"rolled_back_to": version},
@@ -690,9 +825,9 @@ def rollback_table(table_dir: str, version: int) -> dict:
 
 def expire_snapshots(table_dir: str, keep_last: int = 1) -> dict:
     """Drop all but the newest ``keep_last`` snapshots and physically
-    delete data files no surviving snapshot references (Iceberg:
-    ``expire_snapshots`` + orphan-file cleanup). Also removes crash
-    orphans — data dirs never referenced by any snapshot."""
+    delete data and delete files no surviving snapshot references
+    (Iceberg: ``expire_snapshots`` + orphan-file cleanup). Also removes
+    crash orphans — files never referenced by any snapshot."""
     cur = current_version(table_dir)
     keep_versions = set(range(max(cur - keep_last + 1, 1), cur + 1))
     sdir = _snap_path(table_dir)
@@ -701,20 +836,25 @@ def expire_snapshots(table_dir: str, keep_last: int = 1) -> dict:
     for p in sorted(sdir.glob("v*.json")):
         v = int(p.stem[1:])
         if v in keep_versions:
-            referenced |= set(json.loads(p.read_text())["files"])
+            rec = json.loads(p.read_text())
+            referenced |= set(rec["files"])
+            for e in rec.get("deletes", {}).values():
+                referenced |= set(e["files"])
         else:
             p.unlink()
             dropped_snaps.append(v)
     root = Path(table_dir)
-    removed_files = 0
-    for f in sorted((root / "data").rglob("*.parquet")):
-        if str(f.relative_to(root)) not in referenced:
-            f.unlink()
-            removed_files += 1
+    removed = {"data": 0, "deletes": 0}
+    for kind, pattern in (("data", "*.parquet"), ("deletes", "*")):
+        for f in sorted((root / kind).rglob(pattern)):
+            if f.is_file() and str(f.relative_to(root)) not in referenced:
+                f.unlink()
+                removed[kind] += 1
     for d in sorted((root / "data").glob("c*")):
         if d.is_dir() and not any(d.iterdir()):
             d.rmdir()
     return {
         "snapshots_dropped": dropped_snaps,
-        "data_files_removed": removed_files,
+        "data_files_removed": removed["data"],
+        "delete_files_removed": removed["deletes"],
     }

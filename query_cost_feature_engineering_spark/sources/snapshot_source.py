@@ -21,18 +21,21 @@ The stream reader is the Delta-style CDF source the sink-side CDC
 micro-batch reads exactly the data files the append commits in
 ``(start, end]`` added — O(delta) per batch, never the base table —
 and Spark's checkpoint makes the version watermark exactly-once across
-restarts. Rewrite commits (merge/delete/compact/rollback) make
-"added files" ambiguous (they contain copied rows); like Delta's
+restarts. Rewrite commits (merge/delete/compact/rollback) change rows
+that "added files" cannot express (a merge or delete removes old rows
+by position deletes; a compaction's files hold copied rows); like Delta's
 streaming source the default is to FAIL loudly, and
 ``option("on_rewrite", "skip")`` opts into appends-only semantics
 (Delta: ``ignoreChanges``).
 
 Scale notes: partitions are one-per-data-file (Iceberg's scan task
 granularity; files are written to a ~128 MB target by the engine), the
-driver handles file LISTS only, and workers read their single file via
-pyarrow with column alignment to the snapshot schema (schema evolution:
-old files surface missing columns as nulls, extra columns are dropped —
-same contract as ``snapshots.read_table``).
+driver handles file LISTS and the kept files' deleted positions (read
+from the position-delete files with pyarrow and passed in each file's
+partition), and workers read their single file via pyarrow, mask the
+deleted positions, and align columns to the snapshot schema (schema
+evolution: old files surface missing columns as nulls, extra columns
+are dropped — same contract as ``snapshots.read_table``).
 
 Deployment: Spark plans a Python data source in a separate python
 worker process that receives this class via cloudpickle and — unlike
@@ -75,6 +78,7 @@ from pyspark.sql.types import StructType
 from query_cost_feature_engineering_spark.runtime.manifest import (
     _file_may_match,
     current_version,
+    load_deletes,
     snapshot_meta,
 )
 
@@ -104,17 +108,20 @@ def _meta(table_dir: str, version: int | None):
 
 @dataclass
 class _FilePartition(InputPartition):
-    """One scan task = one immutable data file (Iceberg task granularity)."""
+    """One scan task = one immutable data file (Iceberg task granularity)
+    and the row positions the snapshot deletes from it."""
 
     path: str
     schema_json: str
+    deleted: tuple = ()
 
 
 def _read_file_aligned(part: _FilePartition) -> Iterator:
-    """Read one parquet file and align it to the snapshot schema:
-    missing columns (pre-evolution files) become typed nulls, extra
-    columns are dropped, order follows the schema. Arrow batches
-    end-to-end — no per-row Python."""
+    """Read one parquet file, drop its deleted positions, and align it
+    to the snapshot schema: missing columns (pre-evolution files) become
+    typed nulls, extra columns are dropped, order follows the schema.
+    Arrow batches end-to-end — no per-row Python."""
+    import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -122,6 +129,10 @@ def _read_file_aligned(part: _FilePartition) -> Iterator:
 
     target = to_arrow_schema(StructType.fromJson(json.loads(part.schema_json)))
     tbl = pq.read_table(part.path)
+    if part.deleted:
+        keep = np.ones(tbl.num_rows, dtype=bool)
+        keep[list(part.deleted)] = False
+        tbl = tbl.filter(keep)
     n = tbl.num_rows
     cols = []
     for field in target:
@@ -166,9 +177,19 @@ class SnapshotBatchReader(DataSourceReader):
                 for f in files
                 if _file_may_match(stats.get(f, {}), self.predicates)
             ]
+        deleted: dict[str, list[int]] = {}
+        dels = load_deletes(self.table_dir, self.meta, files)
+        if dels is not None:
+            for f, pos in zip(
+                dels["file_path"].to_pylist(), dels["pos"].to_pylist()
+            ):
+                deleted.setdefault(f, []).append(pos)
         root = Path(self.table_dir)
         return [
-            _FilePartition(str(root / f), self.meta["schema"]) for f in files
+            _FilePartition(
+                str(root / f), self.meta["schema"], tuple(deleted.get(f, ()))
+            )
+            for f in files
         ]
 
     def read(self, partition: _FilePartition) -> Iterator:
@@ -207,9 +228,10 @@ class SnapshotStreamReader(DataSourceStreamReader):
                 if self.on_rewrite == "skip":
                     continue
                 raise RuntimeError(
-                    f"snapshot v{v} is a {meta['operation']!r} commit: its "
-                    "added files contain rows copied from rewritten files, "
-                    "so streaming them would duplicate data. Restart from a "
+                    f"snapshot v{v} is a {meta['operation']!r} commit: it "
+                    "removes or rewrites existing rows, so streaming its "
+                    "added files would miss deletes or duplicate data "
+                    "(on_rewrite). Restart from a "
                     "later starting_version or set "
                     ".option('on_rewrite', 'skip') for appends-only "
                     "semantics (Delta: ignoreChanges)."

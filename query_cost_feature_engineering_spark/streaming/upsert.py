@@ -23,9 +23,10 @@ Three layers make it exactly-once without a transactional format jar:
    so at-least-once delivery + idempotent commit = exactly-once table
    state (pinned by tests/test_streaming.py, incl. a forced replay).
 
-Scale: the per-batch merge is the copy-on-write path — only files
-containing touched keys rewrite; a micro-batch updating k hot keys
-costs O(k) file rewrites regardless of table size.
+Scale: the per-batch merge is merge-on-read — it writes the batch's
+rows as one new data file plus one position-delete file naming the
+rows they replace, and rewrites no existing file; a micro-batch
+updating k keys writes O(k) rows regardless of table size.
 """
 
 from __future__ import annotations

@@ -93,6 +93,33 @@ def test_version_option_time_travels(spark, table):
     assert _load(spark, table, version=str(v1)).count() == 400
 
 
+def test_batch_read_applies_position_deletes_at_every_version(spark, table):
+    """Merges and a delete leave position-delete files; the data source
+    masks them per file and reads the same rows as ``read_table`` at
+    every version, time travel and pushed-filter pruning included."""
+    upd = _mk(spark, 0, 400).filter("k % 50 = 3").selectExpr(
+        "k", "grp", "v * -1 AS v"
+    )
+    S.merge_into(spark, table, upd, on=["k"])
+    S.merge_into(
+        spark, table, _mk(spark, 395, 405).selectExpr("k", "7 AS grp", "v"), on=["k"]
+    )
+    S.delete_where(spark, table, "grp = 7 OR k < 20")
+    assert S.snapshot_meta(table)["deletes"]
+
+    def rows(df):
+        return sorted((r.k, r.grp, r.v) for r in df.collect())
+
+    for v in range(1, S.current_version(table) + 1):
+        assert rows(_load(spark, table, version=str(v))) == rows(
+            S.read_table(spark, table, version=v)
+        )
+    got = rows(_load(spark, table).filter(F.col("k") >= 350))
+    assert got == rows(S.read_table(spark, table, where=[("k", ">=", 350)]))
+    # 400 base + 5 inserts, minus the 10 grp=7 rows and the 20 with k < 20
+    assert len(rows(_load(spark, table))) == 375
+
+
 def test_schema_evolution_alignment(spark, table):
     ev = spark.createDataFrame(
         [(1000, 9, 1.5, "x")], "k int, grp int, v double, tag string"

@@ -1,4 +1,4 @@
-"""Snapshot-versioned table: time travel, copy-on-write delete/merge,
+"""Snapshot-versioned table: time travel, merge-on-read delete/merge,
 atomic commits, expiry. Verifies the Iceberg-parity semantics of
 runtime/snapshots.py on a real on-disk table."""
 
@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+from collections import Counter
 from pathlib import Path
 
 import pytest
@@ -63,7 +64,7 @@ def test_delete_where_copy_on_write(spark, table):
     cur = S.read_table(spark, table)
     assert cur.filter("grp = 1").count() == 0
     assert cur.count() == 67
-    # copy-on-write: files carried into the new snapshot are byte-identical
+    # files carried into the new snapshot are byte-identical
     after = S.snapshot_meta(table)["files"]
     carried = [f for f in after if f in digests_before]
     for f in carried:
@@ -111,10 +112,18 @@ def test_merge_carries_unaffected_files_by_reference(spark, tmp_path):
     df = _mk(spark, [(i, 0, float(i)) for i in range(100)]).repartitionByRange(4, "k")
     S.write_snapshot(df, d, mode="overwrite")
     meta1 = S.snapshot_meta(d)
+    digests_before = _file_digests(d, meta1["files"])
     src = _mk(spark, [(3, 9, 99.0)])  # touches exactly one range file
     res = S.merge_into(spark, d, src, on=["k"])
-    assert res["files_rewritten"] == 1
-    assert res["files_carried"] == len(meta1["files"]) - 1
+    # merge-on-read: nothing rewritten, every pre-merge file carried
+    # byte-identical, the old row of k=3 named by one delete position
+    assert res["files_rewritten"] == 0
+    assert res["files_carried"] == len(meta1["files"])
+    meta2 = S.snapshot_meta(d)
+    assert set(meta1["files"]) <= set(meta2["files"])
+    assert _file_digests(d, meta1["files"]) == digests_before
+    assert res["rows_deleted"] == 1
+    assert sum(e["deleted"] for e in meta2["deletes"].values()) == 1
     cur = _as_dict(S.read_table(spark, d))
     assert cur[3] == (9, 99.0) and len(cur) == 100
 
@@ -306,7 +315,7 @@ def test_prune_missing_stats_is_conservative(spark, tmp_path):
 
 def test_stats_carry_through_merge_and_survive_pruning(spark, tmp_path):
     """Carried (unrewritten) files keep their original bounds through a
-    copy-on-write MERGE, and pruning works across the mixed snapshot."""
+    MERGE, and pruning works across the mixed snapshot."""
     d = str(tmp_path / "tbl")
     S.write_snapshot(_ranged(spark), d, mode="overwrite")
     src = spark.createDataFrame([(5, 99, -1.0)], ["k", "grp", "val"])
@@ -350,3 +359,212 @@ def test_rollback_restores_old_version_as_new_commit(spark, table):
 def test_rollback_rejects_future_version(spark, table):
     with pytest.raises(ValueError, match="roll back"):
         S.rollback_table(table, S.current_version(table) + 1)
+
+
+# --- merge-on-read: position deletes -----------------------------------------
+
+
+def test_delete_where_keeps_rows_whose_predicate_is_null(spark, tmp_path):
+    """SQL DELETE removes a row only where the predicate IS TRUE; a row
+    whose predicate is NULL stays, whatever file holds it."""
+    d = str(tmp_path / "nulls")
+    df = spark.createDataFrame(
+        [(1, 10.0), (2, None), (3, 1.0)], "k int, val double"
+    ).coalesce(1)
+    S.write_snapshot(df, d, mode="overwrite")
+    res = S.delete_where(spark, d, "val > 5")
+    assert res["rows_deleted"] == 1
+    got = sorted((r.k, r.val) for r in S.read_table(spark, d).collect())
+    assert got == [(2, None), (3, 1.0)]
+
+
+def _rows(df):
+    return Counter((r.k, r.grp, r.val) for r in df.collect())
+
+
+def _merge_model(rows, src):
+    """Pandas-free MERGE model on a multiset: each live row whose key a
+    source row holds becomes that source row; other source rows insert."""
+    out = Counter()
+    for (k, g, v), n in rows.items():
+        if k not in {s[0] for s in src}:
+            out[(k, g, v)] += n
+    for s in src:
+        out[s] += max(sum(n for (k, _, _), n in rows.items() if k == s[0]), 1)
+    return out
+
+
+def test_model_checked_history(spark, tmp_path):
+    """Write, three merges, a delete, compaction, rollback and expiry:
+    every retained version reads as a model of the table says, a merge's
+    read_changes is the model's diff, and expiry keeps every file a
+    retained snapshot needs. The merges update k=1 twice in a row and
+    k=7, which two target rows hold, twice."""
+    d = str(tmp_path / "hist")
+    base = [(i, i % 3, float(i)) for i in range(60)] + [(7, 2, 70.0)]
+    S.write_snapshot(_mk(spark, base).repartition(3), d, mode="overwrite")
+    model = {1: Counter(base)}
+    merges = [
+        [(1, 9, 100.0), (7, 9, -7.0), (100, 5, 1.0)],
+        [(1, 8, 101.0), (100, 6, 2.0), (101, 4, None)],
+        [(2, 7, 102.0), (7, 1, -8.0), (102, 3, 3.0)],
+    ]
+    for src in merges:
+        v = S.merge_into(spark, d, _mk(spark, src), on=["k"])["version"]
+        model[v] = _merge_model(model[v - 1], src)
+        got = _rows(S.read_changes(spark, d, v - 1, v))
+        assert got == model[v] - model[v - 1]
+    assert sum(n for (k, _, _), n in model[v].items() if k == 7) == 2
+    v = S.delete_where(spark, d, "val > 50")["version"]
+    model[v] = Counter(
+        {r: n for r, n in model[v - 1].items() if not (r[2] is not None and r[2] > 50)}
+    )
+    v = S.compact_table(spark, d)["version"]
+    model[v] = model[v - 1]
+    assert S.snapshot_meta(d, v)["deletes"] == {}
+    v = S.rollback_table(d, 3)["version"]
+    model[v] = model[3]
+    for ver, want in model.items():
+        assert _rows(S.read_table(spark, d, version=ver)) == want, ver
+
+    res = S.expire_snapshots(d, keep_last=3)
+    assert res["snapshots_dropped"] == [1, 2, 3, 4]
+    for ver in range(5, v + 1):
+        meta = S.snapshot_meta(d, ver)
+        needed = set(meta["files"])
+        for e in meta["deletes"].values():
+            needed |= set(e["files"])
+        assert all((Path(d) / f).is_file() for f in needed), ver
+        assert _rows(S.read_table(spark, d, version=ver)) == model[ver], ver
+    assert res["delete_files_removed"] == 0  # v5 still needs all of them
+    assert S.snapshot_meta(d)["deletes"]
+
+
+def test_commit_summaries_count_written_bytes(spark, tmp_path):
+    """Merge, delete and compact commits record rows_deleted, delete_files
+    and bytes_written (data and delete bytes apart), matching the files
+    on disk, so write amplification reads from snapshot_log alone."""
+    d = str(tmp_path / "amp")
+    S.write_snapshot(
+        _mk(spark, [(i, 0, float(i)) for i in range(200)]).repartition(2),
+        d,
+        mode="overwrite",
+    )
+
+    def on_disk(before, after_meta, kind):
+        root = Path(d)
+        if kind == "data":
+            new = set(after_meta["files"]) - before["files"]
+        else:
+            new = {
+                f for e in after_meta["deletes"].values() for f in e["files"]
+            } - before["deletes"]
+        return sum((root / f).stat().st_size for f in new), len(new)
+
+    def state():
+        meta = S.snapshot_meta(d)
+        return {
+            "files": set(meta["files"]),
+            "deletes": {f for e in meta["deletes"].values() for f in e["files"]},
+        }
+
+    for op in (
+        lambda: S.merge_into(
+            spark, d, _mk(spark, [(3, 1, 0.0), (4, 1, 0.0), (900, 1, 0.0)]), on=["k"]
+        ),
+        lambda: S.delete_where(spark, d, "k >= 100"),
+        lambda: S.compact_table(spark, d),
+    ):
+        before = state()
+        op()
+        log = S.snapshot_log(d)[-1]["summary"]
+        meta = S.snapshot_meta(d)
+        data_bytes, _ = on_disk(before, meta, "data")
+        del_bytes, n_del = on_disk(before, meta, "deletes")
+        assert log["bytes_written"] == {"data": data_bytes, "deletes": del_bytes}
+        assert log["delete_files"] == n_del
+    log = S.snapshot_log(d)
+    # the delete also takes the merge's insert k=900; compaction folds all 103
+    assert [e["summary"]["rows_deleted"] for e in log[1:]] == [2, 101, 103]
+    assert [e["summary"]["rows_added"] for e in log[1:]] == [3, 0, 100]
+    assert log[1]["summary"]["bytes_written"]["deletes"] > 0
+    assert log[2]["summary"]["bytes_written"]["data"] == 0
+
+
+def test_compaction_rewrites_only_files_where_it_pays(spark, tmp_path):
+    """A file with under REWRITE_DELETED_SHARE of its rows deleted keeps
+    them as deletes; one above the share is rewritten; a lone small file
+    is not a reason to compact; nothing to do commits nothing."""
+    d = str(tmp_path / "pays")
+    df = _mk(spark, [(i, 0, float(i)) for i in range(100)]).repartitionByRange(2, "k")
+    S.write_snapshot(df, d, mode="overwrite")
+    stats = S.snapshot_meta(d)["stats"]
+    lo, hi = sorted(stats, key=lambda f: stats[f]["k"]["min"])
+    S.delete_where(spark, d, "k < 20 OR k = 99")  # 40% of lo, 2% of hi
+    before = _rows(S.read_table(spark, d))
+    key = "spark.sql.files.openCostInBytes"
+    spark.conf.set(key, "1")  # no file counts as small
+    try:
+        res = S.compact_table(spark, d)
+        assert res["files_rewritten"] == 1 and res["rows_deleted"] == 20
+        meta = S.snapshot_meta(d)
+        assert lo not in meta["files"] and hi in meta["files"]
+        assert meta["deletes"][hi]["deleted"] == 1
+        assert _rows(S.read_table(spark, d)) == before
+        v = S.current_version(d)
+        assert S.compact_table(spark, d)["version"] == v  # nothing pays off
+    finally:
+        spark.conf.unset(key)
+    assert S.current_version(d) == v
+
+
+def _jobs(spark, group, fn):
+    """Run ``fn`` under a job group; returns its result, the number of
+    Spark jobs it launched and their stage names."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    tracker = sc.statusTracker()
+    ids = tracker.getJobIdsForGroup(group)
+    stages = [
+        tracker.getStageInfo(s).name
+        for j in ids
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    return out, len(ids), stages
+
+
+def test_deletes_read_as_local_relation_and_job_budgets(spark, tmp_path):
+    """Plan guard: with deletes, read_table runs no Spark job while it
+    builds the plan, and the anti-join's build side is a LocalTableScan
+    (a scan of the delete files would add a job to every evaluation of
+    the input). merge_into launches at most 3 jobs; compact_table runs no
+    count() job."""
+    d = str(tmp_path / "plan")
+    base = _mk(spark, [(i, i % 3, float(i)) for i in range(300)]).repartition(3)
+    S.write_snapshot(base, d, mode="overwrite")
+    src_dir = str(tmp_path / "src")
+    _mk(spark, [(i, 9, -1.0) for i in range(0, 400, 7)]).write.parquet(src_dir)
+    src = spark.read.parquet(src_dir)
+    _, n_merge, _ = _jobs(
+        spark, "mor-merge", lambda: S.merge_into(spark, d, src, on=["k"])
+    )
+    assert n_merge <= 3
+
+    df, n_plan, _ = _jobs(spark, "mor-plan", lambda: S.read_table(spark, d))
+    assert n_plan == 0
+    assert len(df.collect()) == 300 + sum(1 for k in range(0, 400, 7) if k >= 300)
+    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    builds = [i for i, s in enumerate(lines) if "BroadcastExchange" in s]
+    assert builds
+    assert all("LocalTableScan" in lines[i + 1] for i in builds)
+
+    # the old compaction counted rows twice (four jobs under AQE) beside
+    # its write; now: the deletes' broadcast and the write
+    res, n_compact, _ = _jobs(spark, "mor-compact", lambda: S.compact_table(spark, d))
+    assert res["files_rewritten"] and n_compact <= 2
