@@ -15,14 +15,17 @@ guessing. An interop test against Pillow skips itself when Pillow is
 not installed.
 
 Scale note: encode/decode are per-image kernels called inside
-Arrow-batched UDFs — the DCT/IDCT and color transforms are vectorized
-over all 8x8 blocks of an image at once (einsum), only the entropy
-coding loops per symbol, which is proportional to compressed size.
+Arrow-batched UDFs; the forward DCT and color transforms are vectorized
+over all 8x8 blocks of an image. Decode reads each Huffman symbol from a
+list of 32-bit stream windows with no call per symbol, and runs dezigzag
++ dequantize + IDCT as one (blocks, 64) @ (64, 64) product per component.
 """
 
 from __future__ import annotations
 
+import re
 import struct
+from array import array
 from functools import lru_cache as _lru_cache
 
 import numpy as np
@@ -177,6 +180,7 @@ class _BitWriter:
             self.buf.append(b)
             if b == 0xFF:  # byte stuffing (T.81 F.1.2.3)
                 self.buf.append(0x00)
+        self.acc &= (1 << self.n) - 1  # emitted bits: keep shifts O(1)
 
     def flush(self) -> bytes:
         if self.n:
@@ -195,78 +199,82 @@ class _BitWriter:
         self.buf += bytes([0xFF, 0xD0 + (k & 7)])
 
 
+# Entropy segments end at the first real marker: 0xFF followed by
+# anything but a stuffed 0x00 (T.81 B.1.1.5, F.1.2.3).
+_MARKER = re.compile(rb"\xff[^\x00]")
+# Window lists cover _CHUNK segment bytes (~35k ints whatever the scan
+# size) plus _SLACK bytes: one block's worst case (DC 27 bits + 63 AC
+# symbols of <= 31 bits < 2048 bits), so the baseline loop checks for a
+# refill once per block.
+_CHUNK = 4096
+_SLACK = 256
+_SHIFTS = np.arange(8, 0, -1, dtype=np.uint64)
+
+
 class _BitReader:
-    """Entropy-segment reader with bulk peek/consume (the shape of the
-    T.81 Annex F fast DECODE): stuffed 0xFF00 handled inline, any real
-    marker ends the segment (subsequent peeks see virtual 1-padding —
-    the spec's fill-bit value — which the block loop never decodes past
-    the declared MCU count)."""
+    """Entropy-segment reader. A segment (up to the next real marker) is
+    found by one regex search and unstuffed by one ``bytes.replace``;
+    ``win[i]`` is the 32 stream bits from bit ``i`` of the current chunk,
+    1-padded past the segment end (the spec's fill value, never a valid
+    code). A symbol is one list load: its LUT index is ``win[p] >> 16``
+    and its magnitude bits follow in the same window."""
 
-    def __init__(self, data: bytes) -> None:
+    def __init__(self, data: bytes, pos: int = 0) -> None:
         self.data = data
-        self.pos = 0
-        self.acc = 0
-        self.n = 0
-        self.ended = False
+        self._open(pos)
 
-    def _fill_to(self, k: int) -> None:
-        while self.n < k:
-            if self.ended or self.pos >= len(self.data):
-                self.acc = (self.acc << 8) | 0xFF
-                self.n += 8
-                continue
-            b = self.data[self.pos]
-            if b == 0xFF:
-                nxt = (
-                    self.data[self.pos + 1]
-                    if self.pos + 1 < len(self.data)
-                    else 0xD9
-                )
-                if nxt == 0x00:
-                    self.pos += 2  # stuffed data byte
-                else:
-                    # real marker (incl. RSTn): segment over; restart()
-                    # consumes the marker and re-arms the reader
-                    self.ended = True
-                    continue
-            else:
-                self.pos += 1
-            self.acc = (self.acc << 8) | b
-            self.n += 8
-        self.acc &= (1 << self.n) - 1
+    def _open(self, pos: int) -> None:
+        m = _MARKER.search(self.data, pos)
+        self.end = m.start() if m else len(self.data)
+        self.seg = self.data[pos:self.end].replace(b"\xff\x00", b"\xff")
+        self.base = 0
+        self.refill(0)
 
-    def peek16(self) -> int:
-        self._fill_to(16)
-        return (self.acc >> (self.n - 16)) & 0xFFFF
-
-    def consume(self, k: int) -> None:
-        self.n -= k
+    def refill(self, p: int) -> tuple:
+        """Rebuild the windows at bit ``p`` of the current list; returns the
+        new ``(win, p, lim)``, ``lim`` being where the next refill is due."""
+        bit = self.base + p
+        byte = bit >> 3
+        left = max(0, len(self.seg) - byte)
+        n = min(left, _CHUNK)
+        k = min(left, n + _SLACK)  # bytes whose windows hold stream bits
+        buf = self.seg[byte:byte + k + 4].ljust(k + 4, b"\xff")
+        b = np.frombuffer(buf, np.uint8).astype(np.uint64)
+        v = (b[:k] << 32 | b[1:k + 1] << 24 | b[2:k + 2] << 16
+             | b[3:k + 3] << 8 | b[4:k + 4])
+        self.win = ((v[:, None] >> _SHIFTS) & 0xFFFFFFFF).ravel().tolist()
+        self.win += [0xFFFFFFFF] * ((n + _SLACK - k) << 3)  # all fill bits
+        self.base, self.p, self.lim = byte << 3, bit & 7, n << 3
+        return self.win, self.p, self.lim
 
     def bits(self, k: int) -> int:
-        if k == 0:
-            return 0
-        self._fill_to(k)
-        self.n -= k
-        return (self.acc >> self.n) & ((1 << k) - 1)
+        if self.p >= self.lim:
+            self.refill(self.p)
+        x = self.win[self.p]
+        self.p += k
+        return x >> (32 - k)
 
-    def restart(self, k: int) -> None:
-        """Consume the byte-aligned RSTk marker at a restart boundary
-        (T.81 E.2.4): discard fill bits (everything after the last
-        decoded bit is 1-fill), skip stuffed-fill FF00 pairs and bare
-        FF fill bytes, verify the modulo-8 marker sequence number,
-        re-arm the reader past the marker."""
-        self.acc = 0
-        self.n = 0
-        self.ended = False
-        d, p = self.data, self.pos
-        while p + 1 < len(d) and d[p] == 0xFF and d[p + 1] in (0x00, 0xFF):
-            p += 2 if d[p + 1] == 0x00 else 1
-        if p + 1 >= len(d) or d[p] != 0xFF or d[p + 1] != 0xD0 + (k & 7):
-            got = d[p:p + 2].hex() if p + 1 < len(d) else "EOF"
-            raise ValueError(
-                f"expected RST{k & 7} at restart boundary, got {got}"
-            )
-        self.pos = p + 2
+    def marker(self) -> int:
+        """Offset of the marker that ends the current segment, past any
+        0xFF fill bytes before it (``len(data)`` if the stream ends)."""
+        d, q = self.data, self.end
+        while q + 2 < len(d) and d[q + 1] == 0xFF:
+            q += 1
+        return q
+
+    def restart(self, k: int, p: int) -> tuple:
+        """Consume the RSTk marker at a restart boundary (T.81 E.2.4),
+        the current list read up to bit ``p``, and open the next
+        interval's segment (returns ``refill``'s tuple). Only the 1-fill
+        to the byte boundary (at most 7 bits) may remain undecoded."""
+        left = 8 * len(self.seg) - self.base - p
+        q = self.marker()
+        got = f"{left} undecoded bits" if left > 7 else self.data[q:q + 2].hex()
+        if got != f"ffd{k & 7}":
+            got = got or "EOF"
+            raise ValueError(f"expected RST{k & 7} at restart boundary, got {got}")
+        self._open(q + 2)
+        return self.win, self.p, self.lim
 
 
 def _magnitude(v: int) -> tuple[int, int]:
@@ -483,6 +491,76 @@ def encode_jpeg(
     return bytes(out)
 
 
+def _marker_segment(data: bytes, pos: int) -> tuple:
+    """(marker, payload, offset past it) for the marker at ``pos``; the
+    payload is None for the standalone markers (EOI, TEM, RSTn)."""
+    if pos + 1 >= len(data) or data[pos] != 0xFF:
+        raise ValueError("marker expected")
+    m = data[pos + 1]
+    if m in (0xD9, 0x01) or 0xD0 <= m <= 0xD7:
+        return m, None, pos + 2
+    ln = int.from_bytes(data[pos + 2:pos + 4], "big")
+    if ln < 2 or pos + 2 + ln > len(data):
+        raise ValueError(f"truncated JPEG segment 0xFF{m:02X}")
+    return m, data[pos + 4:pos + 2 + ln], pos + 2 + ln
+
+
+def _parse_tables(m: int, seg: bytes, qts: dict, dcs: dict, acs: dict) -> None:
+    """DQT (0xDB) or DHT (0xC4) payload -> quant / Huffman LUT dicts."""
+    s = 0
+    while s < len(seg):
+        th = seg[s] & 0xF
+        if m == 0xDB:
+            if seg[s] >> 4:
+                raise NotImplementedError("16-bit quant tables")
+            if s + 65 > len(seg):
+                raise ValueError("truncated DQT segment")
+            tbl = np.zeros(64, dtype=np.int32)
+            tbl[_ZZ] = np.frombuffer(seg, np.uint8, 64, s + 1)
+            qts[th] = tbl.reshape(8, 8)
+            s += 65
+        else:
+            nv = sum(seg[s + 1:s + 17])
+            if s + 17 + nv > len(seg):
+                raise ValueError("truncated DHT segment")
+            (acs if seg[s] >> 4 else dcs)[th] = _decode_lut(
+                bytes(seg[s + 1:s + 17]), bytes(seg[s + 17:s + 17 + nv])
+            )
+            s += 17 + nv
+
+
+def _parse_sof(seg: bytes) -> tuple:
+    """SOF0/SOF2 payload -> ((h, w, nc), [(id, sampling, tq), ...])."""
+    if len(seg) < 6:
+        raise ValueError("truncated SOF segment")
+    prec, h, w, nc = struct.unpack(">BHHB", seg[:6])
+    if prec != 8:
+        raise NotImplementedError("non-8-bit precision")
+    if nc not in (1, 3):
+        raise NotImplementedError(f"{nc}-component JPEG")
+    if len(seg) < 6 + 3 * nc or not h or not w:
+        raise ValueError("truncated or empty SOF frame")
+    comps = []
+    for ci in range(nc):
+        cid, samp, tq = seg[6 + 3 * ci:9 + 3 * ci]
+        hs, vs = samp >> 4, samp & 0xF
+        if not (1 <= hs <= 2 and 1 <= vs <= 2):
+            raise NotImplementedError(f"sampling factors {hs}x{vs} (only 1-2 supported)")
+        comps.append((cid, samp, tq))
+    return (h, w, nc), comps
+
+
+def _parse_sos(seg: bytes) -> tuple:
+    """SOS payload -> ([(id, Td, Ta), ...], Ss, Se, Ah, Al)."""
+    ns = seg[0] if seg else 0
+    if not ns or len(seg) < 4 + 2 * ns:
+        raise ValueError("truncated SOS segment")
+    tabs = [(seg[i], seg[i + 1] >> 4, seg[i + 1] & 0xF)
+            for i in range(1, 1 + 2 * ns, 2)]
+    ss, se, ahal = seg[1 + 2 * ns:4 + 2 * ns]
+    return tabs, ss, se, ahal >> 4, ahal & 0xF
+
+
 def decode_jpeg(data: bytes) -> np.ndarray:
     """JFIF bytes -> (h, w, 3) uint8 RGB. Supports baseline sequential
     (SOF0): 8-bit, 1x1/2x2 sampling (4:4:4, 4:2:0 and the rectangular
@@ -490,66 +568,25 @@ def decode_jpeg(data: bytes) -> np.ndarray:
     intervals (DRI/RSTn) — and PROGRESSIVE (SOF2) streams, dispatched
     to jpeg_progressive.decode_jpeg_progressive. Arithmetic coding,
     hierarchical/lossless SOFs, and sampling factors > 2 raise
-    NotImplementedError — explicitly unsupported, never guessed."""
+    NotImplementedError — explicitly unsupported, never guessed;
+    corrupt or truncated streams raise ValueError."""
     if data[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (no SOI)")
     qts: dict[int, np.ndarray] = {}
-    dcs: dict[int, dict] = {}
-    acs: dict[int, dict] = {}
+    dcs: dict[int, tuple] = {}
+    acs: dict[int, tuple] = {}
     sof = None
     comps: list[tuple[int, int, int]] = []  # (id, sampling, tq)
     ri = 0  # restart interval in MCUs (DRI; 0 = none)
     pos = 2
     while pos < len(data):
-        if data[pos] != 0xFF:
-            raise ValueError("marker expected")
-        m = data[pos + 1]
-        pos += 2
+        m, seg, pos = _marker_segment(data, pos)
         if m == 0xD9:
             break
-        if m in (0x01,) or 0xD0 <= m <= 0xD7:
-            continue  # standalone
-        ln = struct.unpack(">H", data[pos:pos + 2])[0]
-        seg = data[pos + 2:pos + ln]
-        if m == 0xDB:
-            s = 0
-            while s < len(seg):
-                pq, tq = seg[s] >> 4, seg[s] & 0xF
-                if pq != 0:
-                    raise NotImplementedError("16-bit quant tables")
-                tbl = np.zeros(64, dtype=np.int32)
-                tbl[_ZZ] = np.frombuffer(
-                    seg[s + 1:s + 65], dtype=np.uint8
-                ).astype(np.int32)
-                qts[tq] = tbl.reshape(8, 8)
-                s += 65
-        elif m == 0xC4:
-            s = 0
-            while s < len(seg):
-                tc, th = seg[s] >> 4, seg[s] & 0xF
-                bits = seg[s + 1:s + 17]
-                nv = sum(bits)
-                vals = seg[s + 17:s + 17 + nv]
-                (dcs if tc == 0 else acs)[th] = _decode_lut(
-                    bytes(bits), bytes(vals)
-                )
-                s += 17 + nv
+        if m in (0xDB, 0xC4):
+            _parse_tables(m, seg, qts, dcs, acs)
         elif m == 0xC0:
-            prec, h, w, nc = struct.unpack(">BHHB", seg[:6])
-            if prec != 8:
-                raise NotImplementedError("non-8-bit precision")
-            if nc not in (1, 3):
-                raise NotImplementedError(f"{nc}-component JPEG")
-            comps = []
-            for ci in range(nc):
-                cid, samp, tq = seg[6 + 3 * ci:9 + 3 * ci]
-                hs, vs = samp >> 4, samp & 0xF
-                if not (1 <= hs <= 2 and 1 <= vs <= 2):
-                    raise NotImplementedError(
-                        f"sampling factors {hs}x{vs} (only 1-2 supported)"
-                    )
-                comps.append((cid, samp, tq))
-            sof = (h, w, nc)
+            sof, comps = _parse_sof(seg)
         elif m in (0xC1,):
             raise NotImplementedError("extended sequential JPEG (SOF1)")
         elif m == 0xC2:  # progressive DCT: full Annex G support
@@ -564,18 +601,12 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                 f"non-baseline JPEG (SOF marker 0xFF{m:02X})"
             )
         elif m == 0xDD:
-            ri = struct.unpack(">H", seg[:2])[0]
+            ri = int.from_bytes(seg[:2], "big")
         elif m == 0xDA:
-            ns = seg[0]
-            scan_tabs = []
-            for ci in range(ns):
-                cid, tt = seg[1 + 2 * ci], seg[2 + 2 * ci]
-                scan_tabs.append((cid, tt >> 4, tt & 0xF))
-            pos += ln
+            scan_tabs = _parse_sos(seg)[0]
             return _decode_scan(
                 data, pos, sof, comps, scan_tabs, qts, dcs, acs, ri
             )
-        pos += ln
     raise ValueError("no SOS marker found")
 
 
@@ -588,73 +619,102 @@ def _decode_scan(data, pos, sof, comps, scan_tabs, qts, dcs, acs, ri=0):
     vmax = max(s[1] for s in samps)
     mcus_x = -(-w // (8 * hmax))
     mcus_y = -(-h // (8 * vmax))
-    br = _BitReader(data[pos:])
-    # per component: block rows written in MCU order at grid coordinates
-    grid_dims = [
-        (mcus_y * vs, mcus_x * hs) for hs, vs in samps
-    ]
-    zz_rows: list[list] = [
-        [None] * (r * c) for r, c in grid_dims
-    ]
+    # per component: zigzag coefficients of every grid block, flat and
+    # row-major over grid_dims, written in MCU order
+    grid_dims = [(mcus_y * vs, mcus_x * hs) for hs, vs in samps]
+    coefs = [array("i", bytes(256 * r * c)) for r, c in grid_dims]
     order = {cid: i for i, (cid, _, _) in enumerate(comps)}
-    prev_dc = [0] * nc
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            for cid, dct, act in scan_tabs:
-                ci = order[cid]
-                hs, vs = samps[ci]
-                dtab, atab = dcs[dct], acs[act]
-                for by in range(vs):
-                    for bx in range(hs):
-                        s = _read_symbol(br, dtab)
-                        diff = _extend(br.bits(s), s) if s else 0
-                        prev_dc[ci] += diff
-                        zz = [0] * 64
-                        zz[0] = prev_dc[ci]
-                        k = 1
-                        while k < 64:
-                            rs = _read_symbol(br, atab)
-                            r, s = rs >> 4, rs & 0xF
-                            if s == 0:
-                                if r == 15:
-                                    k += 16  # ZRL
-                                    continue
-                                break  # EOB
-                            k += r
-                            if k > 63:
-                                raise ValueError("AC run past block end")
-                            zz[k] = _extend(br.bits(s), s)
-                            k += 1
-                        idx = (my * vs + by) * (mcus_x * hs) + (
-                            mx * hs + bx
-                        )
-                        zz_rows[ci][idx] = zz
-            m = my * mcus_x + mx + 1
-            if ri and m % ri == 0 and m < mcus_y * mcus_x:
-                br.restart((m // ri - 1) & 7)
-                prev_dc = [0] * nc  # DC predictors reset per E.2.4
-    return _reconstruct_planes(zz_rows, comps, samps, grid_dims, qts, h, w, nc)
+    units = []  # per scan component: MCU steps, block offsets, tables
+    for cid, dct, act in scan_tabs:
+        if cid not in order or dct not in dcs or act not in acs:
+            raise ValueError("scan names an undefined component or table")
+        ci = order[cid]
+        hs, vs = samps[ci]
+        gcols = mcus_x * hs
+        offs = [64 * (by * gcols + bx) for by in range(vs) for bx in range(hs)]
+        units.append((ci, 64 * vs * gcols, 64 * hs, offs, *dcs[dct], *acs[act]))
+    if sorted(u[0] for u in units) != list(range(nc)):
+        raise ValueError("scan does not cover every frame component")
+    br = _BitReader(data, pos)
+    win, p, lim = br.win, br.p, br.lim
+    pred = [0] * nc
+    n_mcus = mcus_y * mcus_x
+    for m in range(n_mcus):
+        my, mx = divmod(m, mcus_x)
+        for ci, rstep, cstep, offs, dsym, dlen, asym, alen in units:
+            out = coefs[ci]
+            dc = pred[ci]
+            for o in offs:
+                if p >= lim:
+                    win, p, lim = br.refill(p)
+                x = win[p]
+                ln = dlen[x >> 16]
+                if not ln:
+                    raise ValueError("invalid Huffman code in JPEG scan")
+                s = dsym[x >> 16]
+                p += ln + s
+                if s:
+                    v = (x >> (32 - ln - s)) & ((1 << s) - 1)
+                    dc += v if v >> (s - 1) else v - (1 << s) + 1
+                    if s > 11 or not -32768 <= dc <= 32767:
+                        raise ValueError("DC difference or coefficient out of range")
+                o += my * rstep + mx * cstep
+                out[o] = dc
+                k = 1
+                while k < 64:
+                    x = win[p]
+                    ln = alen[x >> 16]
+                    if not ln:
+                        raise ValueError("invalid Huffman code in JPEG scan")
+                    rs = asym[x >> 16]
+                    s = rs & 15
+                    p += ln + s
+                    if s:
+                        k += rs >> 4
+                        if k > 63:
+                            raise ValueError("AC run past block end")
+                        v = (x >> (32 - ln - s)) & ((1 << s) - 1)
+                        out[o + k] = v if v >> (s - 1) else v - (1 << s) + 1
+                        k += 1
+                    elif rs == 0xF0:
+                        k += 16  # ZRL
+                    else:
+                        break  # EOB
+            pred[ci] = dc
+        if ri and (m + 1) % ri == 0 and m + 1 < n_mcus:
+            win, p, lim = br.restart(((m + 1) // ri - 1) & 7, p)
+            pred = [0] * nc  # DC predictors reset per E.2.4
+    zz = [np.frombuffer(c, np.int32).reshape(-1, 64) for c in coefs]
+    return _reconstruct_planes(zz, comps, samps, grid_dims, qts, h, w, nc)
+
+
+@_lru_cache(maxsize=64)
+def _idct_matrix(qt: bytes) -> np.ndarray:
+    """Dezigzag, dequantize and 2-D IDCT of one block as one 64x64 map:
+    (blocks, 64) zigzag coefficients @ M = (blocks, 64) pixels - 128,
+    row-major within the block. Cached per quant table."""
+    q_zz = np.frombuffer(qt, np.int32)[_ZZ].astype(np.float64)
+    m = np.kron(_T8.T, _T8.T)[:, _ZZ].T * q_zz[:, None]
+    m.setflags(write=False)  # shared by every caller through the cache
+    return m
 
 
 def _reconstruct_planes(zz_arrays, comps, samps, grid_dims, qts, h, w, nc):
     """Dezigzag + dequant + IDCT + chroma upsample + crop — the shared
     reconstruction tail for the baseline and progressive decoders.
-    ``zz_arrays[ci]`` is an (n_blocks, 64) array (or list of lists) of
-    quantizer-domain coefficients in zigzag order, blocks in row-major
-    grid order over ``grid_dims[ci]``."""
+    ``zz_arrays[ci]`` is an (n_blocks, 64) array of quantizer-domain
+    coefficients in zigzag order, blocks in row-major grid order over
+    ``grid_dims[ci]``."""
     hmax = max(s[0] for s in samps)
     vmax = max(s[1] for s in samps)
     planes = []
     for ci in range(nc):
         hs, vs = samps[ci]
         rows, cols = grid_dims[ci]
-        # vectorized dezigzag + dequant over ALL blocks of the component
-        zzv = np.asarray(zz_arrays[ci], dtype=np.float64)
-        qzz = qts[comps[ci][2]].ravel()[_ZZ].astype(np.float64)
-        coeff = np.zeros((rows * cols, 64), dtype=np.float64)
-        coeff[:, _ZZ] = zzv * qzz[None, :]
-        f = coeff.reshape(-1, 8, 8)
-        px = np.einsum("xu,nuv,yv->nxy", _T8.T, f, _T8.T) + 128.0
+        if comps[ci][2] not in qts:
+            raise ValueError("component names an undefined quant table")
+        qt = np.asarray(qts[comps[ci][2]], np.int32).tobytes()
+        px = np.asarray(zz_arrays[ci], np.float64) @ _idct_matrix(qt) + 128.0
         plane = (
             px.reshape(rows, cols, 8, 8).transpose(0, 2, 1, 3)
             .reshape(rows * 8, cols * 8)
@@ -671,13 +731,13 @@ def _reconstruct_planes(zz_arrays, comps, samps, grid_dims, qts, h, w, nc):
 
 def _read_symbol(br: _BitReader, table: tuple) -> int:
     sym_arr, ln_arr = table
-    if br.n < 16:
-        br._fill_to(16)
-    idx = (br.acc >> (br.n - 16)) & 0xFFFF
+    if br.p >= br.lim:
+        br.refill(br.p)
+    idx = br.win[br.p] >> 16
     length = ln_arr[idx]
     if length == 0:
         raise ValueError("invalid Huffman code in JPEG scan")
-    br.n -= length
+    br.p += length
     return sym_arr[idx]
 
 

@@ -19,10 +19,12 @@ scan script).
   runs, AC refinement with correction bits (the G.1.2.3 algorithm),
   any spectral band / successive-approximation split, restart
   intervals, grayscale or color, reusing the baseline module's
-  bit-reader, 16-bit-peek Huffman LUT, and IDCT reconstruction —
-  so a fully-refined progressive stream decodes BIT-IDENTICALLY to
-  the baseline encoding of the same image (the tests assert exactly
-  that).
+  marker parsers, entropy-segment reader (``jpeg._BitReader``: one
+  segment scan and unstuffing per restart interval, bit windows
+  per bounded chunk, the ≤7-fill-bit check at each RSTn), 16-bit-peek
+  Huffman LUT, and IDCT reconstruction — so a fully-refined
+  progressive stream decodes BIT-IDENTICALLY to the baseline encoding
+  of the same image (the tests assert exactly that).
 
 Both halves share the baseline codec's plane prep and reconstruction
 (`jpeg._quantized_grids`, `jpeg._reconstruct_planes`), so quantizer
@@ -39,10 +41,13 @@ from query_cost_feature_engineering_spark.jpeg import (
     _ZZ,
     _BitReader,
     _BitWriter,
-    _decode_lut,
     _extend,
     _huff_encode_table,
     _magnitude,
+    _marker_segment,
+    _parse_sof,
+    _parse_sos,
+    _parse_tables,
     _quantized_grids,
     _read_symbol,
     _reconstruct_planes,
@@ -429,55 +434,14 @@ def decode_jpeg_progressive(data: bytes) -> np.ndarray:
     samps: list[tuple[int, int]] = []
     pos = 2
     while pos < len(data):
-        if data[pos] != 0xFF:
-            raise ValueError("marker expected")
-        m = data[pos + 1]
-        pos += 2
+        m, seg, pos = _marker_segment(data, pos)
         if m == 0xD9:
             break
-        if m in (0x01,) or 0xD0 <= m <= 0xD7:
-            continue
-        ln = struct.unpack(">H", data[pos : pos + 2])[0]
-        seg = data[pos + 2 : pos + ln]
-        if m == 0xDB:
-            s = 0
-            while s < len(seg):
-                pq, tq = seg[s] >> 4, seg[s] & 0xF
-                if pq != 0:
-                    raise NotImplementedError("16-bit quant tables")
-                tbl = np.zeros(64, dtype=np.int32)
-                tbl[_ZZ] = np.frombuffer(
-                    seg[s + 1 : s + 65], dtype=np.uint8
-                ).astype(np.int32)
-                qts[tq] = tbl.reshape(8, 8)
-                s += 65
-        elif m == 0xC4:
-            s = 0
-            while s < len(seg):
-                tc, th = seg[s] >> 4, seg[s] & 0xF
-                bits = seg[s + 1 : s + 17]
-                nv = sum(bits)
-                vals = seg[s + 17 : s + 17 + nv]
-                (dcs if tc == 0 else acs)[th] = _decode_lut(
-                    bytes(bits), bytes(vals)
-                )
-                s += 17 + nv
+        if m in (0xDB, 0xC4):
+            _parse_tables(m, seg, qts, dcs, acs)
         elif m == 0xC2:
-            prec, h, w, nc = struct.unpack(">BHHB", seg[:6])
-            if prec != 8:
-                raise NotImplementedError("non-8-bit precision")
-            if nc not in (1, 3):
-                raise NotImplementedError(f"{nc}-component JPEG")
-            comps = []
-            for ci in range(nc):
-                cid, samp, tq = seg[6 + 3 * ci : 9 + 3 * ci]
-                hs, vs = samp >> 4, samp & 0xF
-                if not (1 <= hs <= 2 and 1 <= vs <= 2):
-                    raise NotImplementedError(
-                        f"sampling factors {hs}x{vs} (only 1-2 supported)"
-                    )
-                comps.append((cid, samp, tq))
-            sof = (h, w, nc)
+            sof, comps = _parse_sof(seg)
+            h, w, nc = sof
             samps = [(c[1] >> 4, c[1] & 0xF) for c in comps]
             hmax = max(s[0] for s in samps)
             vmax = max(s[1] for s in samps)
@@ -490,25 +454,16 @@ def decode_jpeg_progressive(data: bytes) -> np.ndarray:
         elif m == 0xC0:
             raise ValueError("baseline SOF0 in progressive decoder")
         elif m == 0xDD:
-            ri = struct.unpack(">H", seg[:2])[0]
+            ri = int.from_bytes(seg[:2], "big")
         elif m == 0xDA:
             if sof is None:
                 raise ValueError("SOS before SOF2")
-            ns = seg[0]
-            scan_comps = []
-            for ci in range(ns):
-                cid, tt = seg[1 + 2 * ci], seg[2 + 2 * ci]
-                scan_comps.append((cid, tt >> 4, tt & 0xF))
-            ss, se, ahal = seg[1 + 2 * ns : 4 + 2 * ns]
-            ah, al = ahal >> 4, ahal & 0xF
-            pos += ln
+            scan_comps, ss, se, ah, al = _parse_sos(seg)
             pos = _decode_progressive_scan(
                 data, pos, sof, comps, samps, grid_dims, coef,
                 scan_comps, ss, se, ah, al, dcs, acs, ri,
                 mcus_x, mcus_y,
             )
-            continue
-        pos += ln
     if sof is None:
         raise ValueError("no SOF2 frame header found")
     h, w, nc = sof
@@ -517,35 +472,23 @@ def decode_jpeg_progressive(data: bytes) -> np.ndarray:
     )
 
 
-def _next_marker(data: bytes, p: int) -> int:
-    """Byte offset of the next real marker at/after p (skips entropy
-    bytes, stuffed FF00 pairs, and FF fill bytes)."""
-    n = len(data)
-    while p < n:
-        if data[p] != 0xFF:
-            p += 1
-            continue
-        if p + 1 < n and data[p + 1] == 0x00:
-            p += 2
-            continue
-        while p + 1 < n and data[p + 1] == 0xFF:
-            p += 1
-        return p
-    raise ValueError("JPEG stream truncated inside scan")
-
-
 def _decode_progressive_scan(
     data, pos, sof, comps, samps, grid_dims, coef, scan_comps,
     ss, se, ah, al, dcs, acs, ri, mcus_x, mcus_y,
 ):
     h, w, nc = sof
     order = {cid: i for i, (cid, _, _) in enumerate(comps)}
-    br = _BitReader(data[pos:])
+    br = _BitReader(data, pos)
     is_dc = ss == 0
     if is_dc and se != 0:
         raise ValueError("DC scan must have Se=0")
     if not is_dc and len(scan_comps) != 1:
         raise ValueError("AC scans must be non-interleaved (B.2.3)")
+    if se > 63 or ss > se or any(c[0] not in order for c in scan_comps):
+        raise ValueError("scan names a bad band or an undefined component")
+    tabs = acs if ss else dcs  # a DC refinement scan decodes no symbol
+    if not (is_dc and ah) and any(c[2 if ss else 1] not in tabs for c in scan_comps):
+        raise ValueError("scan names an undefined Huffman table")
 
     eobrun = 0
     if is_dc and len(scan_comps) > 1:
@@ -567,12 +510,14 @@ def _decode_progressive_scan(
                                 s = _read_symbol(br, dcs[dct])
                                 diff = _extend(br.bits(s), s) if s else 0
                                 prev[ci] += diff
+                                if not -32768 <= prev[ci] <= 32767:
+                                    raise ValueError("DC coefficient out of range")
                                 coef[ci][idx, 0] = prev[ci] << al
                             elif br.bits(1):
                                 coef[ci][idx, 0] |= 1 << al
                 m += 1
                 if ri and m % ri == 0 and m < n_mcus:
-                    br.restart((m // ri - 1) & 7)
+                    br.restart((m // ri - 1) & 7, br.p)
                     prev = [0] * nc
     else:
         cid, dct, act = scan_comps[0]
@@ -596,6 +541,8 @@ def _decode_progressive_scan(
                         s = _read_symbol(br, dcs[dct])
                         diff = _extend(br.bits(s), s) if s else 0
                         prev_dc += diff
+                        if not -32768 <= prev_dc <= 32767:
+                            raise ValueError("DC coefficient out of range")
                         cz[idx, 0] = prev_dc << al
                     elif br.bits(1):
                         cz[idx, 0] |= 1 << al
@@ -609,10 +556,13 @@ def _decode_progressive_scan(
                     )
                 b += 1
                 if ri and b % ri == 0 and b < n_blocks:
-                    br.restart((b // ri - 1) & 7)
+                    br.restart((b // ri - 1) & 7, br.p)
                     prev_dc = 0
                     eobrun = 0
-    return _next_marker(data, pos + br.pos)
+    q = br.marker()
+    if q + 1 >= len(data):
+        raise ValueError("JPEG stream truncated inside scan")
+    return q
 
 
 def _ac_first_block(br, cz, idx, ss, se, al, atab, eobrun):

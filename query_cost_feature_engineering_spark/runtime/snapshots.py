@@ -97,6 +97,14 @@ REWRITE_DELETED_SHARE = 0.3
 _URI_SAFE = "/_-!.~'()*,;:$&+=@"
 
 
+def _abs(table_dir: str) -> str:
+    """``table_dir`` made absolute against the driver's working directory.
+    Spark resolves a relative path against the JVM's working directory,
+    which ``os.chdir`` in the driver does not move, so every entry point
+    that hands a path to Spark or pyarrow resolves it here first."""
+    return os.path.abspath(table_dir)
+
+
 def snapshot_log(table_dir: str) -> list[dict]:
     """Commit history, oldest first (Iceberg: table history metadata)."""
     sdir = _snap_path(table_dir)
@@ -341,6 +349,7 @@ def read_table(
     Spark filters — so results are exact regardless of how much the
     stats could prune, and parquet row-group pruning still applies
     within the kept files. Deletes are loaded for the kept files only."""
+    table_dir = _abs(table_dir)
     meta = snapshot_meta(table_dir, version)
     files = prune_files(table_dir, where, version)[0] if where else meta["files"]
     if not files:
@@ -431,6 +440,7 @@ def write_snapshot(
     streaming commits (see ``txn_version``)."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
+    table_dir = _abs(table_dir)
     parent = current_version(table_dir)
     version = parent + 1
     schema_json = df.schema.json()
@@ -538,6 +548,7 @@ def delete_where(
     predicate is NULL stays, as in SQL ``DELETE`` — and the commit writes
     them as one position-delete file. Every data file is carried into the
     new snapshot untouched (byte-identical — pinned by test)."""
+    table_dir = _abs(table_dir)
     parent = current_version(table_dir)
     meta = snapshot_meta(table_dir, parent)
     hits = _live_hits(
@@ -598,6 +609,7 @@ def merge_into(
     _keys`` enforces the same contract on the collected source keys."""
     import pyarrow.compute as pc
 
+    table_dir = _abs(table_dir)
     parent = current_version(table_dir)
     meta = snapshot_meta(table_dir, parent)
     cols = StructType.fromJson(json.loads(meta["schema"])).fieldNames()
@@ -620,10 +632,11 @@ def merge_into(
         .toArrow()
     )
     from_source = pc.is_null(found[_FILE_COL])
-    if validate_source_keys:
-        src = found.filter(from_source).select(on)
-        if src.group_by(on).aggregate([]).num_rows < src.num_rows:
-            raise ValueError("MERGE source has duplicate keys on " + str(on))
+    src = found.filter(from_source).select(on)
+    if validate_source_keys and (
+        src.group_by(on).aggregate([]).num_rows < src.num_rows
+    ):
+        raise ValueError("MERGE source has duplicate keys on " + str(on))
     hits = _live_hits(table_dir, meta, found.filter(pc.invert(from_source)))
 
     out = source.select(*cols)
@@ -640,7 +653,8 @@ def merge_into(
         ).select(*cols)
 
     version = parent + 1
-    new_files = _write_data(out, table_dir, version)
+    # an empty source still commits (its txn is recorded) but adds no file
+    new_files = _write_data(out, table_dir, version) if src.num_rows else []
     deletes, written = meta.get("deletes", {}), []
     if hits.num_rows:
         rel, deletes = _write_deletes(table_dir, version, hits, deletes)
@@ -682,6 +696,7 @@ def read_changes(
     both versions, correct for any history. Callers needing O(delta)
     merge feeds should consume per-commit (``from = to - 1``) right
     after each merge, or use the CDC stream itself."""
+    table_dir = _abs(table_dir)
     to_v = current_version(table_dir) if to_version is None else to_version
     if to_v < from_version:
         raise ValueError(f"to_version {to_v} < from_version {from_version}")
@@ -736,6 +751,7 @@ def compact_table(
     fall out via ``expire_snapshots``."""
     import pyarrow.parquet as pq
 
+    table_dir = _abs(table_dir)
     parent = current_version(table_dir)
     meta = snapshot_meta(table_dir, parent)
     root = Path(table_dir)

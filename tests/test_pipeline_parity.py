@@ -90,8 +90,26 @@ def test_caption_tokenizer_matches_golden_on_edges(spark, images_pdf):
         assert np.array_equal(got[c], want[c].astype(float)), c
 
 
-def _py4j_commands(build) -> int:
+def _py4j_commands(spark, build) -> int:
+    import gc
+
     from py4j.clientserver import ClientServerConnection
+
+    # py4j releases a Java object when its Python proxy dies: the proxy's
+    # finalizer queues a memory-delete command that a background thread
+    # sends later. Collect and send the garbage of earlier tests before
+    # counting, keep the cycle collector off during the build, and send
+    # the build's own deletes before the count ends, so every command of
+    # the build is counted and no one else's is.
+    queue = spark.sparkContext._gateway._gateway_client.finalizer_deque
+
+    def send_deletes():
+        while True:
+            try:
+                client, target_id = queue.pop()
+            except IndexError:
+                return
+            client.garbage_collect_object(target_id, False)
 
     orig = ClientServerConnection.send_command
     n = 0
@@ -101,11 +119,17 @@ def _py4j_commands(build) -> int:
         n += 1
         return orig(self, command)
 
+    gc.collect()
+    send_deletes()
+    gc.disable()
     ClientServerConnection.send_command = counting
     try:
         build()
+        gc.collect()
+        send_deletes()
     finally:
         ClientServerConnection.send_command = orig
+        gc.enable()
     return n
 
 
@@ -117,8 +141,8 @@ def test_plan_construction_py4j_budget(spark, images_sdf):
     )
 
     n_batch = _py4j_commands(
-        lambda: assemble_vector(compute_features(images_sdf))
+        spark, lambda: assemble_vector(compute_features(images_sdf))
     )
-    n_stream = _py4j_commands(lambda: image_features_stream(images_sdf))
+    n_stream = _py4j_commands(spark, lambda: image_features_stream(images_sdf))
     assert n_batch < 2000, n_batch
     assert n_stream < 2000, n_stream

@@ -101,6 +101,32 @@ def test_merge_upsert_semantics(spark, table):
     assert cur[50] == (50 % 3, 50.0)
 
 
+def test_relative_table_dir_after_chdir(spark, tmp_path, monkeypatch):
+    """A relative ``table_dir`` names a directory under the driver's
+    working directory for Spark as well as for the manifest code, also
+    after ``os.chdir`` (the JVM's working directory does not follow)."""
+    monkeypatch.chdir(tmp_path)
+    v = S.write_snapshot(_mk(spark, [(i, 0, 1.0) for i in range(10)]), "rel_tbl")
+    assert v["files"] and (tmp_path / "rel_tbl" / v["files"][0]).is_file()
+    res = S.merge_into(spark, "rel_tbl", _mk(spark, [(3, 1, 9.0), (50, 1, 2.0)]), on=["k"])
+    assert res["rows_added"] == 2 and res["rows_deleted"] == 1
+    got = _as_dict(S.read_table(spark, "rel_tbl"))
+    assert len(got) == 11 and got[3] == (1, 9.0) and got[0] == (0, 1.0)
+
+
+def test_empty_source_merge_commits_no_data_file(spark, table):
+    """An empty MERGE source commits (recording its writer txn) without
+    adding a 0-row data file that every later snapshot would carry."""
+    parent = S.snapshot_meta(table, S.current_version(table))
+    src = _mk(spark, [(1, 1, 1.0)]).limit(0)
+    res = S.merge_into(spark, table, src, on=["k"], txn=("app", 7))
+    meta = S.snapshot_meta(table, res["version"])
+    assert meta["files"] == parent["files"]
+    assert res["rows_added"] == 0 and res["rows_deleted"] == 0
+    assert S.txn_version(table, "app") == 7
+    assert S.read_table(spark, table).count() == 100
+
+
 def test_merge_rejects_duplicate_source_keys(spark, table):
     src = _mk(spark, [(1, 0, 0.0), (1, 0, 1.0)])
     with pytest.raises(ValueError, match="duplicate keys"):
