@@ -61,13 +61,6 @@ def encode_png(arr: np.ndarray) -> bytes:
     return PNG_SIG + _chunk(b"IHDR", ihdr) + _chunk(b"IDAT", idat) + _chunk(b"IEND", b"")
 
 
-def _paeth(a: np.ndarray, b: np.ndarray, c: np.ndarray) -> np.ndarray:
-    p = a.astype(np.int16) + b.astype(np.int16) - c.astype(np.int16)
-    pa, pb, pc = np.abs(p - a), np.abs(p - b), np.abs(p - c)
-    out = np.where((pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, c))
-    return out.astype(np.uint8)
-
-
 # channels per PNG color type (0 grey, 2 RGB, 3 palette, 4 grey+alpha,
 # 6 RGBA) — the decoder accepts all five, per the spec's valid set
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
@@ -88,31 +81,30 @@ def _png_unfilter(raw: bytes, h: int, stride: int, bpp: int) -> np.ndarray:
         h, 1 + stride
     )
     filters = arr[:, 0]
-    out = np.zeros((h, stride), dtype=np.uint8)
-    for y in range(h):
-        line = arr[y, 1:].copy()
-        f = filters[y]
-        prev = out[y - 1] if y > 0 else np.zeros(stride, dtype=np.uint8)
-        if f == 0:
-            out[y] = line
+    out = arr[:, 1:].copy()  # lines decode in place; uint8 adds wrap mod 256
+    for y in np.flatnonzero(filters):
+        f, cur = filters[y], out[y]
+        if f == 1:  # Sub: running sum over every bpp-th byte
+            px = cur.reshape(-1, bpp)
+            np.cumsum(px, axis=0, dtype=np.uint8, out=px)
         elif f == 2:  # Up
-            out[y] = line + prev
-        elif f in (1, 3, 4):  # Sub / Average / Paeth: left recurrence
-            cur = np.zeros(stride, dtype=np.uint8)
+            if y:
+                cur += out[y - 1]
+        elif f in (3, 4):  # Average / Paeth: per-pixel left recurrence
+            line = cur.tolist()
+            prev = out[y - 1].tolist() if y else [0] * stride
             for x in range(stride):
-                a = int(cur[x - bpp]) if x >= bpp else 0
-                b = int(prev[x])
-                c = int(prev[x - bpp]) if x >= bpp else 0
-                if f == 1:
-                    cur[x] = (int(line[x]) + a) & 0xFF
-                elif f == 3:
-                    cur[x] = (int(line[x]) + (a + b) // 2) & 0xFF
+                a = line[x - bpp] if x >= bpp else 0
+                b = prev[x]
+                if f == 3:
+                    pred = (a + b) // 2
                 else:  # Paeth (modular add per spec)
+                    c = prev[x - bpp] if x >= bpp else 0
                     p = a + b - c
                     pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
                     pred = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
-                    cur[x] = (int(line[x]) + pred) & 0xFF
-            out[y] = cur
+                line[x] = (line[x] + pred) & 0xFF
+            cur[:] = line
         else:
             raise ValueError(f"bad PNG filter {f}")
     return out
@@ -1513,12 +1505,12 @@ def _dct_matrix(n: int) -> np.ndarray:
 _DCT32 = _dct_matrix(_PHASH_N)
 
 
+_LUMA = np.array([299, 587, 114], dtype=np.int64)
+
+
 def to_gray(arr: np.ndarray) -> np.ndarray:
     """Integer ITU-R 601 luma: (299R + 587G + 114B) // 1000 — exact/deterministic."""
-    a = arr.astype(np.int64)
-    return ((299 * a[..., 0] + 587 * a[..., 1] + 114 * a[..., 2]) // 1000).astype(
-        np.uint8
-    )
+    return ((arr @ _LUMA) // 1000).astype(np.uint8)
 
 
 def _resize_nn(gray: np.ndarray, n: int) -> np.ndarray:

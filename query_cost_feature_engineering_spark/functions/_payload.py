@@ -83,8 +83,9 @@ def with_payload_columns(
     """Append ``schema``'s fields (plus ``decode_ok`` when
     ``on_error='null'``) as columns computed by ``row_fn`` over
     ``inputs``. Map-only: one Arrow UDF evaluation per row, its struct
-    unpacked in a single ``withColumns`` pass. ``drop_payload`` removes
-    ``bytes`` afterwards so downstream shuffles never carry payloads."""
+    unpacked in one projection of SQL text: a field named like an input
+    column replaces it in place, the others are appended. ``drop_payload``
+    removes ``bytes`` so downstream shuffles never carry payloads."""
     out_schema = (
         schema
         if on_error == "fail"
@@ -97,8 +98,11 @@ def with_payload_columns(
         return payload_frame(row_fn, schema, *cols, on_error=on_error)
 
     udf.__name__ = row_fn.__name__  # names the UDF in the plan
+    cols, fields = df.columns, out_schema.fieldNames()
+    q = {c: "`" + c.replace("`", "``") + "`" for c in cols + fields}
+    field = {c: f"`_payload`.{q[c]} AS {q[c]}" for c in fields}
     df = df.withColumn("_payload", F.pandas_udf(udf, out_schema)(*inputs))
-    out = df.withColumns(
-        {c: F.col(f"_payload.{c}") for c in out_schema.fieldNames()}
-    ).drop("_payload")
-    return out.drop("bytes") if drop_payload else out
+    return df.selectExpr(
+        *[field.get(c, q[c]) for c in cols if not (drop_payload and c == "bytes")],
+        *[field[c] for c in fields if c not in cols],
+    )

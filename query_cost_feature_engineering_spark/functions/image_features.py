@@ -48,21 +48,27 @@ _DECODE_SCHEMA = T.StructType(
 FMTS = ["png", "jpeg"]
 
 
+_CHANNEL_BIN = np.array([0, 256, 512])
+
+
 def _decode_stats_row(data: bytes, fmt: str) -> tuple:
     arr = decode_image(data, fmt)
-    flat = arr.reshape(-1, 3)  # stay uint8: min/max/median need no cast
-    gray = to_gray(arr).ravel()
-    hist = np.bincount(gray >> 5, minlength=HIST_BINS) / gray.size
+    flat = arr.reshape(-1, 3)
     n = flat.shape[0]
-    med = []
-    for c in range(3):
-        # exact uint8 median from a bincount (O(n), no sort); averages
-        # the two middle order statistics exactly like np.median
-        cum = np.cumsum(np.bincount(flat[:, c], minlength=256))
-        lo = int(np.searchsorted(cum, (n - 1) // 2 + 1))
-        hi = int(np.searchsorted(cum, n // 2 + 1))
-        med.append((lo + hi) / 2.0)
-    return (*flat.min(axis=0), *med, *flat.max(axis=0), *hist, gray.mean())
+    if n == 0:
+        raise ValueError("image has no pixels")
+    # exact uint8 order statistics without a sort: one 768-bin histogram
+    # (256 bins per channel) and its running count over all channels. The
+    # k-th smallest value of channel c is the first bin where that count
+    # reaches c*n + k, so min, max and the two middle values (averaged,
+    # like np.median) of all channels are one searchsorted.
+    cum = np.bincount((flat + _CHANNEL_BIN).ravel(), minlength=768).cumsum()
+    ks = np.array([1, (n - 1) // 2 + 1, n // 2 + 1, n]) + n * np.arange(3)[:, None]
+    lo, med_lo, med_hi, hi = (np.searchsorted(cum, ks) - _CHANNEL_BIN[:, None]).T
+    gray = np.bincount(to_gray(arr).ravel(), minlength=256)
+    hist = gray.reshape(HIST_BINS, -1).sum(axis=1) / n
+    mean = float(gray @ np.arange(256)) / n  # exact integer sum, as gray.mean()
+    return (*lo, *((med_lo + med_hi) / 2.0), *hi, *hist, mean)
 
 
 def decode_stats_pandas(

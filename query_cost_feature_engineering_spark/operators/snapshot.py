@@ -15,8 +15,14 @@ the zero-temporal-leakage discipline (SURVEY.md §5).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from query_cost_feature_engineering_spark.operators.windows import (
+    CUMULATIVE,
+    over,
+    q,
+)
 
 
 def fit_linear_by_group(
@@ -126,17 +132,9 @@ def annotate_group_fit(
     )
 
 
-def with_expanding_linear_fit(
-    df: DataFrame,
-    x_col: str,
-    y_col: str,
-    entity_col: str = "entity_id",
-    ts_col: str = "ts",
-    tiebreak: str | None = "image_id",
-    prefix: str = "snap",
-    min_n: int = 3,
-    eps: float = 1e-9,
-) -> DataFrame:
+def expanding_linear_fit_exprs(
+    x_col: str, y_col: str, prefix="snap", min_n=3, eps=1e-9, **order
+) -> dict[str, str]:
     """Leakage-free snapshot factors: per-entity OLS of y on x fitted over
     the EXPANDING window of rows at ts' ≤ ts (cumulative sufficient
     statistics inside one Window pass). This is the reference's
@@ -145,30 +143,25 @@ def with_expanding_linear_fit(
     only history ≤ t, so the zero-temporal-leakage property test holds.
     Rows before ``min_n`` samples (or with degenerate x-variance) fall back
     to slope=0, intercept=running mean(y) — the reference's fallback."""
-    order = [F.col(ts_col)] + ([F.col(tiebreak)] if tiebreak else [])
-    w = (
-        Window.partitionBy(entity_col)
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    x, y = F.col(x_col).cast("double"), F.col(y_col).cast("double")
-    n = F.count(F.lit(1)).over(w).cast("double")
-    sx, sy = F.sum(x).over(w), F.sum(y).over(w)
-    sxx, sxy = F.sum(x * x).over(w), F.sum(x * y).over(w)
-    denom = n * sxx - sx * sx
-    ok = (n >= min_n) & (denom > eps)
-    slope = F.when(ok, (n * sxy - sx * sy) / denom).otherwise(F.lit(0.0))
-    intercept = F.when(ok, (sy - slope * sx) / n).otherwise(sy / n)
-    return df.withColumn(f"{prefix}_slope", slope).withColumn(
-        f"{prefix}_intercept", intercept
-    )
+    w = over(CUMULATIVE, **order)
+    x, y = f"CAST({q(x_col)} AS DOUBLE)", f"CAST({q(y_col)} AS DOUBLE)"
+    n = f"CAST(count(1){w} AS DOUBLE)"
+    sx, sy = f"sum({x}){w}", f"sum({y}){w}"
+    sxx, sxy = f"sum({x} * {x}){w}", f"sum({x} * {y}){w}"
+    denom = f"({n} * {sxx} - {sx} * {sx})"
+    ok = f"{n} >= {min_n} AND {denom} > {float(eps)!r}D"
+    slope = f"IF({ok}, ({n} * {sxy} - {sx} * {sy}) / {denom}, 0.0D)"
+    return {
+        f"{prefix}_slope": slope,
+        f"{prefix}_intercept": f"IF({ok}, ({sy} - {slope} * {sx}) / {n}, {sy} / {n})",
+    }
 
 
 def expanding_linear_fit_pandas(
     df, x_col: str, y_col: str, entity_col: str = "entity_id",
     min_n: int = 3, eps: float = 1e-9, prefix: str = "snap",
 ):
-    """Golden twin of ``with_expanding_linear_fit`` (input pre-sorted by
+    """Golden twin of ``expanding_linear_fit_exprs`` (input pre-sorted by
     (entity, ts, tiebreak)); returns (slope, intercept) Series."""
     import numpy as np
 

@@ -1,124 +1,124 @@
 """Point-in-time window layer: lag/lead, backfill, rolling stats, sessionize.
 
-All pure Window-spec expressions (JVM-side, whole-stage codegen) — the
-engine's analog of the reference's child→parent feature flow
+The engine's analog of the reference's child→parent feature flow
 (models/QPPNet.py:177-239): every feature at time t draws only on rows at
 ts ≤ t, which is what makes the layer leakage-free by construction.
 
-Ordering is always (ts, tiebreak_col) — the input table contains duplicate
-timestamps per entity (as-of ties), so a deterministic tiebreak is part of
-the operator contract, matching the golden oracle exactly.
+Each operator is a builder of ``{column: SQL window expression}`` and a
+``with_*`` wrapper appending them in one projection; ``compute_features``
+puts all builders in ONE projection. Spark evaluates the window expressions
+sharing PARTITION BY / ORDER BY in one ``Window`` operator, whatever their
+frames (the session sum over a ``lag`` nests, adding a second).
+
+Ordering is always (ts, tiebreak) — the keywords of ``over`` — since
+entities have duplicate timestamps (as-of ties): a deterministic tiebreak
+is part of the operator contract, matching the golden oracle exactly.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 SESSION_GAP_S = 1800
+CUMULATIVE = " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
 
 
-def _w(entity_col: str, ts_col: str, tiebreak: str | None):
-    order = [F.col(ts_col)] + ([F.col(tiebreak)] if tiebreak else [])
-    return Window.partitionBy(entity_col).orderBy(*order)
+def q(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
-def with_lag_lead(
-    df: DataFrame,
-    value_col: str,
-    entity_col: str = "entity_id",
-    ts_col: str = "ts",
-    offsets: tuple[int, ...] = (1, 2),
-    tiebreak: str | None = "image_id",
-) -> DataFrame:
-    w = _w(entity_col, ts_col, tiebreak)
+def over(frame="", entity_col="entity_id", ts_col="ts", tiebreak="image_id"):
+    """`` OVER (...)`` text: per entity, ordered by (ts, tiebreak) if any."""
+    order = ", ".join(q(c) for c in (ts_col, tiebreak) if c)
+    return f" OVER (PARTITION BY {q(entity_col)} ORDER BY {order}{frame})"
+
+
+def epoch_s(ts_col: str) -> str:
+    # cast via TIMESTAMP (LTZ) first: TIMESTAMP_NTZ inputs can't cast to
+    # double directly; with a UTC session this is exact epoch seconds
+    return f"CAST(CAST({q(ts_col)} AS TIMESTAMP) AS DOUBLE)"
+
+
+def append_columns(df: DataFrame, exprs: dict[str, str]) -> DataFrame:
+    """``df`` plus one column per ``{name: SQL expression}``, one projection."""
+    return df.selectExpr("*", *[f"{e} AS {q(n)}" for n, e in exprs.items()])
+
+
+def lag_lead_exprs(value_col: str, offsets=(1, 2), **order) -> dict[str, str]:
+    w, v = over(**order), q(value_col)
+    out = {}
     for k in offsets:
-        df = df.withColumn(f"lag{k}_{value_col}", F.lag(value_col, k).over(w))
-        df = df.withColumn(f"lead{k}_{value_col}", F.lead(value_col, k).over(w))
-    return df
+        out[f"lag{k}_{value_col}"] = f"lag({v}, {k}){w}"
+        out[f"lead{k}_{value_col}"] = f"lead({v}, {k}){w}"
+    return out
 
 
-def with_backfill(
-    df: DataFrame,
-    value_col: str,
-    out_col: str,
-    entity_col: str = "entity_id",
-    ts_col: str = "ts",
-    direction: str = "ffill",
-    tiebreak: str | None = "image_id",
-) -> DataFrame:
-    """ffill = last non-null at ts' ≤ ts (leakage-free);
-    bfill = first non-null at ts' ≥ ts (only valid for label-side columns)."""
-    w = _w(entity_col, ts_col, tiebreak)
+def backfill_exprs(value: str, out_col: str, direction="ffill", **order):
+    """``value`` is SQL text. ffill = last non-null at ts' ≤ ts
+    (leakage-free); bfill = first non-null at ts' ≥ ts (only valid for
+    label-side columns)."""
     if direction == "ffill":
-        expr = F.last(value_col, ignorenulls=True).over(
-            w.rowsBetween(Window.unboundedPreceding, 0)
-        )
+        fn, frame = "last", CUMULATIVE
     elif direction == "bfill":
-        expr = F.first(value_col, ignorenulls=True).over(
-            w.rowsBetween(0, Window.unboundedFollowing)
-        )
+        fn, frame = "first", " ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING"
     else:
         raise ValueError(direction)
-    return df.withColumn(out_col, expr)
+    return {out_col: f"{fn}({value}, true){over(frame, **order)}"}
 
 
-def with_rolling_mean(
-    df: DataFrame,
-    value_col: str,
-    window_rows: int = 3,
-    entity_col: str = "entity_id",
-    ts_col: str = "ts",
-    tiebreak: str | None = "image_id",
-) -> DataFrame:
+def rolling_mean_exprs(value_col: str, window_rows: int = 3, **order):
     """Trailing mean over the last `window_rows` rows INCLUDING current —
     strictly backward-looking, so leakage-free."""
-    w = _w(entity_col, ts_col, tiebreak).rowsBetween(-(window_rows - 1), 0)
-    return df.withColumn(f"roll{window_rows}_{value_col}", F.avg(value_col).over(w))
+    w = over(f" ROWS BETWEEN {window_rows - 1} PRECEDING AND CURRENT ROW", **order)
+    return {f"roll{window_rows}_{value_col}": f"avg({q(value_col)}){w}"}
 
 
-def with_rolling_time_aggs(
-    df: DataFrame,
+def rolling_time_agg_exprs(
     value_col: str,
     window_s: int,
     entity_col: str = "entity_id",
     ts_col: str = "ts",
     prefix: str | None = None,
-) -> DataFrame:
+) -> dict[str, str]:
     """Time-based trailing window [ts - window_s, ts]: sum/count/mean of
     ``value_col`` per entity over a RANGE frame on epoch seconds. Strictly
     backward-looking (leakage-free); rows sharing a timestamp are frame
     peers, included together — the standard RANGE-frame semantics."""
-    p = prefix or f"r{window_s}s"
-    ep = F.col(ts_col).cast("timestamp").cast("double")
+    p, v = prefix or f"r{window_s}s", q(value_col)
     w = (
-        Window.partitionBy(entity_col)
-        .orderBy(ep)
-        .rangeBetween(-window_s, 0)
+        f" OVER (PARTITION BY {q(entity_col)} ORDER BY {epoch_s(ts_col)}"
+        f" RANGE BETWEEN {window_s} PRECEDING AND CURRENT ROW)"
     )
-    return (
-        df.withColumn(f"{p}_sum_{value_col}", F.sum(value_col).over(w))
-        .withColumn(f"{p}_cnt_{value_col}", F.count(value_col).over(w))
-        .withColumn(f"{p}_avg_{value_col}", F.avg(value_col).over(w))
-    )
+    aggs = {"sum": "sum", "cnt": "count", "avg": "avg"}
+    return {f"{p}_{a}_{value_col}": f"{fn}({v}){w}" for a, fn in aggs.items()}
 
 
-def with_session_ids(
-    df: DataFrame,
-    entity_col: str = "entity_id",
-    ts_col: str = "ts",
-    gap_s: int = SESSION_GAP_S,
-    out_col: str = "session_id",
-    tiebreak: str | None = "image_id",
-) -> DataFrame:
+def session_id_exprs(gap_s=SESSION_GAP_S, out_col="session_id", ts_col="ts", **order):
     """Gap-based sessionization: a new session starts when the time since the
     previous row of the same entity exceeds `gap_s`. session_id = cumulative
     sum of session-start flags (1-based) — the standard batch formulation."""
-    w = _w(entity_col, ts_col, tiebreak)
-    # cast via TIMESTAMP (LTZ) first: TIMESTAMP_NTZ inputs can't cast to
-    # double directly; with a UTC session this is exact epoch seconds
-    ep = F.col(ts_col).cast("timestamp").cast("double")
-    prev = F.lag(ep).over(w)
-    is_new = F.when(prev.isNull() | ((ep - prev) > gap_s), 1).otherwise(0)
-    cum = w.rowsBetween(Window.unboundedPreceding, 0)
-    return df.withColumn(out_col, F.sum(is_new).over(cum).cast("long"))
+    ep, order = epoch_s(ts_col), {**order, "ts_col": ts_col}
+    prev = f"lag({ep}){over(**order)}"
+    is_new = f"IF({prev} IS NULL OR {ep} - {prev} > {gap_s}, 1, 0)"
+    return {out_col: f"CAST(sum({is_new}){over(CUMULATIVE, **order)} AS BIGINT)"}
+
+
+def with_lag_lead(df: DataFrame, value_col: str, **kw) -> DataFrame:
+    return append_columns(df, lag_lead_exprs(value_col, **kw))
+
+
+def with_backfill(df: DataFrame, value_col: str, out_col: str, **kw) -> DataFrame:
+    return append_columns(df, backfill_exprs(q(value_col), out_col, **kw))
+
+
+def with_rolling_mean(df: DataFrame, value_col: str, window_rows=3, **kw):
+    return append_columns(df, rolling_mean_exprs(value_col, window_rows, **kw))
+
+
+def with_rolling_time_aggs(df: DataFrame, value_col: str, window_s: int, **kw):
+    return append_columns(df, rolling_time_agg_exprs(value_col, window_s, **kw))
+
+
+def with_session_ids(df: DataFrame, **kw) -> DataFrame:
+    return append_columns(df, session_id_exprs(**kw))

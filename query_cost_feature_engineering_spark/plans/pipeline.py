@@ -8,12 +8,13 @@ as one declarative Spark plan:
     → JVM-side basics/fmt/phash-bit/caption features
     → ONE Arrow-batched pandas UDF (decode + pixel stats)
     → drop `bytes` before any shuffle (never shuffle image payloads)
-    → Window layer: lag/lead, ffill backfill, rolling mean, sessionize
+    → window layer (lag/lead, ffill, rolling mean, sessions, expanding
+      snapshot fit): ONE projection, two ``Window`` operators
     → assemble fixed-width feature vector (array<double>, FIXTURES.md F3)
 
-Each wide JVM-side layer (basics, phash bits, caption tokens, vector) is
-ONE projection from SQL expression text, not a Python ``Column`` chain per
-feature: each ``Column`` link costs driver-side py4j round trips.
+Each wide JVM-side layer (basics, phash bits, caption tokens, windows,
+vector) is ONE projection from SQL expression text, not a Python
+``Column`` chain per feature: each link costs driver py4j round trips.
 
 The vector layout (FEATURE_ORDER) is the engine's equivalent of the
 reference's per-operator fixed-width layout ``tpch_dim_dict``
@@ -37,11 +38,15 @@ from query_cost_feature_engineering_spark.functions.image_features import (
 from query_cost_feature_engineering_spark.functions.text import (
     with_caption_features,
 )
+from query_cost_feature_engineering_spark.operators.snapshot import (
+    expanding_linear_fit_exprs,
+)
 from query_cost_feature_engineering_spark.operators.windows import (
-    with_backfill,
-    with_lag_lead,
-    with_rolling_mean,
-    with_session_ids,
+    append_columns,
+    backfill_exprs,
+    lag_lead_exprs,
+    rolling_mean_exprs,
+    session_id_exprs,
 )
 from query_cost_feature_engineering_spark.sources.images import VOCAB
 
@@ -72,19 +77,13 @@ def compute_features(images: DataFrame) -> DataFrame:
     df = with_phash_bits(df)
     df = with_caption_features(df)
     df = df.drop("bytes", "caption")  # payloads never cross a shuffle
-    df = with_lag_lead(df, "px_mean")
-    df = df.withColumn(
-        "_png_mean", F.when(F.col("fmt") == "png", F.col("px_mean"))
-    )
-    df = with_backfill(df, "_png_mean", "bf_png_mean").drop("_png_mean")
-    df = with_rolling_mean(df, "px_mean", 3)
-    df = with_session_ids(df)
-    from query_cost_feature_engineering_spark.operators.snapshot import (
-        with_expanding_linear_fit,
-    )
-
-    df = with_expanding_linear_fit(df, "nbytes", "px_mean")
-    return df
+    return append_columns(df, {
+        **lag_lead_exprs("px_mean"),
+        **backfill_exprs("IF(`fmt` = 'png', `px_mean`, NULL)", "bf_png_mean"),
+        **rolling_mean_exprs("px_mean", 3),
+        **session_id_exprs(),
+        **expanding_linear_fit_exprs("nbytes", "px_mean"),
+    })
 
 
 def assemble_vector(df: DataFrame, out_col: str = "features") -> DataFrame:

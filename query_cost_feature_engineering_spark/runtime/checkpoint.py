@@ -43,7 +43,8 @@ MANIFEST_DIR = "_manifest"
 
 def input_fingerprint(spark, input_paths: list[str]) -> str:
     """Fingerprint of the input snapshot: hash of the sorted (path, size,
-    mtime) listing of every data file. With an Iceberg catalog, use the
+    mtime in ns) listing of every data file — whole seconds would miss a
+    same-size rewrite within one second. With an Iceberg catalog, use the
     table's snapshot-id instead; for plain parquet dirs this is the
     equivalent change-detector."""
     h = hashlib.sha256()
@@ -52,7 +53,7 @@ def input_fingerprint(spark, input_paths: list[str]) -> str:
         files = sorted(p.rglob("*.parquet")) if p.is_dir() else [p]
         for f in files:
             st = f.stat()
-            h.update(f"{f}|{st.st_size}|{int(st.st_mtime)}\n".encode())
+            h.update(f"{f}|{st.st_size}|{st.st_mtime_ns}\n".encode())
     return h.hexdigest()[:16]
 
 

@@ -92,6 +92,25 @@ def test_changed_input_invalidates(spark, events_df, tmp_path):
     assert sorted(res["written"]) == list(range(N_BUCKETS))
 
 
+def test_same_second_rewrite_invalidates(spark, events_df, tmp_path):
+    """A same-size rewrite of an input file within the same second of
+    mtime is still a new snapshot: resuming recomputes every partition
+    instead of serving the old output."""
+    import os
+
+    df, src = events_df
+    out = str(tmp_path / "out_ns")
+    f = next(Path(src).glob("*.parquet"))
+    sec = 1_700_000_000 * 10**9
+    os.utime(f, ns=(sec, sec + 100_000_000))
+    write_resumable(df, out, "user_id", N_BUCKETS, [src])
+    f.write_bytes(f.read_bytes())  # same size, new write
+    os.utime(f, ns=(sec, sec + 900_000_000))
+    res = write_resumable(df, out, "user_id", N_BUCKETS, [src])
+    assert res["skipped"] == []
+    assert sorted(res["written"]) == list(range(N_BUCKETS))
+
+
 def test_changed_bucketing_invalidates(spark, events_df, tmp_path):
     """A manifest committed under a different n_buckets or bucket_col is a
     different hash space — resuming over it must recompute, not skip."""
