@@ -17,11 +17,11 @@ Spark has no built-in as-of join (SURVEY.md §2.B), so two strategies:
    ``north_rule``: cogroup both sides on a hash bucket of the entity key
    and run a sorted ``pandas.merge_asof`` per bucket (Arrow batches, no
    per-row Python). Entities flagged *hot* (row count above a threshold)
-   are additionally range-sliced on time using global quantile cut points
-   (``approxQuantile``), with the **last right row of each slice
-   carried forward** across slice boundaries (ffill over the tiny
-   entity×slice lattice) so no probe misses a match that lives in an
-   earlier slice. This is the explicit salting/skew handling the north
+   are additionally range-sliced on time into equal-width cuts of the hot
+   entities' ts span, with the **last right row of each slice carried
+   forward** (one ``max_by`` aggregate) into the later slices up to the
+   entity's next non-empty one, so no probe misses a match that lives in
+   an earlier slice. This is the explicit salting/skew handling the north
    rule demands: a hot entity's probes parallelize across slices while
    cold entities stay on the cheap single-shuffle path.
 
@@ -132,7 +132,6 @@ def asof_join_pandas_merge(
     allow_exact_matches: bool = True,
 ) -> DataFrame:
     """Cogrouped sorted-merge as-of with hot-entity time-slicing."""
-    spark = left.sparkSession
     value_cols = value_cols or [
         c for c in right.columns if c not in (on, by, tiebreak)
     ]
@@ -145,27 +144,31 @@ def asof_join_pandas_merge(
     right = right.select(*[F.col(c).alias(f"{rpre}{c}") for c in rsel])
     rby, ron = f"{rpre}{by}", f"{rpre}{on}"
     rtb = f"{rpre}{tiebreak}" if tiebreak else None
+    sort_r = [ron] + ([rtb] if rtb else [])
 
     # --- skew profile: entities above threshold get time-sliced ----------
-    # Both statistics passes run on a key-only projection, so Catalyst
+    # The statistics pass reads only key and ts, so Catalyst
     # column-prunes the upstream plan and expensive feature UDFs (image
     # decode) are NOT evaluated here — only the final merge pays. One
-    # action returns the total row count and the (key, count) pairs above
-    # the floor; the driver applies the threshold rule to them.
+    # action returns the total row count and, for each key above the
+    # floor, its count and ts span; the driver applies the threshold rule
+    # and cuts the hot keys' joint span into equal-width time slices.
     def _ts_double(df: DataFrame, col: str) -> F.Column:
         t = df.schema[col].dataType.typeName()
         c = F.col(col)
         return c.cast("timestamp").cast("double") if t.startswith("timestamp") else c.cast("double")
 
-    rkeys = right.select(rby, ron)
     floor = _HOT_FLOOR if hot_threshold is None else hot_threshold
+    tsd = _ts_double(right, ron)
     prof = (
-        rkeys.groupBy(rby)
-        .agg(F.count(F.lit(1)).alias("_cnt"))
+        right.groupBy(rby)
+        .agg(
+            F.count(F.lit(1)).alias("_cnt"), F.min(tsd).alias("_lo"), F.max(tsd).alias("_hi")
+        )
         .agg(
             F.sum("_cnt").alias("total"),
             F.collect_list(
-                F.when(F.col("_cnt") > floor, F.struct(rby, "_cnt"))
+                F.when(F.col("_cnt") > floor, F.struct(rby, "_cnt", "_lo", "_hi"))
             ).alias("hot"),
         )
         .collect()[0]
@@ -173,30 +176,25 @@ def asof_join_pandas_merge(
     if hot_threshold is None:
         total = prof["total"] or 0
         hot_threshold = max(_HOT_FLOOR, total // max(num_buckets, 1) * 2)
-    hot_ids = sorted(k for k, n in prof["hot"] if n > hot_threshold)
+    hot = [h for h in prof["hot"] if h["_cnt"] > hot_threshold]
+    hot_ids = sorted(h[rby] for h in hot)
     key_type = right.schema[rby].dataType
-
-    # Time cut points for hot-entity slicing: quantiles over the HOT
-    # entities' timestamps only (they are what the slicing balances;
-    # cold keys would just dilute the cuts).
     if hot_ids:
-        q = [i / slices for i in range(1, slices)]
-        hkeys = _mark_hot(rkeys, rby, hot_ids, key_type).filter("_hot")
-        cuts = hkeys.withColumn(
-            "_tsd", _ts_double(hkeys, ron)
-        ).approxQuantile("_tsd", q, 0.001)
-    else:
-        cuts = []
+        lo = min(h["_lo"] for h in hot)
+        width = (max(h["_hi"] for h in hot) - lo) / slices
 
     def with_bucket(df: DataFrame, key: str, tscol: str) -> DataFrame:
         base = F.pmod(F.xxhash64(F.col(key)), F.lit(num_buckets))
         if not hot_ids:
             return df.withColumn("_bkt", base.cast("int"))
         df = _mark_hot(df, key, hot_ids, key_type)
-        tsd = _ts_double(df, tscol)
+        # monotone in ts and alike on both sides, so a probe's match is in
+        # its own slice or carried into it; ts outside [lo, hi] clamps, and
+        # one shared ts (width 0) makes one slice
         slice_id = F.lit(0)
-        for i, c in enumerate(cuts):
-            slice_id = F.when(tsd > F.lit(c), F.lit(i + 1)).otherwise(slice_id)
+        if width > 0:
+            cut = F.floor((_ts_double(df, tscol) - lo) / width)
+            slice_id = F.least(F.lit(slices - 1), F.greatest(F.lit(0), cut))
         return df.withColumn(
             "_bkt",
             F.when(F.col("_hot"), F.lit(num_buckets) + slice_id)
@@ -207,44 +205,24 @@ def asof_join_pandas_merge(
     lb = with_bucket(left, by, on)
     rb = with_bucket(right, rby, ron)
 
-    # Carry-forward: last right row of each hot (entity, slice), replicated
-    # into every later slice (keeping its true ts) so no probe in a later
-    # slice misses a match that lives in an earlier one. Hot rows are the
-    # ones bucketed at or past ``num_buckets``.
+    # Carry-forward: the last right row of each hot (entity, slice) goes,
+    # with its true ts, into every later slice up to and including the
+    # entity's next non-empty one: each later slice gets one carried row,
+    # the latest before it. ``lead`` gets its own column (Spark rejects a
+    # window inside a generator); the last slice's closer is dropped
+    # (``sequence`` would count down).
     if hot_ids:
-        last_per_slice = (
-            rb.filter(F.col("_bkt") >= num_buckets)
-            .withColumn(
-                "_rn",
-                F.row_number().over(
-                    Window.partitionBy(rby, "_bkt").orderBy(
-                        F.col(ron).desc(),
-                        *([F.col(rtb).desc()] if rtb else []),
-                    )
-                ),
-            )
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        # propagate each slice's closer into every later slice (slices is
-        # small and hot entities are few, so this stays tiny)
-        slice_ids = list(range(num_buckets, num_buckets + slices))
-        lattice = spark.createDataFrame(
-            [(s,) for s in slice_ids],
-            T.StructType([T.StructField("_tgt", T.IntegerType())]),
-        )
+        last = num_buckets + slices - 1
+        rest = [c for c in rb.columns if c not in (rby, "_bkt")]
         carries = (
-            last_per_slice.crossJoin(F.broadcast(lattice))
-            .filter(F.col("_tgt") > F.col("_bkt"))
+            rb.filter(F.col("_bkt") >= num_buckets)
+            .groupBy(rby, "_bkt")
+            .agg(F.max_by(F.struct(*rest), F.struct(*sort_r)).alias("_c"))
             .withColumn(
-                "_rk",
-                F.row_number().over(
-                    Window.partitionBy(rby, "_tgt").orderBy(F.col("_bkt").desc())
-                ),
+                "_nxt", F.lead("_bkt", 1, last).over(Window.partitionBy(rby).orderBy("_bkt"))
             )
-            .filter(F.col("_rk") == 1)
-            .drop("_bkt", "_rk")
-            .withColumnRenamed("_tgt", "_bkt")
+            .filter(F.col("_bkt") < last)
+            .select(rby, F.explode(F.sequence(F.col("_bkt") + 1, "_nxt")).alias("_bkt"), "_c.*")
         )
         rb = rb.unionByName(carries)
 
@@ -257,7 +235,6 @@ def asof_join_pandas_merge(
     )
     lcols = left.columns
     rvals = [f"{rpre}{c}" for c in value_cols]
-    sort_r = [ron] + ([rtb] if rtb else [])
 
     def merge(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
         lpdf = lpdf.drop(columns=["_bkt"]).sort_values(on, kind="mergesort")

@@ -134,7 +134,7 @@ def annotate_group_fit(
 
 def expanding_linear_fit_exprs(
     x_col: str, y_col: str, prefix="snap", min_n=3, eps=1e-9, **order
-) -> dict[str, str]:
+) -> tuple[dict[str, str], dict[str, str]]:
     """Leakage-free snapshot factors: per-entity OLS of y on x fitted over
     the EXPANDING window of rows at ts' ≤ ts (cumulative sufficient
     statistics inside one Window pass). This is the reference's
@@ -142,16 +142,22 @@ def expanding_linear_fit_exprs(
     made point-in-time-safe: the factors attached to a row at time t use
     only history ≤ t, so the zero-temporal-leakage property test holds.
     Rows before ``min_n`` samples (or with degenerate x-variance) fall back
-    to slope=0, intercept=running mean(y) — the reference's fallback."""
+    to slope=0, intercept=running mean(y) — the reference's fallback.
+
+    Returns ``(sums, fit)``: the five cumulative sums for the window
+    projection, and slope and intercept over those columns for the next
+    one. Spark does not merge repeated window expressions, so sums written
+    into the fit arithmetic would each run several times."""
     w = over(CUMULATIVE, **order)
     x, y = f"CAST({q(x_col)} AS DOUBLE)", f"CAST({q(y_col)} AS DOUBLE)"
-    n = f"CAST(count(1){w} AS DOUBLE)"
-    sx, sy = f"sum({x}){w}", f"sum({y}){w}"
-    sxx, sxy = f"sum({x} * {x}){w}", f"sum({x} * {y}){w}"
+    names = [f"_{prefix}_{k}" for k in ("n", "sx", "sy", "sxx", "sxy")]
+    sums = dict(zip(names, [f"CAST(count(1){w} AS DOUBLE)", f"sum({x}){w}", f"sum({y}){w}",
+                            f"sum({x} * {x}){w}", f"sum({x} * {y}){w}"]))
+    n, sx, sy, sxx, sxy = map(q, names)
     denom = f"({n} * {sxx} - {sx} * {sx})"
     ok = f"{n} >= {min_n} AND {denom} > {float(eps)!r}D"
     slope = f"IF({ok}, ({n} * {sxy} - {sx} * {sy}) / {denom}, 0.0D)"
-    return {
+    return sums, {
         f"{prefix}_slope": slope,
         f"{prefix}_intercept": f"IF({ok}, ({sy} - {slope} * {sx}) / {n}, {sy} / {n})",
     }

@@ -77,13 +77,15 @@ def compute_features(images: DataFrame) -> DataFrame:
     df = with_phash_bits(df)
     df = with_caption_features(df)
     df = df.drop("bytes", "caption")  # payloads never cross a shuffle
-    return append_columns(df, {
+    sums, fit = expanding_linear_fit_exprs("nbytes", "px_mean")
+    df = append_columns(df, {
         **lag_lead_exprs("px_mean"),
         **backfill_exprs("IF(`fmt` = 'png', `px_mean`, NULL)", "bf_png_mean"),
         **rolling_mean_exprs("px_mean", 3),
         **session_id_exprs(),
-        **expanding_linear_fit_exprs("nbytes", "px_mean"),
+        **sums,
     })
+    return append_columns(df, fit).drop(*sums)
 
 
 def assemble_vector(df: DataFrame, out_col: str = "features") -> DataFrame:

@@ -9,6 +9,8 @@ timestamp semantics.
 
 from __future__ import annotations
 
+import hashlib
+import io
 import os
 import zipfile
 from pathlib import Path
@@ -20,11 +22,22 @@ _PKG_PARENT = str(_PKG_DIR.parent)
 
 
 def package_zip(out: str | None = None) -> str:
-    """Zip this package for ``spark-submit --py-files`` / ``addPyFile``."""
-    out = out or os.path.join("/tmp", "qcfe_spark_pkg.zip")
-    with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as z:
+    """Zip this package for ``spark-submit --py-files`` / ``addPyFile``.
+    Entries carry no mtime, so the zip is a function of the sources'
+    relative paths and bytes, and the default name is its hash: checkouts
+    with other sources never rewrite it (Spark fails tasks whose shipped
+    file changes contents)."""
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as z:
         for p in sorted(_PKG_DIR.rglob("*.py")):
-            z.write(p, p.relative_to(_PKG_DIR.parent))
+            entry = zipfile.ZipInfo(str(p.relative_to(_PKG_DIR.parent)))
+            z.writestr(entry, p.read_bytes(), zipfile.ZIP_DEFLATED)
+    data = buf.getvalue()
+    digest = hashlib.sha256(data).hexdigest()[:16]
+    out = out or os.path.join("/tmp", f"qcfe_spark_pkg_{digest}.zip")
+    tmp = f"{out}.{os.getpid()}.tmp"  # renamed into place: readers never see a partial zip
+    Path(tmp).write_bytes(data)
+    os.replace(tmp, out)
     return out
 
 

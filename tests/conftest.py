@@ -29,3 +29,24 @@ def spine_pdf(images_pdf):
 @pytest.fixture(scope="session")
 def images_sdf(spark, images_pdf):
     return spark.createDataFrame(images_pdf).cache()
+
+
+def _jobs(spark, group, fn):
+    """Run ``fn`` under a job group; returns its result, the number of
+    Spark jobs it launched and their stage names."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    tracker = sc.statusTracker()
+    ids = tracker.getJobIdsForGroup(group)
+    stages = [
+        tracker.getStageInfo(s).name
+        for j in ids
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    return out, len(ids), stages

@@ -4,6 +4,7 @@ FIXTURES.md F5 boundary and skew probes."""
 import numpy as np
 import pandas as pd
 import pytest
+from conftest import _jobs
 
 from query_cost_feature_engineering_spark.operators.asof import (
     asof_join_pandas_merge,
@@ -233,3 +234,104 @@ def test_auto_threshold_hot_path_boundary(spark):
     # the time-slice membership test names the hot entity only
     plan = got._jdf.queryExecution().analyzed().toString()
     assert "IN (ent_hot)" in plan and "ent_cold" not in plan
+
+
+def test_hot_path_plan_and_job_guard(spark):
+    """Building the hot path runs no more Spark jobs than the cold-only
+    build (the skew profile is its one action), and its plan has no
+    cartesian join and at most one ``Window`` (the carry-forward's
+    ``lead``)."""
+    t0 = pd.Timestamp("2023-01-01")
+    n_hot, n_cold, ents = 12_000, 40, range(1, 21)
+    secs = np.concatenate([np.arange(n_hot), np.tile(np.arange(n_cold) * 300, len(ents))])
+    right = pd.DataFrame(
+        {
+            "entity_id": [0] * n_hot + [e for e in ents for _ in range(n_cold)],
+            "ts": t0 + pd.to_timedelta(secs, unit="s"),
+        }
+    )
+    right["image_id"] = [f"r{i:06d}" for i in range(len(right))]
+    right["px"] = np.arange(len(right), dtype=float)
+    spine = pd.DataFrame(
+        {
+            "entity_id": [0, 0, 0, 1, 5],
+            "ts": t0 + pd.to_timedelta([-1, 500, 11_999, 50, 9_000], unit="s"),
+        }
+    )
+    spine["probe_id"] = np.arange(len(spine))
+    left_sdf, right_sdf = spark.createDataFrame(spine), spark.createDataFrame(right)
+
+    def build(**kw):
+        return asof_join_pandas_merge(
+            left_sdf, right_sdf, value_cols=VALUE_COLS, tiebreak="image_id", **kw
+        )
+
+    hot, n_hot_jobs, _ = _jobs(spark, "asof-hot", build)
+    _, n_cold_jobs, _ = _jobs(spark, "asof-cold", lambda: build(hot_threshold=10**9))
+    assert n_hot_jobs <= n_cold_jobs, (n_hot_jobs, n_cold_jobs)
+    lines = hot._jdf.queryExecution().executedPlan().toString().splitlines()
+    heads = [ln.lstrip(" :+-").split(" ", 1)[0] for ln in lines]
+    assert heads.count("Generate") == 1  # the hot path's carry-forward is built
+    assert heads.count("CartesianProduct") == heads.count("BroadcastNestedLoopJoin") == 0
+    assert heads.count("Window") <= 1
+    _check(hot.toPandas(), _oracle(spine, right))
+
+
+_T0 = pd.Timestamp("2022-01-01")
+# (entity, right-row offsets in s, probe offsets in s); entity 9 (one row)
+# stays cold in every case, all the others are hot
+_SPANS = {
+    "one_ts": [(1, [100] * 6, [50, 100, 150])],
+    "disjoint": [
+        (1, range(0, 100, 10), [-5, 0, 45, 95, 500, 1050, 5000]),
+        (2, range(1000, 1100, 10), [0, 500, 999, 1000, 1045, 1090, 2000]),
+    ],
+    "outside": [(1, range(100, 200, 10), [0, 99, 100, 195, 10_000])],
+}
+
+
+@pytest.mark.parametrize("exact", [True, False], ids=["exact", "strict"])
+@pytest.mark.parametrize("case", sorted(_SPANS))
+def test_equal_width_cuts_degenerate_spans(spark, case, exact):
+    """Equal-width time cuts over the hot span: one shared ts (zero width),
+    two hot entities with disjoint spans (empty slices in between), and
+    probes before the first and after the last right row (clamped into the
+    end slices) all equal ``pandas.merge_asof``."""
+    ents = _SPANS[case] + [(9, [50], [0, 50, 60])]
+    right = pd.concat(
+        [
+            pd.DataFrame(
+                {
+                    "entity_id": e,
+                    "ts": _T0 + pd.to_timedelta(list(secs), unit="s"),
+                    "image_id": [f"{e}-{i:03d}" for i in range(len(secs))],
+                    "px": np.arange(len(secs), dtype=float),
+                }
+            )
+            for e, secs, _ in ents
+        ],
+        ignore_index=True,
+    )
+    spine = pd.concat(
+        [
+            pd.DataFrame({"entity_id": e, "ts": _T0 + pd.to_timedelta(p, unit="s")})
+            for e, _, p in ents
+        ],
+        ignore_index=True,
+    )
+    spine["probe_id"] = np.arange(len(spine))
+    want = (
+        pd.merge_asof(
+            spine.sort_values("ts", kind="mergesort"),
+            right.sort_values(["ts", "image_id"], kind="mergesort"),
+            on="ts", by="entity_id", allow_exact_matches=exact,
+        )
+        .sort_values("probe_id")
+        .reset_index(drop=True)
+    )
+    got = asof_join_pandas_merge(
+        spark.createDataFrame(spine), spark.createDataFrame(right),
+        value_cols=VALUE_COLS, tiebreak="image_id", allow_exact_matches=exact,
+        num_buckets=2, hot_threshold=1, slices=4,
+    ).toPandas()
+    _check(got, want)

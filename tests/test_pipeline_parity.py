@@ -167,3 +167,24 @@ def test_window_layer_plan_shape(spark, images_sdf):
         "Window": 2,
         "Exchange": 1,
     }
+
+
+def test_snapshot_fit_sums_evaluated_once(spark, images_sdf):
+    # the fit's five cumulative sums (count and sums of x, y, x*x, x*y)
+    # are columns of the window projection, and slope and intercept a
+    # projection over them; written into the fit arithmetic, Spark ran
+    # them as 36 window aggregates (it does not merge repeated ones)
+    from query_cost_feature_engineering_spark.operators.snapshot import (
+        expanding_linear_fit_exprs,
+    )
+    from query_cost_feature_engineering_spark.operators.windows import append_columns
+
+    def plan(df) -> str:
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    sums, fit = expanding_linear_fit_exprs("w", "h")
+    df = append_columns(append_columns(images_sdf, sums), fit).drop(*sums)
+    assert plan(df).count("windowspecdefinition") == 5
+    assert df.columns == images_sdf.columns + ["snap_slope", "snap_intercept"]
+    featurize = plan(assemble_vector(compute_features(images_sdf)))
+    assert featurize.count("count(1) windowspecdefinition") == 1

@@ -10,6 +10,7 @@ from collections import Counter
 from pathlib import Path
 
 import pytest
+from conftest import _jobs
 from pyspark.sql import functions as F
 
 from query_cost_feature_engineering_spark.runtime import snapshots as S
@@ -542,27 +543,6 @@ def test_compaction_rewrites_only_files_where_it_pays(spark, tmp_path):
     finally:
         spark.conf.unset(key)
     assert S.current_version(d) == v
-
-
-def _jobs(spark, group, fn):
-    """Run ``fn`` under a job group; returns its result, the number of
-    Spark jobs it launched and their stage names."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    tracker = sc.statusTracker()
-    ids = tracker.getJobIdsForGroup(group)
-    stages = [
-        tracker.getStageInfo(s).name
-        for j in ids
-        for s in tracker.getJobInfo(j).stageIds
-    ]
-    return out, len(ids), stages
 
 
 def test_deletes_read_as_local_relation_and_job_budgets(spark, tmp_path):

@@ -76,3 +76,35 @@ def test_spark_submit_with_pyfiles_zip_only(spark, tmp_path):
     assert table.num_rows == 80
     manifests = list((Path(out) / "_manifest").glob("part=*.json"))
     assert manifests, "per-partition manifests missing"
+
+
+def test_package_zip_named_after_sources(spark, tmp_path):
+    """The default zip is named after the packaged sources, not the
+    checkout or file times: a fresh copy of the package gives the same
+    name and bytes, and a one-byte change in the copy another name."""
+    import importlib.util
+
+    from query_cost_feature_engineering_spark import session
+
+    pkg = tmp_path / "query_cost_feature_engineering_spark"
+    shutil.copytree(
+        session._PKG_DIR, pkg, ignore=shutil.ignore_patterns("__pycache__"),
+        copy_function=shutil.copy,  # new mtimes
+    )
+
+    def zip_of_copy() -> str:
+        spec = importlib.util.spec_from_file_location("session_copy", pkg / "session.py")
+        mod = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(mod)
+        return mod.package_zip()
+
+    orig = session.package_zip()
+    data = Path(orig).read_bytes()
+    assert zip_of_copy() == orig and Path(orig).read_bytes() == data
+    with open(pkg / "__init__.py", "ab") as f:
+        f.write(b"\n")
+    changed = zip_of_copy()
+    try:
+        assert changed != orig
+    finally:
+        os.remove(changed)
