@@ -68,9 +68,16 @@ N_PROBES = int(os.environ.get("SPARK_GRAFT_BENCH_PROBES", "48000"))
 
 
 def _run_count(df) -> int:
-    # count() after a no-op cache-free action: forces full evaluation of
-    # every row without collecting payloads to the driver
-    return df.count()
+    """Run ``df`` to a ``noop`` sink and return its row count. The sink
+    evaluates every output column; a ``count()`` plan lets Catalyst prune
+    deterministic UDFs, windows and shuffles."""
+    from query_cost_feature_engineering_spark.runtime.metrics import (
+        observe_counts,
+    )
+
+    df, obs = observe_counts(df)
+    df.write.format("noop").mode("overwrite").save()
+    return obs.get["rows"]
 
 
 def bench_image_pipeline(spark, workdir: str) -> dict:
@@ -83,11 +90,7 @@ def bench_image_pipeline(spark, workdir: str) -> dict:
         compute_features,
     )
     from query_cost_feature_engineering_spark.sources.images import (
-        generate_images_pandas,
         generate_spine_pandas,
-    )
-
-    from query_cost_feature_engineering_spark.sources.images import (
         write_images_table_dist,
     )
 

@@ -7,8 +7,7 @@ every format here is implemented from its public spec:
   encode; decode covers all color types (grey/RGB/palette/grey-alpha/
   RGBA), bit depths 1-16 where legal, filters 0-4, Adam7 interlace.
 - ``jpeg`` — dispatched to the real T.81 codec in ``jpeg.py``
-  (baseline + progressive, see also ``jpeg_progressive.py``); the
-  deterministic QJPG lossy stub remains for the flagship hot path.
+  (baseline + progressive, see also ``jpeg_progressive.py``).
 - ``bmp`` / ``ico`` — uncompressed DIB interchange (24/32-bit, 8-bit
   palettized, both row orders) and the favicon container over
   PNG/DIB members.  ``gif.py`` and ``tiff.py`` carry GIF89a (LZW) and
@@ -34,8 +33,6 @@ import zlib
 import numpy as np
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
-QJPG_SIG = b"QJPG"
-_QJPG_STEP = 4  # quantization step → PSNR ≈ 46 dB, comfortably ≥ 40 dB
 
 
 def _chunk(tag: bytes, payload: bytes) -> bytes:
@@ -217,35 +214,14 @@ def decode_png(data: bytes) -> np.ndarray:
     return np.repeat(grey[:, :, None], 3, axis=2)
 
 
-def encode_lossy(arr: np.ndarray, step: int = _QJPG_STEP) -> bytes:
-    """Deterministic lossy encode (QJPG stub container)."""
-    if arr.dtype != np.uint8 or arr.ndim != 3 or arr.shape[2] != 3:
-        raise ValueError("encode_lossy expects (h, w, 3) uint8")
-    h, w = arr.shape[:2]
-    q = (arr // step).astype(np.uint8)
-    return QJPG_SIG + struct.pack(">IIB", w, h, step) + zlib.compress(q.tobytes(), 6)
-
-
-def decode_lossy(data: bytes) -> np.ndarray:
-    if data[:2] == b"\xff\xd8":
-        # REAL baseline JPEG via the pure-NumPy T.81 codec (jpeg.py) —
-        # no codec library needed for the baseline-sequential subset
-        from query_cost_feature_engineering_spark.jpeg import decode_jpeg
-
-        return decode_jpeg(data)
-    if data[:4] != QJPG_SIG:
-        raise ValueError("not a QJPG payload")
-    w, h, step = struct.unpack(">IIB", data[4:13])
-    q = np.frombuffer(zlib.decompress(data[13:]), dtype=np.uint8).reshape(h, w, 3)
-    return (q.astype(np.int16) * step + step // 2).clip(0, 255).astype(np.uint8)
-
-
 def decode_image(data: bytes, fmt: str) -> np.ndarray:
     """Dispatch decode by declared format column (``fmt`` in the input table)."""
     if fmt == "png":
         return decode_png(data)
     if fmt in ("jpeg", "jpg"):
-        return decode_lossy(data)
+        from query_cost_feature_engineering_spark.jpeg import decode_jpeg
+
+        return decode_jpeg(data)
     if fmt == "gif":  # static decode: first composited frame
         from query_cost_feature_engineering_spark.gif import decode_gif
 
@@ -267,10 +243,9 @@ def decode_image(data: bytes, fmt: str) -> np.ndarray:
 
 # ---------------------------------------------------------------------------
 # WAV (RIFF / PCM16) — a REAL audio codec in pure stdlib struct + NumPy.
-# libsndfile/soundfile are absent from this container, but canonical WAV
-# needs no external library: it is a RIFF chunk walk + a PCM buffer. This
-# upgrades the audio path from "stub container only" to real-format
-# (lossless 16-bit PCM; compressed formats still need a codec library).
+# Canonical WAV needs no external library (libsndfile/soundfile): it is a
+# RIFF chunk walk + a PCM buffer (lossless 16-bit PCM here; IMA ADPCM and
+# G.711 below).
 # ---------------------------------------------------------------------------
 
 WAV_RIFF = b"RIFF"

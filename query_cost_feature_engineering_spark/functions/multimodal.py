@@ -4,14 +4,13 @@ per-row struct featurizers go through the one payload-UDF helper
 (``functions/_payload.py``); the 1->N frame fan-outs and the format sniff
 have other shapes and keep their own batch loops.
 
-Images are REAL (the pure-NumPy codecs in ``codecs.py``). Video and audio
-decode the REAL containers the in-repo codecs implement (AVI, MP4 with
-'jpeg' tracks, GIF; WAV, FLAC, AIFF, AU) and otherwise fall back to a
-clearly-marked deterministic fake that parses our own synthetic
-container format (``FVID``/``FAUD``, produced by the generators below),
-so the Spark-side plumbing — schema, batch shape, row explosion,
-partition sizing — is real and tested end-to-end. Codecs that need an
-external library (H.264, mp3, ...) raise ``NotImplementedError``.
+Every payload is a real format decoded by the in-repo codecs: images
+through ``codecs.py`` (PNG, JPEG, GIF, BMP, TIFF, ICO, PNM, TGA), video
+containers AVI, MP4 with 'jpeg' tracks and animated GIF, audio WAV,
+FLAC, AIFF and AU. The Spark-side plumbing — schema, batch shape, row
+explosion, partition sizing — is tested end-to-end on those bytes.
+Codecs that need an external library (H.264, mp3, ...) and unknown
+containers raise ``NotImplementedError``.
 
 Ref parity: the reference has no media layer (its payload is plan JSON);
 this implements SURVEY.md §1.5's "binary (new engine: image bytes)"
@@ -20,8 +19,6 @@ column contract for the remaining modalities.
 
 from __future__ import annotations
 
-import struct
-import zlib
 from collections.abc import Iterator
 
 import numpy as np
@@ -46,51 +43,14 @@ from query_cost_feature_engineering_spark.jpeg import (
     strip_metadata,
 )
 
-FVID_SIG = b"FVID"  # fake video: header + zlib'd uint8 luma frames
-FAUD_SIG = b"FAUD"  # fake audio: header + zlib'd int16 PCM samples
-
-
-# --- synthetic container encoders (test/bench input only) -------------------
-
-def encode_fake_video(frames: np.ndarray) -> bytes:
-    """(n, h, w) uint8 luma frames → FVID container."""
-    n, h, w = frames.shape
-    return FVID_SIG + struct.pack(">III", n, h, w) + zlib.compress(frames.tobytes(), 6)
-
-
-def encode_fake_audio(pcm: np.ndarray, rate: int = 16000) -> bytes:
-    """(n,) int16 mono PCM → FAUD container."""
-    return FAUD_SIG + struct.pack(">II", len(pcm), rate) + zlib.compress(pcm.tobytes(), 6)
-
-
-def _decode_fake_video(data: bytes) -> np.ndarray:
-    if data[:4] != FVID_SIG:
-        raise NotImplementedError(
-            "real video decode requires a codec library (PyAV/ffmpeg); "
-            "only the FVID stub container is supported"
-        )
-    n, h, w = struct.unpack(">III", data[4:16])
-    return np.frombuffer(zlib.decompress(data[16:]), dtype=np.uint8).reshape(n, h, w)
-
-
-def _decode_fake_audio(data: bytes) -> tuple[np.ndarray, int]:
-    if data[:4] != FAUD_SIG:
-        raise NotImplementedError(
-            "real audio decode requires a codec library (soundfile); "
-            "only the FAUD stub container is supported"
-        )
-    n, rate = struct.unpack(">II", data[4:12])
-    return np.frombuffer(zlib.decompress(data[12:]), dtype=np.int16)[:n], rate
-
-
 def decode_video(data: bytes) -> np.ndarray:
     """(n, h, w, 3) uint8 RGB frames from any supported video payload:
     REAL AVI (uncompressed-DIB or Motion-JPEG, pure-stdlib RIFF parser
     ``codecs.decode_avi``), REAL ISO-BMFF .mp4 with a 'jpeg' video
-    track (``codecs.decode_mp4``), or the FVID luma stub (expanded to
-    3 channels, so downstream means/encodes are format-independent).
+    track (``codecs.decode_mp4``), or animated GIF (``gif.decode_gif``).
     H.264/HEVC/VP9/AV1 payloads raise NotImplementedError by codec
-    name — those genuinely need a codec library."""
+    name — those genuinely need a codec library — and so does any
+    other container."""
     from query_cost_feature_engineering_spark.codecs import (
         decode_avi,
         decode_mp4,
@@ -104,15 +64,17 @@ def decode_video(data: bytes) -> np.ndarray:
         from query_cost_feature_engineering_spark.gif import decode_gif
 
         return decode_gif(bytes(data))[0]
-    luma = _decode_fake_video(data)
-    return np.repeat(luma[..., None], 3, axis=3)
+    raise NotImplementedError(
+        f"unsupported video container {bytes(data[:12])!r}: "
+        "AVI, MP4 and GIF decode here; others need PyAV/ffmpeg"
+    )
 
 
 def decode_audio(data: bytes) -> tuple[np.ndarray, int]:
     """Mono (n,) int16 PCM + rate from any supported audio payload:
     REAL RIFF/WAVE (pure-NumPy codecs for PCM16 / IMA ADPCM / G.711,
     ``codecs.decode_wav``), REAL FLAC (lossless Rice-coded frames,
-    ``flac.decode_flac``), or the FAUD stub container. Multichannel
+    ``flac.decode_flac``), AIFF/AIFC or Sun AU. Multichannel
     payloads yield channel 0 (features are per-clip scalars; channel
     choice is deterministic). Remaining compressed formats (mp3/ogg/
     m4a) still raise — those genuinely need a codec library."""
@@ -141,7 +103,10 @@ def decode_audio(data: bytes) -> tuple[np.ndarray, int]:
 
         pcm, rate = decode_au(bytes(data))
         return pcm[:, 0], rate
-    return _decode_fake_audio(data)
+    raise NotImplementedError(
+        f"unsupported audio container {bytes(data[:12])!r}: "
+        "WAV, FLAC, AIFF and AU decode here; others need soundfile"
+    )
 
 
 # --- EXIF display metadata (scalar struct pandas UDF) -----------------------
@@ -250,9 +215,6 @@ def with_decoded_meta(df: DataFrame) -> DataFrame:
 _MAGIC = [
     (b"\x89PNG", "png"),
     (b"\xff\xd8\xff", "jpeg"),
-    (b"QJPG", "jpeg"),  # our deterministic lossy stub container
-    (FVID_SIG, "fvid"),
-    (FAUD_SIG, "faud"),
     (b"fLaC", "flac"),
     (b"GIF8", "gif"),
     (b"II*\x00", "tiff"),
@@ -376,7 +338,7 @@ def augment_images(
     return out.withColumn("fmt", F.lit("png"))
 
 
-# --- video frame sampling (stubbed decode, real plumbing) -------------------
+# --- video frame sampling ---------------------------------------------------
 
 FRAME_SCHEMA = T.StructType(
     [
@@ -392,9 +354,8 @@ FRAME_SCHEMA = T.StructType(
 def sample_video_frames(df: DataFrame, every_k: int = 5) -> DataFrame:
     """Explode each video row into one row per sampled frame (every k-th),
     via ``mapInPandas`` (1→N row fan-out needs mapInPandas, not a scalar
-    UDF). Decode dispatches on magic bytes: REAL uncompressed-DIB AVI
-    (pure-stdlib codec) or the FVID stub (``decode_video``); compressed
-    formats need PyAV and raise."""
+    UDF). Decode dispatches on magic bytes (``decode_video``: AVI, MP4,
+    GIF); containers that need PyAV raise."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -487,7 +448,7 @@ def dedup_video_frames(df: DataFrame, tau: int = 6) -> DataFrame:
     )
 
 
-# --- audio features (stubbed decode, real plumbing) -------------------------
+# --- audio features ---------------------------------------------------------
 
 _AUDIO_SCHEMA = T.StructType(
     [
@@ -509,9 +470,8 @@ def _audio_features_row(data: bytes) -> tuple:
 
 
 def with_audio_features(df: DataFrame) -> DataFrame:
-    """Scalar struct pandas UDF: PCM stats per clip. Decode is REAL for
-    RIFF/PCM16 WAV (stdlib parser) and falls back to the FAUD stub for
-    the synthetic container (``decode_audio`` dispatch)."""
+    """Scalar struct pandas UDF: PCM stats per clip, decoded by the
+    ``decode_audio`` magic-byte dispatch (WAV, FLAC, AIFF, AU)."""
     return with_payload_columns(
         df, _audio_features_row, _AUDIO_SCHEMA, inputs=("bytes",)
     )

@@ -213,8 +213,8 @@ def ensure_augment_meta_fixture(
 def ensure_video_frames_fixture(
     n: int = 60, seed: int = 52, every_k: int = 5
 ) -> str:
-    """Expected rows for video_frame_sample (FVID stub decode + every
-    k-th frame, same float mean)."""
+    """Expected rows for video_frame_sample (same decode dispatch +
+    every k-th frame, same float mean)."""
     from query_cost_feature_engineering_spark.functions.multimodal import (
         decode_video,
     )
@@ -240,7 +240,7 @@ def ensure_video_frames_fixture(
 
 
 def ensure_audio_features_fixture(n: int = 80, seed: int = 53) -> str:
-    """Expected rows for audio_features_clips over the mixed WAV+FAUD
+    """Expected rows for audio_features_clips over the mixed-format
     corpus (same decode dispatch + formulas as the UDF)."""
     from query_cost_feature_engineering_spark.functions.multimodal import (
         decode_audio,
@@ -442,16 +442,13 @@ def ensure_mixed_format_fixture(n: int = 180, seed: int = 58) -> str:
 
 # INDEPENDENT magic-byte table for the sniff oracle — written from the
 # published file-format specs (PNG \x89PNG, JPEG SOI \xff\xd8\xff, RIFF
-# form types) and the repo's stub container signatures spelled out as
-# literals, deliberately NOT importing functions.multimodal._sniff_head:
-# the fixture must catch a sniffing bug, not reproduce it (round-4
-# ADVICE — the old fixture called the exact function under test).
+# form types) spelled out as literals, deliberately NOT importing
+# functions.multimodal._sniff_head: the fixture must catch a sniffing
+# bug, not reproduce it (round-4 ADVICE — the old fixture called the
+# exact function under test).
 _SNIFF_ORACLE_MAGIC = [
     (b"\x89PNG", "png"),
     (b"\xff\xd8\xff", "jpeg"),
-    (b"QJPG", "jpeg"),
-    (b"FVID", "fvid"),
-    (b"FAUD", "faud"),
     (b"fLaC", "flac"),
     (b"GIF8", "gif"),
     (b"II*\x00", "tiff"),

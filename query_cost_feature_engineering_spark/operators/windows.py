@@ -99,8 +99,8 @@ def session_id_exprs(gap_s=SESSION_GAP_S, out_col="session_id", ts_col="ts", **o
     previous row of the same entity exceeds `gap_s`. session_id = cumulative
     sum of session-start flags (1-based) — the standard batch formulation."""
     ep, order = epoch_s(ts_col), {**order, "ts_col": ts_col}
-    prev = f"lag({ep}){over(**order)}"
-    is_new = f"IF({prev} IS NULL OR {ep} - {prev} > {gap_s}, 1, 0)"
+    gap = f"{ep} - lag({ep}){over(**order)}"  # NULL on an entity's first row
+    is_new = f"IF(coalesce({gap} <= {gap_s}, false), 0, 1)"
     return {out_col: f"CAST(sum({is_new}){over(CUMULATIVE, **order)} AS BIGINT)"}
 
 

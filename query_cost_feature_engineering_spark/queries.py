@@ -3591,7 +3591,8 @@ def augment_images_meta(spark, sf_dir):
 
 
 def video_frame_sample(spark, sf_dir):
-    """mapInPandas 1→N frame explosion over the FVID stub container."""
+    """mapInPandas 1→N frame explosion over a mixed AVI / MJPEG-AVI /
+    MP4 / GIF clip corpus (``sources.media.generate_videos_pandas``)."""
     from query_cost_feature_engineering_spark.functions.multimodal import (
         sample_video_frames,
     )
@@ -3609,8 +3610,7 @@ def video_frame_sample(spark, sf_dir):
 def jpeg_features_images(spark, sf_dir):
     """The image-feature pass over a corpus of REAL baseline JPEG
     files, decoded by the pure-NumPy ITU-T T.81 codec (jpeg.py) inside
-    the standard Arrow UDF — upgrading the lossy path from the QJPG
-    stub to a spec-conformant compressed format with no codec library.
+    the standard Arrow UDF, with no codec library.
     ~35% of the corpus is 4:2:0-subsampled (the real-world common
     case), ~10% 4:2:2, the rest 4:4:4; ~25% carries restart markers;
     ~25% is PROGRESSIVE (SOF2 — spectral selection + successive
@@ -3873,8 +3873,8 @@ def video_frame_dedup(spark, sf_dir):
     every frame, drop frames within Hamming ``VIDEO_DEDUP_TAU`` of the
     last kept frame. One ``mapInPandas`` pass, zero shuffles, bytes
     never shuffled (functions/multimodal.dedup_video_frames). Corpus:
-    scene-structured mixed-format clips (even = real AVI-DIB, odd =
-    FVID stub). Oracle: both-sides-synthesize fixture recomputing the
+    scene-structured uncompressed-DIB AVI clips (odd clips grey).
+    Oracle: both-sides-synthesize fixture recomputing the
     keep-chain in pure Python from the ORIGINAL frame arrays (never the
     decode path under test) — it therefore also pins the encode->decode
     roundtrip; phash64 itself is shared with the UDF (its correctness
@@ -3894,12 +3894,12 @@ def video_frame_dedup(spark, sf_dir):
 
 
 def audio_features_clips(spark, sf_dir):
-    """PCM stats per clip over a MIXED corpus cycling five formats —
-    real RIFF/PCM16 WAV, the FAUD stub container, IMA ADPCM (4-bit
-    compressed), and G.711 μ-law/A-law (8-bit companded telephony) —
-    all decoded by the pure-NumPy codecs (codecs.decode_wav, no
-    external library); one pandas UDF dispatches on magic bytes +
-    WAV format tag (functions/multimodal.decode_audio)."""
+    """PCM stats per clip over a MIXED corpus cycling seven formats —
+    RIFF/PCM16 WAV, IMA ADPCM WAV (4-bit compressed), G.711 μ-law/A-law
+    WAV (8-bit companded telephony), FLAC, AIFF and Sun AU — all decoded
+    by the pure-NumPy codecs (no external library); one pandas UDF
+    dispatches on magic bytes + WAV format tag
+    (functions/multimodal.decode_audio)."""
     from query_cost_feature_engineering_spark.functions.multimodal import (
         with_audio_features,
     )

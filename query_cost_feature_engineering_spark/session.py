@@ -92,8 +92,9 @@ def get_spark(
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    try:
-        spark.sparkContext.addPyFile(package_zip())
-    except Exception:
-        pass  # already added in a reused session
+    if _PKG_DIR.is_dir():  # imported from a zip (--py-files): already shipped
+        try:
+            spark.sparkContext.addPyFile(package_zip())
+        except Exception:
+            pass  # already added in a reused session
     return spark

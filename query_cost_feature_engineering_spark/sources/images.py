@@ -22,11 +22,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from query_cost_feature_engineering_spark.codecs import (
-    encode_lossy,
-    encode_png,
-    phash64,
-)
+from query_cost_feature_engineering_spark.codecs import encode_png, phash64
+from query_cost_feature_engineering_spark.jpeg import encode_jpeg
 
 VOCAB = [
     "aurora", "basin", "cobalt", "delta", "ember", "fjord", "glacier", "harbor",
@@ -71,7 +68,6 @@ def generate_jpeg_images_pandas(n: int, seed: int = 56) -> pd.DataFrame:
     Returns the ORIGINAL pixel arrays too (``arr_true``, object
     column, dropped before Spark) so the golden can enforce the
     per-image PSNR >= 40 dB fidelity invariant independently."""
-    from query_cost_feature_engineering_spark.jpeg import encode_jpeg
     from query_cost_feature_engineering_spark.jpeg_progressive import (
         encode_jpeg_progressive,
     )
@@ -134,7 +130,9 @@ def generate_jpeg_images_pandas(n: int, seed: int = 56) -> pd.DataFrame:
 def generate_images_pandas(
     n: int, n_entities: int = 50, seed: int = 42
 ) -> pd.DataFrame:
-    """Seeded image+caption+spine table as pandas (small/bench scales)."""
+    """Seeded image+caption+spine table as pandas (small/bench scales).
+    About 60% of rows are PNG and the rest baseline JPEG at quality 98,
+    which keeps every JPEG row of this noise field at >= 40 dB PSNR."""
     rng = np.random.default_rng(seed)
     ws = rng.choice(SIZES, size=n)
     hs = rng.choice(SIZES, size=n)
@@ -168,7 +166,7 @@ def generate_images_pandas(
     for i in range(n):
         h, w = int(hs[i]), int(ws[i])
         arr = _pixels(rng, h, w)
-        data = encode_png(arr) if fmts[i] == "png" else encode_lossy(arr)
+        data = encode_png(arr) if fmts[i] == "png" else encode_jpeg(arr, 98)
         n_tok = int(rng.integers(3, 13))
         caption = " ".join(VOCAB[j] for j in rng.integers(0, len(VOCAB), size=n_tok))
         rows.append(
@@ -380,7 +378,6 @@ def generate_mixed_images_pandas(n: int, seed: int = 58) -> pd.DataFrame:
         encode_tga,
     )
     from query_cost_feature_engineering_spark.gif import encode_gif
-    from query_cost_feature_engineering_spark.jpeg import encode_jpeg
     from query_cost_feature_engineering_spark.jpeg_progressive import (
         encode_jpeg_progressive,
     )

@@ -1,25 +1,20 @@
 """Deterministic synthetic video/audio clip tables (multimodal test input).
 
 Same philosophy as ``sources/images.py``: fully seeded, no external data.
-Payloads use the FVID/FAUD stub containers from ``functions/multimodal.py``
-(real ffmpeg/soundfile are absent from this container; the Spark plumbing
-is what's under test)."""
+Every payload is a real container written by the in-repo encoders
+(``codecs.py``, ``gif.py``, ``flac.py``), so the queries over these
+tables run the same decoders as any real input."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
 
-from query_cost_feature_engineering_spark.functions.multimodal import (
-    encode_fake_audio,
-    encode_fake_video,
-)
-
 
 def generate_videos_pandas(n: int, seed: int = 52) -> pd.DataFrame:
-    """Mixed-format clip table, five REAL dispatch paths per query
-    run: clips cycle uncompressed-DIB AVI (``codecs.encode_avi_dib``),
-    the FVID luma stub, Motion-JPEG AVI (``codecs.encode_avi_mjpeg``:
+    """Mixed-format clip table, four REAL dispatch paths per query
+    run: clips cycle uncompressed-DIB AVI (``codecs.encode_avi_dib``;
+    RGB noise, then grey noise), Motion-JPEG AVI (``codecs.encode_avi_mjpeg``:
     genuinely compressed frames via the pure-NumPy T.81 codec),
     ISO-BMFF .mp4 with a 'jpeg' video track
     (``codecs.encode_mp4_mjpeg``), and — round 5 — animated GIF89a
@@ -43,10 +38,12 @@ def generate_videos_pandas(n: int, seed: int = 52) -> pd.DataFrame:
         nf = int(rng.integers(8, 40))
         h = int(rng.choice([16, 24, 32]))
         w = int(rng.choice([16, 24, 32]))
-        kind = ("avi", "fvid", "mjpg", "mp4", "gif")[i % 5]
+        kind = ("avi", "avi", "mjpg", "mp4", "gif")[i % 5]
         if kind == "avi":
-            frames = rng.integers(0, 256, size=(nf, h, w, 3)).astype(np.uint8)
-            data = encode_avi_dib(frames)
+            grey = i % 5 == 1  # one noise channel, stored three times
+            frames = rng.integers(0, 256, size=(nf, h, w, 1 if grey else 3))
+            frames = np.repeat(frames, 3 if grey else 1, axis=3)
+            data = encode_avi_dib(frames.astype(np.uint8))
         elif kind == "gif":
             pal = rng.integers(0, 256, size=(32, 3)).astype(np.uint8)
             idx = rng.integers(0, 32, size=(nf, h, w))
@@ -71,9 +68,6 @@ def generate_videos_pandas(n: int, seed: int = 52) -> pd.DataFrame:
                 data = encode_avi_mjpeg(frames, quality=92)
             else:
                 data = encode_mp4_mjpeg(frames, quality=92)
-        else:
-            frames = rng.integers(0, 256, size=(nf, h, w)).astype(np.uint8)
-            data = encode_fake_video(frames)
         rows.append(
             {
                 "media_id": f"vid{i:06d}",
@@ -90,8 +84,8 @@ def generate_static_videos_pandas(n: int, seed: int = 54) -> pd.DataFrame:
     is a sequence of SCENES — a base frame repeated 2-8 times with
     per-pixel ±1 jitter (near-static runs, the camera-on-a-tripod
     shape) — so consecutive-frame perceptual hashes collide within a
-    scene and jump across scene cuts. Mixed formats like
-    generate_videos_pandas (even = real AVI-DIB, odd = FVID stub).
+    scene and jump across scene cuts. Every clip is
+    uncompressed-DIB AVI; odd clips are grey (three equal channels).
     Returns the ORIGINAL frame arrays too (``frames_true``, object
     column, never written to parquet) so fixtures can recompute
     expected hashes without the decode path under test."""
@@ -113,22 +107,14 @@ def generate_static_videos_pandas(n: int, seed: int = 54) -> pd.DataFrame:
                     np.clip(base + jit, 0, 255).astype(np.uint8)
                 )
         arr = np.stack(frames)
-        avi = i % 2 == 0
-        data = (
-            encode_avi_dib(arr)
-            if avi
-            # the FVID stub stores luma only; keep channels identical so
-            # decode (luma -> 3 channels) roundtrips the gray values
-            else encode_fake_video(arr[:, :, :, 0])
-        )
-        if not avi:
+        if i % 2:
             arr = np.repeat(arr[:, :, :, :1], 3, axis=3)
         rows.append(
             {
                 "media_id": f"svid{i:06d}",
-                "bytes": data,
+                "bytes": encode_avi_dib(arr),
                 "n_frames_true": arr.shape[0],
-                "fmt": "avi" if avi else "fvid",
+                "fmt": "avi",
                 "frames_true": arr,
             }
         )
@@ -136,9 +122,9 @@ def generate_static_videos_pandas(n: int, seed: int = 54) -> pd.DataFrame:
 
 
 def generate_audio_pandas(n: int, seed: int = 53) -> pd.DataFrame:
-    """Mixed-format clip table, eight REAL dispatch paths per query
-    run: clips cycle RIFF/PCM16 WAV (``codecs.encode_wav_pcm16``), the
-    FAUD stub container, IMA ADPCM WAV (``codecs.encode_wav_adpcm``:
+    """Mixed-format clip table, seven REAL dispatch paths per query
+    run: clips cycle RIFF/PCM16 WAV (``codecs.encode_wav_pcm16``, two
+    slots of the eight), IMA ADPCM WAV (``codecs.encode_wav_adpcm``:
     genuinely compressed 4-bit audio, format tag 17), and — round 5 —
     G.711 μ-law and A-law WAV (``codecs.encode_wav_g711``: the real
     telephony companding codecs, tags 7/6, audioop-conformance-swept),
@@ -167,7 +153,7 @@ def generate_audio_pandas(n: int, seed: int = 53) -> pd.DataFrame:
     for i in range(n):
         ns = int(rng.integers(1600, 48000))
         kind = (
-            "wav", "faud", "adpcm", "ulaw", "alaw", "flac", "aiff", "au"
+            "wav", "wav", "adpcm", "ulaw", "alaw", "flac", "aiff", "au"
         )[i % 8]
         if kind in ("adpcm", "flac"):
             t = np.arange(ns) / 16000.0
@@ -194,11 +180,7 @@ def generate_audio_pandas(n: int, seed: int = 53) -> pd.DataFrame:
             data = encode_au(pcm, rate=8000, encoding="ulaw")
         else:
             pcm = (rng.standard_normal(ns) * 3000).astype(np.int16)
-            data = (
-                encode_wav_pcm16(pcm, rate=16000)
-                if kind == "wav"
-                else encode_fake_audio(pcm, rate=16000)
-            )
+            data = encode_wav_pcm16(pcm, rate=16000)
         rows.append(
             {
                 "clip_id": f"aud{i:06d}",

@@ -7,8 +7,7 @@ import pytest
 
 from query_cost_feature_engineering_spark.codecs import decode_image, decode_png
 from query_cost_feature_engineering_spark.functions.multimodal import (
-    _decode_fake_audio,
-    _decode_fake_video,
+    decode_video,
     resize_images,
     sample_video_frames,
     with_audio_features,
@@ -41,17 +40,13 @@ def test_resize_images_matches_golden(spark, images_pdf):
 
 
 def test_video_frame_sample_matches_golden(spark):
-    """Mixed corpus cycling REAL uncompressed-DIB AVI, the FVID luma
-    stub, REAL Motion-JPEG AVI (T.81 frames), REAL ISO-BMFF .mp4 with
-    a 'jpeg' track, and REAL animated GIF89a (LZW paletted frames) —
+    """Mixed corpus cycling REAL uncompressed-DIB AVI (RGB and grey),
+    REAL Motion-JPEG AVI (T.81 frames), REAL ISO-BMFF .mp4 with a
+    'jpeg' track, and REAL animated GIF89a (LZW paletted frames) —
     all through one decode dispatch; the golden re-decodes with the
     same dispatch and the PNG round-trips pixels exactly."""
-    from query_cost_feature_engineering_spark.functions.multimodal import (
-        decode_video,
-    )
-
     vids = generate_videos_pandas(25, seed=52)
-    assert {"avi", "fvid", "mjpg", "mp4", "gif"} == set(vids["fmt"])
+    assert {"avi", "mjpg", "mp4", "gif"} == set(vids["fmt"])
     out = (
         sample_video_frames(spark.createDataFrame(vids), every_k=EVERY_K)
         .toPandas()
@@ -72,13 +67,13 @@ def test_video_frame_sample_matches_golden(spark):
 
 
 def test_video_decode_rejects_real_formats():
-    with pytest.raises(NotImplementedError, match="PyAV|FVID"):
-        _decode_fake_video(b"\x00\x00\x00\x18ftypmp42 fake mp4 header")
+    with pytest.raises(NotImplementedError, match="PyAV"):
+        decode_video(b"\x1aE\xdf\xa3\x00\x00\x00\x00webm")
 
 
 def test_audio_features_match_golden(spark):
-    """The mixed corpus (REAL PCM16 / IMA-ADPCM / G.711 WAV, FLAC and
-    the FAUD stub cycling) runs through the same pandas UDF; the
+    """The mixed corpus (REAL PCM16 / IMA-ADPCM / G.711 WAV, FLAC,
+    AIFF and AU cycling) runs through the same pandas UDF; the
     golden re-decodes each payload with the matching codec."""
     from query_cost_feature_engineering_spark.functions.multimodal import (
         decode_audio,
@@ -86,7 +81,7 @@ def test_audio_features_match_golden(spark):
 
     clips = generate_audio_pandas(30, seed=53)
     assert {
-        "wav", "faud", "adpcm", "ulaw", "alaw", "flac", "aiff", "au"
+        "wav", "adpcm", "ulaw", "alaw", "flac", "aiff", "au"
     } == set(clips["fmt"])
     out = (
         with_audio_features(spark.createDataFrame(clips))
@@ -504,7 +499,7 @@ def test_video_frame_dedup_planted_static_run(spark):
 
 def test_video_frame_dedup_matches_fixture(spark):
     """Full parity vs the golden's pure-Python keep-chain recompute
-    over the original frame arrays — also pins the AVI/FVID
+    over the original frame arrays — also pins the AVI
     encode->decode roundtrip, since the fixture never decodes."""
     import duckdb
 

@@ -2,6 +2,8 @@
 (entity_id, ts, image_id), exact on integer-valued columns; the
 FIXTURES.md F3 contract."""
 
+import re
+
 import numpy as np
 
 from query_cost_feature_engineering_spark.functions.text import (
@@ -167,6 +169,11 @@ def test_window_layer_plan_shape(spark, images_sdf):
         "Window": 2,
         "Exchange": 1,
     }
+    # the session flag reads one lag of the epoch ts: Spark evaluates
+    # every lag written in the SQL text, repeats included
+    executed = plan._jdf.queryExecution().executedPlan().toString()
+    lagged = re.findall(r"\blag\((\w+)#", executed)
+    assert len([c for c in lagged if c != "px_mean"]) == 1, lagged
 
 
 def test_snapshot_fit_sums_evaluated_once(spark, images_sdf):

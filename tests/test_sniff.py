@@ -2,9 +2,57 @@
 
 from __future__ import annotations
 
+import numpy as np
+import pytest
+
+from query_cost_feature_engineering_spark.codecs import decode_image
 from query_cost_feature_engineering_spark.functions.multimodal import (
+    _sniff_head,
+    decode_audio,
+    decode_video,
     sniff_formats,
 )
+from query_cost_feature_engineering_spark.sources.images import (
+    generate_images_pandas,
+)
+from query_cost_feature_engineering_spark.sources.media import (
+    generate_audio_pandas,
+    generate_static_videos_pandas,
+    generate_videos_pandas,
+)
+
+# declared fmt -> container family, where the two differ
+_FAMILY = {"mjpg": "avi", "adpcm": "wav", "ulaw": "wav", "alaw": "wav"}
+
+# generator, and a check that a row decodes to what it declares
+_MEDIA = {
+    "images": (
+        lambda: generate_images_pandas(60, 10, 5),
+        lambda r: decode_image(r.bytes, r.fmt).shape == (r.h, r.w, 3),
+    ),
+    "videos": (
+        lambda: generate_videos_pandas(10),
+        lambda r: len(decode_video(r.bytes)) == r.n_frames_true,
+    ),
+    "static_videos": (
+        lambda: generate_static_videos_pandas(4),
+        lambda r: np.array_equal(decode_video(r.bytes), r.frames_true),
+    ),
+    "audio": (
+        lambda: generate_audio_pandas(16),
+        lambda r: len(decode_audio(r.bytes)[0]) == r.n_samples_true,
+    ),
+}
+
+
+@pytest.mark.parametrize("media", sorted(_MEDIA))
+def test_generated_media_is_a_real_format(media):
+    """Every row of the media generators is a real container: its magic
+    bytes sniff to its declared format's family, and it decodes."""
+    generate, decodes = _MEDIA[media]
+    for r in generate().itertuples():
+        assert _sniff_head(r.bytes[:12]) == _FAMILY.get(r.fmt, r.fmt), r.Index
+        assert decodes(r), r.Index
 
 
 def test_sniff_detects_mislabeled_rows(spark, images_pdf):

@@ -108,3 +108,25 @@ def test_package_zip_named_after_sources(spark, tmp_path):
         assert changed != orig
     finally:
         os.remove(changed)
+
+
+def test_get_spark_ships_no_zip_when_imported_from_one(spark, monkeypatch, tmp_path):
+    """Imported from a zip (``spark-submit --py-files``), the package is
+    already on the workers, and globbing the zip's inside finds no
+    sources: ``get_spark`` must not build and ship an empty zip. It calls
+    ``package_zip`` through the module attribute, so wrapping it works."""
+    from query_cost_feature_engineering_spark import session
+
+    calls = []
+    missing = str(tmp_path / "missing.zip")  # addPyFile fails, swallowed
+    monkeypatch.setattr(
+        session, "package_zip", lambda out=None: calls.append(out) or missing
+    )
+    kw = dict(app="qcfe-tests", master="local[4]", shuffle_partitions=4)
+    assert session.get_spark(**kw) is spark
+    assert calls == [None]
+    monkeypatch.setattr(
+        session, "_PKG_DIR", tmp_path / "pkg.zip" / session._PKG_DIR.name
+    )
+    session.get_spark(**kw)
+    assert calls == [None]

@@ -68,7 +68,7 @@ def run_once(cores: int, img_path: str, spine_path: str, n_buckets: int,
             value_cols=["image_id", "px_mean", "session_id"],
             tiebreak="image_id", num_buckets=max(n_buckets, cores),
         )
-        joined.count()
+        joined.write.format("noop").mode("overwrite").save()
         t2 = time.perf_counter()
         reps.append((t1 - t0, t2 - t1, t2 - t0))
     spark.stop()
@@ -92,7 +92,6 @@ def main() -> None:
 
     from query_cost_feature_engineering_spark.session import get_spark
     from query_cost_feature_engineering_spark.sources.images import (
-        generate_images_pandas,
         generate_spine_pandas,
     )
 
