@@ -6,7 +6,7 @@ A brand-new engine with the feature-vector semantics of QCFE
 - image/caption featurization via Arrow-batched pandas UDFs
   (ref: dataset/postgres_tpch_dataset/tpch_utils_knob.py:60-210, the A4 featurizers)
 - backward as-of joins via two strategies: a pure-DataFrame union+window plan
-  and a range-partitioned sorted-merge in ``applyInPandas`` (SURVEY.md §2.B joins)
+  and a hash-bucketed Arrow cogroup kernel (``applyInArrow``, SURVEY.md §2.B joins)
 - lag/lead/backfill/rolling windows and gap sessionization via Window specs
 - per-group linear "snapshot" fits via closed-form sufficient statistics
   (ref: snapshot/snapshot_linear.py:16-243)

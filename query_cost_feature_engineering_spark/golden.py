@@ -138,6 +138,25 @@ def _write_fixture(tag: str, out: pd.DataFrame) -> str:
     return path
 
 
+_META_CORPUS_CACHE: dict = {}
+
+
+def _meta_corpus(n: int = 400, n_entities: int = 30, seed: int = 42) -> pd.DataFrame:
+    """One shared generate_images_pandas(n, n_entities, seed) per argument
+    tuple for the image fixtures below: they all bake at oracles.py
+    import, so without this memo the identical corpus (pixel synthesis +
+    PNG/JPEG encode included) would be generated once per fixture.
+    Callers read the frame and never change it."""
+    key = (n, n_entities, seed)
+    if key not in _META_CORPUS_CACHE:
+        from query_cost_feature_engineering_spark.sources.images import (
+            generate_images_pandas,
+        )
+
+        _META_CORPUS_CACHE[key] = generate_images_pandas(n, n_entities, seed)
+    return _META_CORPUS_CACHE[key]
+
+
 def ensure_resize_meta_fixture(n: int = 120, size: int = 32) -> str:
     """Expected rows for resize_images_meta: the SAME nearest-neighbor
     index arithmetic + PNG re-encode as the Arrow UDF, in pure Python."""
@@ -145,11 +164,7 @@ def ensure_resize_meta_fixture(n: int = 120, size: int = 32) -> str:
         decode_image,
         encode_png,
     )
-    from query_cost_feature_engineering_spark.sources.images import (
-        generate_images_pandas,
-    )
-
-    imgs = generate_images_pandas(n, 30, 42)
+    imgs = _meta_corpus(n)
     nbytes = []
     for b, f in zip(imgs["bytes"], imgs["fmt"]):
         arr = decode_image(bytes(b), f)
@@ -178,11 +193,7 @@ def ensure_augment_meta_fixture(
         encode_png,
         phash64,
     )
-    from query_cost_feature_engineering_spark.sources.images import (
-        generate_images_pandas,
-    )
-
-    imgs = generate_images_pandas(n, 30, 42)
+    imgs = _meta_corpus(n)
     ws, hs, phs, nbytes = [], [], [], []
     for b, f in zip(imgs["bytes"], imgs["fmt"]):
         arr = decode_image(bytes(b), f)
@@ -485,11 +496,7 @@ def ensure_sniff_fixture(n: int = 200) -> str:
     (schema, batching, dispatch) — decode SEMANTICS for those codecs are
     pinned separately by tests/test_codecs.py round-trips against
     independently-constructed byte streams."""
-    from query_cost_feature_engineering_spark.sources.images import (
-        generate_images_pandas,
-    )
-
-    imgs = generate_images_pandas(n, 30, 42)
+    imgs = _meta_corpus(n)
     sniffed = [_sniff_oracle(bytes(b)[:12]) for b in imgs["bytes"]]
     out = pd.DataFrame(
         {
@@ -505,11 +512,7 @@ def ensure_sniff_fixture(n: int = 200) -> str:
 def _phash_pairs_py(n: int = 400, max_dist: int = 12):
     """Brute-force hamming pairs over the synthetic image corpus — the
     exact mirror of hamming_neardup_pairs' lossless banding."""
-    from query_cost_feature_engineering_spark.sources.images import (
-        generate_images_pandas,
-    )
-
-    imgs = generate_images_pandas(n, 30, 42)
+    imgs = _meta_corpus(n)
     ids = imgs["image_id"].tolist()
     hs = [int(h) & 0xFFFFFFFFFFFFFFFF for h in imgs["phash"]]
     order = np.argsort(ids)
@@ -565,11 +568,10 @@ def ensure_asof_features_fixture() -> str:
     tie rule (right side sorted by (ts, image_id), backward, exact
     matches allowed)."""
     from query_cost_feature_engineering_spark.sources.images import (
-        generate_images_pandas,
         generate_spine_pandas,
     )
 
-    pdf = generate_images_pandas(400, 30, 42)
+    pdf = _meta_corpus(400)
     feats = golden_features(pdf)[
         ["entity_id", "ts", "image_id", "px_mean", "session_id"]
     ]
@@ -704,11 +706,7 @@ def ensure_image_features_fixture() -> str:
     from query_cost_feature_engineering_spark.plans.pipeline import (
         FEATURE_ORDER,
     )
-    from query_cost_feature_engineering_spark.sources.images import (
-        generate_images_pandas,
-    )
-
-    g = golden_features(generate_images_pandas(400, 30, 42))
+    g = golden_features(_meta_corpus(400))
     digs = []
     for _, r in g.iterrows():
         vec = [
@@ -729,23 +727,6 @@ def ensure_image_features_fixture() -> str:
         }
     )
     return _write_fixture("image_features", out)
-
-
-_META_CORPUS_CACHE: dict = {}
-
-
-def _meta_corpus(n: int = 400) -> pd.DataFrame:
-    """One shared generate_images_pandas(n, 30, 42) for the input-only
-    metadata fixtures below — both oracles bake at oracles.py import,
-    so without this memo the identical corpus (pixel synthesis + PNG/
-    JPEG encode included) would be generated once per fixture."""
-    if n not in _META_CORPUS_CACHE:
-        from query_cost_feature_engineering_spark.sources.images import (
-            generate_images_pandas,
-        )
-
-        _META_CORPUS_CACHE[n] = generate_images_pandas(n, 30, 42)
-    return _META_CORPUS_CACHE[n]
 
 
 def ensure_aspect_meta_fixture(n: int = 400) -> str:
@@ -845,11 +826,7 @@ def ensure_shard_pack_fixture(
     from query_cost_feature_engineering_spark.queries import (
         WEBDATASET_SHARD_BYTES,
     )
-    from query_cost_feature_engineering_spark.sources.images import (
-        generate_images_pandas,
-    )
-
-    pdf = generate_images_pandas(n, n_entities, seed)
+    pdf = _meta_corpus(n, n_entities, seed)
     recs = sorted(
         (
             int(str(pdf["image_id"].iloc[i])[3:]),
@@ -948,11 +925,7 @@ def ensure_datacomp_filter_fixture(
         DATACOMP_MIN_CAPTION_TOKENS,
         DATACOMP_MIN_SIDE,
     )
-    from query_cost_feature_engineering_spark.sources.images import (
-        generate_images_pandas,
-    )
-
-    pdf = generate_images_pandas(n, n_entities, seed)
+    pdf = _meta_corpus(n, n_entities, seed)
     rows = []
     for i in range(len(pdf)):
         w, h = int(pdf["w"].iloc[i]), int(pdf["h"].iloc[i])
@@ -1009,11 +982,7 @@ def ensure_caption_align_fixture(
         CAPTION_ALIGN_BINS,
         CAPTION_ALIGN_TAU,
     )
-    from query_cost_feature_engineering_spark.sources.images import (
-        generate_images_pandas,
-    )
-
-    pdf = generate_images_pandas(n, n_entities, seed)
+    pdf = _meta_corpus(n, n_entities, seed)
     px = decode_stats_pandas(pdf["bytes"], pdf["fmt"])
     rows = []
     for i in range(len(pdf)):

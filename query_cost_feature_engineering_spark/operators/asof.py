@@ -15,15 +15,18 @@ Spark has no built-in as-of join (SURVEY.md §2.B), so two strategies:
 
 2. ``asof_join_pandas_merge`` — the 100-TB path from BASELINE.json
    ``north_rule``: cogroup both sides on a hash bucket of the entity key
-   and run a sorted ``pandas.merge_asof`` per bucket (Arrow batches, no
-   per-row Python). Entities flagged *hot* (row count above a threshold)
-   are additionally range-sliced on time into equal-width cuts of the hot
-   entities' ts span, with the **last right row of each slice carried
-   forward** (one ``max_by`` aggregate) into the later slices up to the
-   entity's next non-empty one, so no probe misses a match that lives in
-   an earlier slice. This is the explicit salting/skew handling the north
-   rule demands: a hot entity's probes parallelize across slices while
-   cold entities stay on the cheap single-shuffle path.
+   and run one Arrow cogroup kernel per bucket (``applyInArrow``): the
+   backward match is found on the narrow key and ts columns alone, and
+   each value column is a ``take`` by the matched row index, so a wide
+   feature vector never becomes a pandas object. Entities flagged *hot*
+   (row count above a threshold) are additionally range-sliced on time
+   into equal-width cuts of the hot entities' ts span, with the **last
+   right row of each slice carried forward** (one ``max_by`` aggregate)
+   into the later slices up to the entity's next non-empty one, so no
+   probe misses a match that lives in an earlier slice. This is the
+   explicit salting/skew handling the north rule demands: a hot entity's
+   probes parallelize across slices while cold entities stay on the
+   cheap single-shuffle path.
 
 Tie contract (matches the golden oracle and pandas.merge_asof): backward
 join with exact-match allowed; among right rows sharing (entity, ts) the
@@ -33,9 +36,12 @@ last by ``tiebreak`` wins.
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 _SLICES = 32  # time slices for hot entities
 # the automatic hot threshold never drops below this many right rows
@@ -138,7 +144,7 @@ def asof_join_pandas_merge(
     rsel = list(dict.fromkeys([by, on] + value_cols + ([tiebreak] if tiebreak else [])))
     # Alias every right column: breaks attribute lineage shared with `left`
     # (a self-cogroup over the same scan otherwise dedups the right side's
-    # key attribute and the pandas frame arrives without it) and guarantees
+    # key attribute and the Arrow table arrives without it) and guarantees
     # distinct names inside merge_asof.
     rpre = "__r_"
     right = right.select(*[F.col(c).alias(f"{rpre}{c}") for c in rsel])
@@ -233,22 +239,18 @@ def asof_join_pandas_merge(
             for c in value_cols
         ]
     )
+    arrow_schema = to_arrow_schema(out_schema)
     lcols = left.columns
     rvals = [f"{rpre}{c}" for c in value_cols]
 
-    def merge(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        lpdf = lpdf.drop(columns=["_bkt"]).sort_values(on, kind="mergesort")
-        if lpdf.empty:
-            return pd.DataFrame(columns=lcols + value_cols)
-        rpdf = rpdf.drop(columns=["_bkt"]).sort_values(sort_r, kind="mergesort")
-        if rpdf.empty:
-            out = lpdf.copy()
-            for c in value_cols:
-                out[c] = None
-            return out[lcols + value_cols]
-        merged = pd.merge_asof(
-            lpdf,
-            rpdf[[rby, ron] + rvals],
+    def merge(lt: pa.Table, rt: pa.Table) -> pa.Table:
+        # match on the narrow keys only; value columns are taken by index
+        # and never leave Arrow, so int64 stays int64 on a missed probe
+        lt = lt.sort_by(on)
+        rorder = pc.sort_indices(rt, [(c, "ascending") for c in sort_r])
+        m = pd.merge_asof(
+            lt.select([by, on]).to_pandas(),
+            rt.select([rby, ron]).take(rorder).append_column("_i", rorder).to_pandas(),
             left_on=on,
             right_on=ron,
             left_by=by,
@@ -256,18 +258,14 @@ def asof_join_pandas_merge(
             direction="backward",
             allow_exact_matches=allow_exact_matches,
         )
-        merged = merged[lcols + rvals]
-        merged.columns = lcols + value_cols
-        # unmatched probes: merge_asof fills float NaN even for object
-        # columns (arrays/strings) — Arrow needs real None there
-        for c in value_cols:
-            if merged[c].dtype == object:
-                merged.loc[merged[c].isna(), c] = None
-        return merged
+        idx = pa.array(m["_i"], type=pa.int64(), from_pandas=True)
+        return pa.Table.from_arrays(
+            [lt[c] for c in lcols] + [rt[c].take(idx) for c in rvals],
+            schema=arrow_schema,
+        )
 
     return (
         lb.groupBy("_bkt")
         .cogroup(rb.groupBy("_bkt"))
-        .applyInPandas(merge, schema=out_schema)
+        .applyInArrow(merge, schema=out_schema)
     )
-

@@ -5,6 +5,7 @@ import numpy as np
 import pandas as pd
 import pytest
 from conftest import _jobs
+from pyspark.sql import functions as F
 
 from query_cost_feature_engineering_spark.operators.asof import (
     asof_join_pandas_merge,
@@ -274,6 +275,8 @@ def test_hot_path_plan_and_job_guard(spark):
     assert heads.count("Generate") == 1  # the hot path's carry-forward is built
     assert heads.count("CartesianProduct") == heads.count("BroadcastNestedLoopJoin") == 0
     assert heads.count("Window") <= 1
+    assert heads.count("FlatMapCoGroupsInArrow") == 1  # the as-of kernel
+    assert heads.count("FlatMapCoGroupsInPandas") == 0
     _check(hot.toPandas(), _oracle(spine, right))
 
 
@@ -335,3 +338,63 @@ def test_equal_width_cuts_degenerate_spans(spark, case, exact):
         num_buckets=2, hot_threshold=1, slices=4,
     ).toPandas()
     _check(got, want)
+
+
+@pytest.mark.parametrize("hot", [True, False], ids=["hot", "cold"])
+def test_value_types_exact_beside_unmatched_probe(spark, hot):
+    """A bucket holding a matched and an unmatched probe returns every
+    value type exactly: a long above 2**53 keeps its last bit, and the
+    timestamp, ``array<double>`` and string columns come back unchanged
+    (the unmatched probe gets NULLs), equal to ``asof_join_union_window``
+    and to ``pandas.merge_asof`` over nullable columns."""
+    t0 = pd.Timestamp("2024-03-01")
+    big = 2**53 + 1
+    right = pd.DataFrame(
+        {
+            "entity_id": [1, 1],
+            "ts": t0 + pd.to_timedelta([10, 20], unit="s"),
+            "image_id": ["a", "b"],
+            "n": pd.array([big, big + 2], dtype="Int64"),
+            "vt": t0 + pd.to_timedelta([-7, 3], unit="D"),
+            "arr": [[1.5, -0.25], [2.0**60 + 2048.0]],
+        }
+    )
+    spine = pd.DataFrame(
+        {
+            "entity_id": [1, 1, 1],
+            "ts": t0 + pd.to_timedelta([0, 12, 25], unit="s"),
+            "probe_id": [0, 1, 2],
+        }
+    )
+    cols = ["n", "vt", "arr", "image_id"]
+    want = pd.merge_asof(spine, right[["entity_id", "ts"] + cols], on="ts", by="entity_id")
+    assert want["n"].isna().tolist() == [True, False, False]
+    want = want.astype(object).where(want.notna(), None)
+
+    def micros(t):
+        return None if t is None else (t - pd.Timestamp(0)) // pd.Timedelta(1, "us")
+
+    expect = sorted(
+        (p, micros(t), n, micros(vt), arr, i)
+        for p, t, n, vt, arr, i in want[["probe_id", "ts"] + cols].itertuples(
+            index=False, name=None
+        )
+    )
+    assert expect[1][2] == big
+
+    def rows(df):
+        us = F.unix_micros
+        df = df.select("probe_id", us("ts"), "n", us("vt"), "arr", "image_id")
+        return sorted(tuple(r) for r in df.collect())
+
+    left_sdf = spark.createDataFrame(spine)
+    right_sdf = spark.createDataFrame(right).withColumn("n", F.col("n").cast("long"))
+    kw = dict(num_buckets=1, hot_threshold=1, slices=2) if hot else dict(num_buckets=1)
+    got = asof_join_pandas_merge(
+        left_sdf, right_sdf, value_cols=cols, tiebreak="image_id", **kw
+    )
+    assert dict(got.dtypes)["n"] == "bigint"
+    assert rows(got) == expect
+    assert rows(asof_join_union_window(
+        left_sdf, right_sdf, value_cols=cols, tiebreak="image_id"
+    )) == expect

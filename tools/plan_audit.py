@@ -52,7 +52,7 @@ def audit_plan(plan: str) -> dict:
         "exchanges": plan.count("Exchange "),
         "arrow_udf": plan.count("ArrowEvalPython")
         + plan.count("MapInPandas")
-        + plan.count("FlatMapCoGroupsInPandas")
+        + len(re.findall(r"FlatMap(?:Co)?GroupsIn(?:Pandas|Arrow)", plan))
         + plan.count("MapInArrow"),
         "pushed": "PushedFilters: [" in plan
         and not re.search(r"PushedFilters: \[\],", plan),
