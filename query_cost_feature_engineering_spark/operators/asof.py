@@ -20,13 +20,18 @@ Spark has no built-in as-of join (SURVEY.md §2.B), so two strategies:
    each value column is a ``take`` by the matched row index, so a wide
    feature vector never becomes a pandas object. Entities flagged *hot*
    (row count above a threshold) are additionally range-sliced on time
-   into equal-width cuts of the hot entities' ts span, with the **last
-   right row of each slice carried forward** (one ``max_by`` aggregate)
-   into the later slices up to the entity's next non-empty one, so no
-   probe misses a match that lives in an earlier slice. This is the
-   explicit salting/skew handling the north rule demands: a hot entity's
-   probes parallelize across slices while cold entities stay on the
-   cheap single-shuffle path.
+   at **their own right-row quantiles**: the skew profile takes each hot
+   key's ``percentile_approx`` of the right ts at ``i / slices``, and a
+   row's slice is the number of those bounds at or before its ts.
+   ``percentile_approx`` returns values of its input, so every bound is
+   the ts of one of the key's own right rows: each slice after the first
+   starts with its own row, a probe's backward match always lies in the
+   probe's own slice, and the right input is read once, with no row
+   carried between slices. The cuts follow the data, so a bursty entity
+   spreads over its slices instead of piling into one equal-width cut.
+   This is the explicit salting/skew handling the north rule demands: a
+   hot entity's probes parallelize across slices while cold entities
+   stay on the cheap single-shuffle path.
 
 Tie contract (matches the golden oracle and pandas.merge_asof): backward
 join with exact-match allowed; among right rows sharing (entity, ts) the
@@ -34,6 +39,8 @@ last by ``tiebreak`` wins.
 """
 
 from __future__ import annotations
+
+import json
 
 import pandas as pd
 import pyarrow as pa
@@ -43,34 +50,46 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-_SLICES = 32  # time slices for hot entities
+_SLICES = 32  # most time slices per hot entity
 # the automatic hot threshold never drops below this many right rows
 _HOT_FLOOR = 10_000
 # beyond this many hot ids, membership tests use a broadcast join
 # instead of `isin` literals (plan size stays O(1) in hot-key count)
 _HOT_LITERAL_CAP = 1000
+# `percentile_approx` accuracy of the hot keys' slice bounds
+_QUANTILE_ACCURACY = 10_000
 
 
-def _mark_hot(df: DataFrame, key: str, hot_ids: list, key_type) -> DataFrame:
-    """``df`` plus a boolean ``_hot``: is ``key`` one of ``hot_ids``.
-    Literals up to ``_HOT_LITERAL_CAP``; above it a broadcast left join
-    against a hot-key frame, so the plan stays small for 10^4+ hot ids."""
-    if len(hot_ids) <= _HOT_LITERAL_CAP:
-        return df.withColumn("_hot", F.col(key).isin(hot_ids))
+def _ts_sql(df: DataFrame, col: str) -> str:
+    """SQL text of ``col`` as the skew profile encodes it, exactly:
+    ``unix_micros`` of a timestamp, the raw value otherwise (never a
+    double cast of a timestamp). ``percentile_approx`` ranks values as
+    doubles, so a long beyond 2**53 (µs after the year 2255) may come back
+    rounded to a value that is no row's ts."""
+    c = "`" + col.replace("`", "``") + "`"
+    return f"unix_micros({c})" if isinstance(df.schema[col].dataType, T.TimestampType) else c
+
+
+def _with_bounds(
+    df: DataFrame, key: str, hot: list, key_ddl: str, bound_ddl: str
+) -> DataFrame:
+    """``df`` plus ``_hot_b``: the sorted slice bounds of ``key`` if it is
+    one of the ``hot`` (key, bounds) pairs, else NULL. Up to
+    ``_HOT_LITERAL_CAP`` keys an ``isin`` test beside one JSON literal of
+    every key's bounds (constant-folded to a map, so the py4j calls do not
+    grow with the bounds); above it a broadcast left join against a
+    hot-key frame, so the plan stays small for 10^4+ hot ids."""
+    if len(hot) <= _HOT_LITERAL_CAP:
+        text = json.dumps([{"k": k, "b": b} for k, b in hot], default=str)
+        entries = F.from_json(F.lit(text), f"array<struct<k:{key_ddl},b:array<{bound_ddl}>>>")
+        bounds = F.element_at(F.map_from_entries(entries), F.col(key))
+        return df.withColumn("_hot_b", F.when(F.col(key).isin([k for k, _ in hot]), bounds))
     hot_df = df.sparkSession.createDataFrame(
-        [(k, True) for k in hot_ids],
-        T.StructType(
-            [
-                T.StructField("_hot_key", key_type),
-                T.StructField("_hot_flag", T.BooleanType()),
-            ]
-        ),
+        hot, f"_hot_key {key_ddl}, _hot_b array<{bound_ddl}>"
     )
-    return (
-        df.join(F.broadcast(hot_df), F.col(key) == F.col("_hot_key"), "left")
-        .withColumn("_hot", F.col("_hot_flag").isNotNull())
-        .drop("_hot_key", "_hot_flag")
-    )
+    return df.join(
+        F.broadcast(hot_df), F.col(key) == F.col("_hot_key"), "left"
+    ).drop("_hot_key")
 
 
 def asof_join_union_window(
@@ -157,80 +176,51 @@ def asof_join_pandas_merge(
     # column-prunes the upstream plan and expensive feature UDFs (image
     # decode) are NOT evaluated here — only the final merge pays. One
     # action returns the total row count and, for each key above the
-    # floor, its count and ts span; the driver applies the threshold rule
-    # and cuts the hot keys' joint span into equal-width time slices.
-    def _ts_double(df: DataFrame, col: str) -> F.Column:
-        t = df.schema[col].dataType.typeName()
-        c = F.col(col)
-        return c.cast("timestamp").cast("double") if t.startswith("timestamp") else c.cast("double")
-
+    # floor, its count and its ts quantiles at i / slices; the driver
+    # applies the threshold rule and keeps each hot key's distinct
+    # quantiles as its slice bounds.
     floor = _HOT_FLOOR if hot_threshold is None else hot_threshold
-    tsd = _ts_double(right, ron)
+    fracs = ", ".join(f"{i} / {slices}" for i in range(1, slices))
+    quantiles = F.expr(
+        f"percentile_approx({_ts_sql(right, ron)}, array({fracs}), {_QUANTILE_ACCURACY})"
+    )
+    above = F.when(F.col("_cnt") > floor, F.struct(rby, "_cnt", "_q"))
     prof = (
         right.groupBy(rby)
-        .agg(
-            F.count(F.lit(1)).alias("_cnt"), F.min(tsd).alias("_lo"), F.max(tsd).alias("_hi")
-        )
-        .agg(
-            F.sum("_cnt").alias("total"),
-            F.collect_list(
-                F.when(F.col("_cnt") > floor, F.struct(rby, "_cnt", "_lo", "_hi"))
-            ).alias("hot"),
-        )
+        .agg(F.count(F.lit(1)).alias("_cnt"), quantiles.alias("_q"))
+        .agg(F.sum("_cnt").alias("total"), F.collect_list(above).alias("hot"))
         .collect()[0]
     )
     if hot_threshold is None:
         total = prof["total"] or 0
         hot_threshold = max(_HOT_FLOOR, total // max(num_buckets, 1) * 2)
-    hot = [h for h in prof["hot"] if h["_cnt"] > hot_threshold]
-    hot_ids = sorted(h[rby] for h in hot)
-    key_type = right.schema[rby].dataType
-    if hot_ids:
-        lo = min(h["_lo"] for h in hot)
-        width = (max(h["_hi"] for h in hot) - lo) / slices
+    # a NULL key never passes a membership test, so it stays cold
+    hot = sorted(
+        (h[rby], sorted(set(h["_q"] or [])))
+        for h in prof["hot"]
+        if h["_cnt"] > hot_threshold and h[rby] is not None
+    )
+    rts_type = right.schema[ron].dataType
+    ddls = (
+        right.schema[rby].dataType.simpleString(),
+        "bigint" if isinstance(rts_type, T.TimestampType) else rts_type.simpleString(),
+    )
 
-    def with_bucket(df: DataFrame, key: str, tscol: str) -> DataFrame:
+    def with_bucket(df: DataFrame, key: str, tscol: str, op: str) -> DataFrame:
         base = F.pmod(F.xxhash64(F.col(key)), F.lit(num_buckets))
-        if not hot_ids:
+        if not hot:
             return df.withColumn("_bkt", base.cast("int"))
-        df = _mark_hot(df, key, hot_ids, key_type)
-        # monotone in ts and alike on both sides, so a probe's match is in
-        # its own slice or carried into it; ts outside [lo, hi] clamps, and
-        # one shared ts (width 0) makes one slice
-        slice_id = F.lit(0)
-        if width > 0:
-            cut = F.floor((_ts_double(df, tscol) - lo) / width)
-            slice_id = F.least(F.lit(slices - 1), F.greatest(F.lit(0), cut))
-        return df.withColumn(
-            "_bkt",
-            F.when(F.col("_hot"), F.lit(num_buckets) + slice_id)
-            .otherwise(base)
-            .cast("int"),
-        ).drop("_hot")
+        # a hot row's slice counts its key's bounds at (``op`` "<=") or
+        # before (``<``, strict probes) its ts: slice k >= 1 starts with
+        # the right row whose ts is bound k, the latest match of every
+        # probe in it
+        slice_id = F.expr(f"size(filter(_hot_b, b -> b {op} {_ts_sql(df, tscol)}))")
+        bkt = F.when(F.col("_hot_b").isNull(), base).otherwise(F.lit(num_buckets) + slice_id)
+        out = _with_bounds(df, key, hot, *ddls)
+        return out.withColumn("_bkt", bkt.cast("int")).drop("_hot_b")
 
-    lb = with_bucket(left, by, on)
-    rb = with_bucket(right, rby, ron)
-
-    # Carry-forward: the last right row of each hot (entity, slice) goes,
-    # with its true ts, into every later slice up to and including the
-    # entity's next non-empty one: each later slice gets one carried row,
-    # the latest before it. ``lead`` gets its own column (Spark rejects a
-    # window inside a generator); the last slice's closer is dropped
-    # (``sequence`` would count down).
-    if hot_ids:
-        last = num_buckets + slices - 1
-        rest = [c for c in rb.columns if c not in (rby, "_bkt")]
-        carries = (
-            rb.filter(F.col("_bkt") >= num_buckets)
-            .groupBy(rby, "_bkt")
-            .agg(F.max_by(F.struct(*rest), F.struct(*sort_r)).alias("_c"))
-            .withColumn(
-                "_nxt", F.lead("_bkt", 1, last).over(Window.partitionBy(rby).orderBy("_bkt"))
-            )
-            .filter(F.col("_bkt") < last)
-            .select(rby, F.explode(F.sequence(F.col("_bkt") + 1, "_nxt")).alias("_bkt"), "_c.*")
-        )
-        rb = rb.unionByName(carries)
+    lb = with_bucket(left, by, on, "<=" if allow_exact_matches else "<")
+    rb = with_bucket(right, rby, ron, "<=")
 
     out_schema = T.StructType(
         list(left.schema.fields)
@@ -259,6 +249,14 @@ def asof_join_pandas_merge(
             allow_exact_matches=allow_exact_matches,
         )
         idx = pa.array(m["_i"], type=pa.int64(), from_pandas=True)
+        hot_slice = lt["_bkt"][0].as_py() - num_buckets if lt.num_rows else 0
+        if idx.null_count and hot_slice > 0:
+            # a hot slice after the first starts with the right row at its
+            # bound: a miss means the right input changed after the profile
+            raise RuntimeError(
+                f"as-of: {idx.null_count} probe(s) of hot slice {hot_slice} found no right"
+                " row; the right input changed between the skew profile and the join"
+            )
         return pa.Table.from_arrays(
             [lt[c] for c in lcols] + [rt[c].take(idx) for c in rvals],
             schema=arrow_schema,

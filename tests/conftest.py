@@ -50,3 +50,47 @@ def _jobs(spark, group, fn):
         for s in tracker.getJobInfo(j).stageIds
     ]
     return out, len(ids), stages
+
+
+def _py4j_commands(spark, build) -> int:
+    """py4j commands the driver sends to the JVM while ``build()`` runs."""
+    import gc
+
+    from py4j.clientserver import ClientServerConnection
+
+    # py4j releases a Java object when its Python proxy dies: the proxy's
+    # finalizer queues a memory-delete command that a background thread
+    # sends later. Collect and send the garbage of earlier tests before
+    # counting, keep the cycle collector off during the build, and send
+    # the build's own deletes before the count ends, so every command of
+    # the build is counted and no one else's is.
+    queue = spark.sparkContext._gateway._gateway_client.finalizer_deque
+
+    def send_deletes():
+        while True:
+            try:
+                client, target_id = queue.pop()
+            except IndexError:
+                return
+            client.garbage_collect_object(target_id, False)
+
+    orig = ClientServerConnection.send_command
+    n = 0
+
+    def counting(self, command):
+        nonlocal n
+        n += 1
+        return orig(self, command)
+
+    gc.collect()
+    send_deletes()
+    gc.disable()
+    ClientServerConnection.send_command = counting
+    try:
+        build()
+        gc.collect()
+        send_deletes()
+    finally:
+        ClientServerConnection.send_command = orig
+        gc.enable()
+    return n

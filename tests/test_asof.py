@@ -1,13 +1,17 @@
 """As-of join: both strategies vs a pandas.merge_asof oracle, plus the
 FIXTURES.md F5 boundary and skew probes."""
 
+import os
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
-from conftest import _jobs
+from conftest import _jobs, _py4j_commands
 from pyspark.sql import functions as F
 
 from query_cost_feature_engineering_spark.operators.asof import (
+    _HOT_LITERAL_CAP,
     asof_join_pandas_merge,
     asof_join_union_window,
 )
@@ -71,8 +75,8 @@ def test_pandas_merge_matches_merge_asof(frames):
 
 def test_boundary_and_skew_probe(frames):
     """Force the hot path: tiny hot_threshold makes EVERY entity hot, so all
-    probes go through time-slicing + carry-forward; few slices force probes
-    to depend on carried rows across slice boundaries."""
+    probes go through time-slicing; with few slices most probes sit in a
+    slice that starts at one of their entity's quantile bounds."""
     spine_sdf, right_sdf, want = frames
     got = asof_join_pandas_merge(
         spine_sdf, right_sdf, value_cols=VALUE_COLS, tiebreak="image_id",
@@ -188,8 +192,7 @@ def test_auto_threshold_hot_path_boundary(spark):
     ``max(10_000, total // num_buckets * 2)`` rows) makes the entity with
     10,001 right rows hot and leaves the one with exactly 10,000 cold.
     Probes before the first row, and one between every pair of right rows
-    (so the first probe of each time slice, late slices included, needs
-    the row carried from the slice before), still equal
+    (so every slice boundary has a probe on each side), still equal
     ``pandas.merge_asof``."""
     t0 = pd.Timestamp("2021-01-01")
     sizes = {"ent_hot": (10_001, 2), "ent_cold": (10_000, 3)}  # rows, step s
@@ -237,11 +240,10 @@ def test_auto_threshold_hot_path_boundary(spark):
     assert "IN (ent_hot)" in plan and "ent_cold" not in plan
 
 
-def test_hot_path_plan_and_job_guard(spark):
-    """Building the hot path runs no more Spark jobs than the cold-only
-    build (the skew profile is its one action), and its plan has no
-    cartesian join and at most one ``Window`` (the carry-forward's
-    ``lead``)."""
+@pytest.fixture(scope="module")
+def guard_frames(spark):
+    """One hot entity (12,000 right rows) beside 20 cold ones, and five
+    probes: (spine, right, left_sdf, right_sdf)."""
     t0 = pd.Timestamp("2023-01-01")
     n_hot, n_cold, ents = 12_000, 40, range(1, 21)
     secs = np.concatenate([np.arange(n_hot), np.tile(np.arange(n_cold) * 300, len(ents))])
@@ -260,24 +262,54 @@ def test_hot_path_plan_and_job_guard(spark):
         }
     )
     spine["probe_id"] = np.arange(len(spine))
-    left_sdf, right_sdf = spark.createDataFrame(spine), spark.createDataFrame(right)
+    return spine, right, spark.createDataFrame(spine), spark.createDataFrame(right)
+
+
+def test_hot_path_plan_and_job_guard(spark, guard_frames):
+    """Building the hot path runs no more Spark jobs than the cold-only
+    build (the skew profile is its one action), and its plan has no
+    cartesian join and, since every slice holds its own match, no carry
+    between slices: as many shuffles as the cold plan and no ``Window``,
+    ``Generate`` or ``Union``."""
+    spine, right, left_sdf, right_sdf = guard_frames
 
     def build(**kw):
         return asof_join_pandas_merge(
             left_sdf, right_sdf, value_cols=VALUE_COLS, tiebreak="image_id", **kw
         )
 
+    def plan_heads(df):
+        lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+        return [ln.lstrip(" :+-").split(" ", 1)[0] for ln in lines]
+
     hot, n_hot_jobs, _ = _jobs(spark, "asof-hot", build)
-    _, n_cold_jobs, _ = _jobs(spark, "asof-cold", lambda: build(hot_threshold=10**9))
+    cold, n_cold_jobs, _ = _jobs(spark, "asof-cold", lambda: build(hot_threshold=10**9))
     assert n_hot_jobs <= n_cold_jobs, (n_hot_jobs, n_cold_jobs)
-    lines = hot._jdf.queryExecution().executedPlan().toString().splitlines()
-    heads = [ln.lstrip(" :+-").split(" ", 1)[0] for ln in lines]
-    assert heads.count("Generate") == 1  # the hot path's carry-forward is built
+    heads = plan_heads(hot)
+    assert heads.count("Exchange") == plan_heads(cold).count("Exchange")
+    assert [heads.count(n) for n in ("Window", "Generate", "Union")] == [0, 0, 0]
+    assert "IN (cast(0 as bigint))" in hot._jdf.queryExecution().analyzed().toString()
     assert heads.count("CartesianProduct") == heads.count("BroadcastNestedLoopJoin") == 0
     assert heads.count("Window") <= 1
     assert heads.count("FlatMapCoGroupsInArrow") == 1  # the as-of kernel
     assert heads.count("FlatMapCoGroupsInPandas") == 0
     _check(hot.toPandas(), _oracle(spine, right))
+
+
+def test_hot_path_py4j_budget(spark, guard_frames):
+    """The slice bounds travel as one literal (or one broadcast column),
+    so the hot build sends as many py4j commands at 64 slices as at 8,
+    and no more than the carry-forward build did (1,258; cold 564)."""
+    _, _, left_sdf, right_sdf = guard_frames
+
+    def n(slices):
+        return _py4j_commands(spark, lambda: asof_join_pandas_merge(
+            left_sdf, right_sdf, value_cols=VALUE_COLS, tiebreak="image_id", slices=slices
+        ))
+
+    n(8)  # the first build of a session also resolves JVM classes and functions
+    n8, n64 = n(8), n(64)
+    assert n8 == n64 <= 1258, (n8, n64)
 
 
 _T0 = pd.Timestamp("2022-01-01")
@@ -296,10 +328,10 @@ _SPANS = {
 @pytest.mark.parametrize("exact", [True, False], ids=["exact", "strict"])
 @pytest.mark.parametrize("case", sorted(_SPANS))
 def test_equal_width_cuts_degenerate_spans(spark, case, exact):
-    """Equal-width time cuts over the hot span: one shared ts (zero width),
-    two hot entities with disjoint spans (empty slices in between), and
-    probes before the first and after the last right row (clamped into the
-    end slices) all equal ``pandas.merge_asof``."""
+    """Quantile cuts over degenerate spans: one shared ts (a single
+    distinct bound), two hot entities with disjoint spans (each cut at its
+    own bounds), and probes before the first and after the last right row
+    (the first and last slice) all equal ``pandas.merge_asof``."""
     ents = _SPANS[case] + [(9, [50], [0, 50, 60])]
     right = pd.concat(
         [
@@ -338,6 +370,119 @@ def test_equal_width_cuts_degenerate_spans(spark, case, exact):
         num_buckets=2, hot_threshold=1, slices=4,
     ).toPandas()
     _check(got, want)
+
+
+def test_null_key_above_threshold_stays_cold(spark):
+    """A NULL key with more right rows than the threshold stays cold (a
+    NULL passes no membership test) beside a hot key, and the hot key's
+    probes still equal ``pandas.merge_asof``."""
+    right = pd.DataFrame(
+        {
+            "entity_id": [None] * 5 + ["a"] * 10,
+            "ts": _T0 + pd.to_timedelta([*range(0, 50, 10), *range(0, 100, 10)], unit="s"),
+            "image_id": [f"r{i:02d}" for i in range(15)],
+            "px": np.arange(15, dtype=float),
+        }
+    )
+    spine = pd.DataFrame({"entity_id": "a", "ts": _T0 + pd.to_timedelta([-5, 45, 95], unit="s")})
+    spine["probe_id"] = np.arange(len(spine))
+    got = asof_join_pandas_merge(
+        spark.createDataFrame(spine), spark.createDataFrame(right), value_cols=VALUE_COLS,
+        tiebreak="image_id", num_buckets=2, hot_threshold=1, slices=4,
+    ).toPandas()
+    _check(got, _oracle(spine, right))
+
+
+_BURST_US = 10**6  # the bursty entity's first 1% of a 100 s span
+
+
+def _bursty_frames(n_small: int, long_on: bool):
+    """Right rows of one bursty entity (0: 950 distinct ts in the first
+    1% of its span, 50 over the rest, every ts twice) and ``n_small``
+    two-row entities, as (right, spine); probes sit at every right ts and
+    1 µs either side, in µs (``long_on``) or as timestamps."""
+    burst = np.sort(np.random.default_rng(7).choice(_BURST_US, 950, replace=False))
+    ents = [(0, np.concatenate([burst, np.linspace(2 * _BURST_US, 100 * _BURST_US, 50)]))]
+    ents += [(e, np.array([10 * e, 10 * e + 7])) for e in range(1, n_small + 1)]
+    us = [(e, int(t)) for e, ts in ents for t in ts]
+    right = pd.DataFrame(
+        [(e, t, f"{e}-{t}-{d}", float(t % 9973) + d) for e, t in us for d in (0, 1)],
+        columns=["entity_id", "ts", "image_id", "px"],
+    )
+    spine = pd.DataFrame(
+        [(e, t + d) for e, t in us for d in (-1, 0, 1)], columns=["entity_id", "ts"]
+    )
+    spine["probe_id"] = np.arange(len(spine))
+    if not long_on:
+        for df in (right, spine):
+            df["ts"] = _T0 + pd.to_timedelta(df["ts"], unit="us")
+    return right, spine
+
+
+@pytest.mark.parametrize("exact", [True, False], ids=["exact", "strict"])
+@pytest.mark.parametrize("long_on", [False, True], ids=["timestamp", "long"])
+@pytest.mark.parametrize("n_small", [20, _HOT_LITERAL_CAP + 1], ids=["literal", "broadcast"])
+def test_quantile_cuts_match_merge_asof(spark, n_small, long_on, exact):
+    """Quantile slice bounds on a bursty hot entity (95% of its rows in
+    1% of its span, where equal-width cuts would put nearly every row in
+    one slice) with every ts duplicated, so each bound is a duplicated
+    ts: probes at every right ts and 1 µs either side equal
+    ``pandas.merge_asof`` in exact and strict mode, for a timestamp and a
+    long ``on``, through the ``isin`` literal and the broadcast hot-key
+    frame. No slice after the first misses its match (the kernel would
+    raise)."""
+    right, spine = _bursty_frames(n_small, long_on)
+    want = (
+        pd.merge_asof(
+            spine.sort_values("ts", kind="mergesort"),
+            right.sort_values(["ts", "image_id"], kind="mergesort"),
+            on="ts", by="entity_id", allow_exact_matches=exact,
+        )
+        .sort_values("probe_id")
+        .reset_index(drop=True)
+    )
+    got = asof_join_pandas_merge(
+        spark.createDataFrame(spine), spark.createDataFrame(right),
+        value_cols=VALUE_COLS, tiebreak="image_id", allow_exact_matches=exact,
+        num_buckets=4, hot_threshold=1,
+    )
+    _check(got.toPandas(), want)
+    assert want["image_id"].notna().sum() > len(want) * 0.6
+    if n_small < _HOT_LITERAL_CAP:
+        # the bursty entity's bounds follow its rows into the burst
+        plan = got._jdf.queryExecution().analyzed().toString()
+        bounds = [int(b) for b in re.search(r'\{"k": 0, "b": \[([^\]]*)\]', plan)[1].split(",")]
+        assert len(bounds) >= 25
+        assert sum(b - bounds[0] < _BURST_US for b in bounds) >= 0.9 * len(bounds)
+
+
+def test_right_input_changed_after_profile_raises(spark, tmp_path):
+    """A probe in a hot slice after the first always finds the row at its
+    slice bound, unless the right input changed between the skew profile
+    and the join: then the kernel raises instead of returning NULL."""
+    flag = str(tmp_path / "drop_rows")
+    right = pd.DataFrame(
+        {
+            "entity_id": 1,
+            "ts": _T0 + pd.to_timedelta(np.arange(0, 100, 10), unit="s"),
+            "image_id": [f"r{i}" for i in range(10)],
+            "px": np.arange(10, dtype=float),
+        }
+    )
+    spine = pd.DataFrame(
+        {"entity_id": 1, "ts": _T0 + pd.to_timedelta([45, 95], unit="s"), "probe_id": [0, 1]}
+    )
+    # keeps every row until the flag file exists
+    keep = F.udf(lambda _: not os.path.exists(flag), "boolean").asNondeterministic()
+    got = asof_join_pandas_merge(
+        spark.createDataFrame(spine),
+        spark.createDataFrame(right).filter(keep("ts")),
+        value_cols=VALUE_COLS, tiebreak="image_id",
+        num_buckets=2, hot_threshold=1, slices=4,
+    )
+    open(flag, "w").close()
+    with pytest.raises(Exception, match="changed between the skew profile and the join"):
+        got.collect()
 
 
 @pytest.mark.parametrize("hot", [True, False], ids=["hot", "cold"])
