@@ -8,9 +8,10 @@ plan-log parsers, the MSCN serializer) synthesize their own
 deterministic input tables (the BASELINE.json input_hint shape) and are
 oracled via both-sides-synthesize fixtures: an independent
 single-process recompute written as parquet that DuckDB reads back
-(golden.py). Only two registry entries have no oracle_sql — trained
-k-means IVF and the greedy ablation loop (not SQL-expressible; both
-digest-stable and pinned by independent recompute tests).
+(golden.py). Only one registry entry has no oracle_sql: the greedy
+ablation loop (not SQL-expressible; pinned by an independent recompute
+test). Trained k-means IVF has an invariant oracle (rank/recall against
+the in-job exact top-k).
 """
 
 from __future__ import annotations

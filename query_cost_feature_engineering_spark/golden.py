@@ -76,15 +76,7 @@ def ensure_stream_features_fixture(
     stateless featurize stage (decode stats share the exact NumPy core
     the Arrow UDF runs, so doubles are bit-identical); the driver's hash
     compare then checks the whole file-stream → micro-batch → sink path
-    end to end. Same digest-keyed atomic-write pattern as the plan-node
-    fixture (sources/logs.ensure_plan_nodes_fixture)."""
-    import hashlib
-    import os
-    import tempfile
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
+    end to end. Written by fixture_file, like every fixture."""
     from query_cost_feature_engineering_spark.sources.images import (
         generate_images_pandas,
     )
@@ -104,38 +96,43 @@ def ensure_stream_features_fixture(
             "nbytes": imgs["bytes"].map(len).astype("float64"),
         }
     )
-    key = hashlib.md5(out.to_csv(index=False).encode()).hexdigest()[:10]
-    d = os.path.join(tempfile.gettempdir(), "qcfe_fixtures")
-    os.makedirs(d, exist_ok=True)
-    path = os.path.join(d, f"stream_feats_{key}.parquet")
-    if not os.path.exists(path):
-        tmp = f"{path}.tmp{os.getpid()}"
-        pq.write_table(pa.Table.from_pandas(out, preserve_index=False), tmp)
-        os.replace(tmp, path)
-    return path
+    return _write_fixture("stream_feats", out)
 
 
-def _write_fixture(tag: str, out: pd.DataFrame) -> str:
-    """Digest-keyed atomic parquet write under /tmp/qcfe_fixtures — the
-    shared writer for every both-sides-synthesize oracle fixture. The
-    content digest in the filename means a generator/semantics change
-    can never pair a stale fixture with fresh Spark output."""
+def fixture_file(tag: str, digest_text: str, write) -> str:
+    """Digest-keyed atomic write under /tmp/qcfe_fixtures, the one writer
+    of every both-sides-synthesize oracle fixture: ``write(tmp)`` fills a
+    write-aside file that is renamed to ``<tag>_<md5(digest_text)[:10]>
+    .parquet``. The content digest in the filename means a
+    generator/semantics change can never pair a stale fixture with fresh
+    Spark output."""
     import hashlib
     import os
     import tempfile
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    key = hashlib.md5(out.to_csv(index=False).encode()).hexdigest()[:10]
+    key = hashlib.md5(digest_text.encode()).hexdigest()[:10]
     d = os.path.join(tempfile.gettempdir(), "qcfe_fixtures")
     os.makedirs(d, exist_ok=True)
     path = os.path.join(d, f"{tag}_{key}.parquet")
     if not os.path.exists(path):
         tmp = f"{path}.tmp{os.getpid()}"
-        pq.write_table(pa.Table.from_pandas(out, preserve_index=False), tmp)
+        write(tmp)
         os.replace(tmp, path)
     return path
+
+
+def _write_fixture(tag: str, out: pd.DataFrame) -> str:
+    """A frame fixture: keyed on its CSV text, written by pyarrow."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    return fixture_file(
+        tag,
+        out.to_csv(index=False),
+        lambda tmp: pq.write_table(
+            pa.Table.from_pandas(out, preserve_index=False), tmp
+        ),
+    )
 
 
 _META_CORPUS_CACHE: dict = {}

@@ -238,9 +238,17 @@ def asof_join_pandas_merge(
         # and never leave Arrow, so int64 stays int64 on a missed probe
         lt = lt.sort_by(on)
         rorder = pc.sort_indices(rt, [(c, "ascending") for c in sort_r])
+        lk, rk = lt[by], rt[rby]
+        if lk.null_count or rk.null_count:
+            # to_pandas turns an int64 key with a NULL into float64, which
+            # merge_asof refuses beside int64: match on exact codes into the
+            # bucket's distinct keys instead, NULL matching NULL
+            keys = pc.unique(pa.chunked_array(lk.chunks + rk.chunks, type=lk.type))
+            lk = pc.index_in(lk, value_set=keys, skip_nulls=False)
+            rk = pc.index_in(rk, value_set=keys, skip_nulls=False)
         m = pd.merge_asof(
-            lt.select([by, on]).to_pandas(),
-            rt.select([rby, ron]).take(rorder).append_column("_i", rorder).to_pandas(),
+            pa.table({by: lk, on: lt[on]}).to_pandas(),
+            pa.table({rby: rk, ron: rt[ron]}).take(rorder).append_column("_i", rorder).to_pandas(),
             left_on=on,
             right_on=ron,
             left_by=by,

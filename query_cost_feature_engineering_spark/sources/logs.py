@@ -783,23 +783,15 @@ def ensure_plan_nodes_fixture(
     reads. The filename embeds a digest of the generated rows, so a
     generator change can never pair a stale fixture with fresh Spark
     output; generation is pure Python + pyarrow (callable from the oracle
-    module, no Spark needed) and atomic (write-aside + rename)."""
-    import hashlib
-    import os
-    import tempfile
+    module, no Spark needed) and atomic (golden.fixture_file)."""
+    from query_cost_feature_engineering_spark.golden import fixture_file
 
     rows = flatten_plan_nodes(generate_plans(n_plans, seed, max_depth, vocab))
-    key = hashlib.md5(
-        json.dumps(rows, sort_keys=True).encode()
-    ).hexdigest()[:10]
-    d = os.path.join(tempfile.gettempdir(), "qcfe_fixtures")
-    os.makedirs(d, exist_ok=True)
-    path = os.path.join(d, f"plan_nodes_{key}.parquet")
-    if not os.path.exists(path):
-        tmp = f"{path}.tmp{os.getpid()}"
-        write_plan_nodes_parquet(tmp, rows)
-        os.replace(tmp, path)
-    return path
+    return fixture_file(
+        "plan_nodes",
+        json.dumps(rows, sort_keys=True),
+        lambda tmp: write_plan_nodes_parquet(tmp, rows),
+    )
 
 
 def write_plan_nodes_parquet(path: str, rows: list[dict]) -> None:

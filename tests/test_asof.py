@@ -393,6 +393,49 @@ def test_null_key_above_threshold_stays_cold(spark):
     _check(got, _oracle(spine, right))
 
 
+
+@pytest.mark.parametrize("left_null", [False, True])
+@pytest.mark.parametrize("hot", [False, True])
+def test_null_long_key_matches_union_window(spark, left_null, hot):
+    """A NULL long key, on the right only or on both sides, joins like a
+    NULL string key: it matches NULL-keyed right rows (as in
+    ``asof_join_union_window``) instead of raising ``MergeError`` (a
+    NULL turns Arrow int64 into pandas float64), hot and cold; 2**53 and
+    2**53 + 1, one float apart from none, stay apart."""
+    big = 2**53
+    right = pd.DataFrame(
+        {
+            "entity_id": pd.array([None] * 3 + [big] * 6 + [big + 1] * 3, dtype="Int64"),
+            "ts": _T0 + pd.to_timedelta([0, 20, 40, *range(0, 60, 10), 0, 10, 20], unit="s"),
+            "image_id": [f"r{i:02d}" for i in range(12)],
+            "px": np.arange(12, dtype=float),
+        }
+    )
+    ents = [big, big, big + 1, big + 1] + ([None, None] if left_null else [])
+    spine = pd.DataFrame(
+        {
+            "entity_id": pd.array(ents, dtype="Int64"),
+            "ts": _T0 + pd.to_timedelta([-5, 35, 15, 25, 5, 45][: len(ents)], unit="s"),
+        }
+    )
+    spine["probe_id"] = np.arange(len(spine))
+    sdf = lambda df: spark.createDataFrame(df, "entity_id long, ts timestamp" + (
+        ", image_id string, px double" if "px" in df else ", probe_id long"))
+    kw = dict(hot_threshold=1, slices=4) if hot else {}
+    got = asof_join_pandas_merge(
+        sdf(spine), sdf(right), value_cols=VALUE_COLS, tiebreak="image_id",
+        num_buckets=2, **kw,
+    ).toPandas()
+    want = asof_join_union_window(
+        sdf(spine), sdf(right), value_cols=VALUE_COLS, tiebreak="image_id"
+    ).toPandas()
+    cols = ["probe_id", "entity_id", "image_id", "px"]
+    a = got[cols].sort_values("probe_id").reset_index(drop=True)
+    b = want[cols].sort_values("probe_id").reset_index(drop=True)
+    pd.testing.assert_frame_equal(a, b, check_dtype=False)
+    if left_null:
+        assert a["image_id"].iloc[4:].tolist() == ["r00", "r02"]
+
 _BURST_US = 10**6  # the bursty entity's first 1% of a 100 s span
 
 

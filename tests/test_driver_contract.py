@@ -5,19 +5,16 @@ import sys
 from pathlib import Path
 
 import duckdb
-import numpy as np
-import pandas as pd
 import pytest
 
-sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+_ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(_ROOT))
+sys.path.insert(0, str(_ROOT / "tools"))
 
 import __spark_entry__ as E  # noqa: E402
+from check_oracles import TABLES, compare  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 
 @pytest.fixture(scope="module")
@@ -45,21 +42,7 @@ def test_query_matches_oracle(spark, duck, name):
         assert len(sdf) >= 0  # rows-only contract
         return
     ddf = duck.execute(oracles[name]).fetchdf()
-    assert len(sdf) == len(ddf), f"{name}: rows {len(sdf)} vs {len(ddf)}"
-    cols = sorted(sdf.columns)
-    assert cols == sorted(ddf.columns), name
-    a = sdf[cols].sort_values(cols, kind="mergesort", na_position="last").reset_index(drop=True)
-    b = ddf[cols].sort_values(cols, kind="mergesort", na_position="last").reset_index(drop=True)
-    for c in cols:
-        if pd.api.types.is_float_dtype(a[c]) or pd.api.types.is_float_dtype(b[c]):
-            assert np.allclose(
-                a[c].astype(float), b[c].astype(float),
-                rtol=1e-9, atol=1e-9, equal_nan=True,
-            ), f"{name}.{c}"
-        else:
-            assert (
-                a[c].astype(str).fillna("∅") == b[c].astype(str).fillna("∅")
-            ).all(), f"{name}.{c}"
+    assert compare(name, sdf, ddf) == []
 
 
 def test_driver_sample_window_fully_oracled():
